@@ -58,19 +58,17 @@ def main() -> int:
             print(r["message"])
         stats["reports"] = out["reports"].count()
     else:
-        # Two-phase materialization (r3 serial-floor cut, BENCH.md):
-        # phase 1 computes `issues`, which fills the persisted
-        # intermediates (elements_all, final_issues) every other output
-        # depends on. Phase 2 then runs `reports` and `overlap` as
-        # CONCURRENT jobs from driver threads — they read completed
-        # persists plus disjoint fresh work (report composition vs the
-        # media re-parse + tile join), so their stages interleave and
-        # each fills the other's barrier tails instead of idling cores
-        # between sequential jobs. Phase 2 is not submitted alongside
-        # phase 1 because tasks of a second job that need a persisted
-        # partition still being computed BLOCK in the block manager
-        # while occupying a task slot — concurrency only after the
-        # shared persists exist.
+        # Two-phase materialization (r3 serial-floor cut, BENCH.md).
+        # run_pipeline has already filled the persisted reuse points
+        # (pipeline._persist_cut: under AQE, cutting each one runs its
+        # upstream), so every sink starts from completed blocks. Phase 1
+        # computes `issues` from the final-issues blocks. Phase 2 then
+        # runs `reports` and `overlap` as CONCURRENT jobs from driver
+        # threads — they read those blocks and the parsed elements plus
+        # disjoint fresh work (report composition vs the media re-parse
+        # + tile join), so their stages interleave and each fills the
+        # other's barrier tails instead of idling cores between
+        # sequential jobs.
         from concurrent.futures import ThreadPoolExecutor
 
         def materialize(name: str) -> int:

@@ -14,8 +14,14 @@ Shuffle topology (the part the reference outsources to Overpass):
   * J1-J4: cell-keyed equi-joins (salted where skewed)
   * grouping: one hash-partition by (category, changeset_id)
   * dims: broadcast
-Stage boundaries can materialize through StageRunner for kill-restart
-resume with per-partition lineage.
+Reuse points (the parsed elements, the pre-spatial issues, the spatial
+output when a checkpoint reads it twice, the final issues) are persisted
+DISK_ONLY and cut from the logical plan (``_persist_cut``): downstream
+operators and every sink plan from one leaf over the persisted RDD, so
+the upstream plan is analysed once and its exchanges run once. The RDD
+keeps its lineage, so lost blocks recompute. Stage boundaries can
+materialize through StageRunner for kill-restart resume with
+per-partition lineage.
 """
 
 from __future__ import annotations
@@ -41,10 +47,31 @@ from osm_addr_bot_spark.operators.tiles import assign_tiles, raster_vector_overl
 from osm_addr_bot_spark.state.checkpoint import Checkpoint, StageRunner
 
 
-# Serialized off-heap-ish caching: deserialized MEMORY_AND_DISK rows of
+# Storage of the reuse points: deserialized MEMORY_AND_DISK rows of
 # map-typed tags create heavy GC pressure at millions of rows; DISK_ONLY
 # against a fast local dir (tmpfs/NVMe) is GC-free and measured faster.
+# Blocks live in the CacheManager (spark.catalog.clearCache() releases
+# them) and recompute from lineage when lost.
 PERSIST_LEVEL = StorageLevel.DISK_ONLY
+
+
+def _persist_cut(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at PERSIST_LEVEL and return the same rows as a
+    frame whose logical plan is a single leaf over the persisted frame's
+    executed RDD — the LogicalRDD that Dataset.checkpoint builds, carrying
+    the origin's statistics. Every later operator and sink then analyses
+    and plans from that leaf instead of the whole upstream plan, and the
+    upstream exchanges run once, shared through the RDD.
+
+    Unlike (local)checkpoint, nothing is copied out of the CacheManager:
+    the RDD reads the persisted blocks and keeps its lineage, so a lost
+    or released block recomputes. Under AQE, building the RDD runs the
+    upstream query stages, so the reuse point materializes here."""
+    df = df.persist(PERSIST_LEVEL)
+    jdf, jvm = df._jdf, df.sparkSession._jvm  # noqa: SLF001 — no public API builds this leaf
+    logical_rdd = getattr(getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$"), "MODULE$")
+    leaf = logical_rdd.fromDataset(jdf.queryExecution().toRdd(), jdf, False)
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jdf.sparkSession(), leaf), df.sparkSession)
 
 
 def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
@@ -54,8 +81,8 @@ def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
     (~0.9 s/run measured r6); the DDLs are guarded against datagen
     drift by tests/test_datagen_guards.py. Parquet is read by column
     NAME, so a world with reordered or extra columns still reads
-    correctly; a world with incompatible types would fail loudly at
-    scan time, same as any schema mismatch."""
+    correctly. A column missing from the files reads as NULL; only a
+    column of an incompatible type fails, at scan time."""
     from osm_addr_bot_spark.schemas import TABLE_DDL
 
     return {
@@ -68,15 +95,20 @@ def _estimated_scan_partitions(spark: SparkSession, table_path: str) -> int | No
     """Scan-task estimate for a LOCAL parquet dir from file sizes and
     spark.sql.files.maxPartitionBytes (Spark's split rule, ignoring the
     4 MB open-cost packing — fine for a bigger/smaller-than-parallelism
-    decision). None when the path isn't a local directory."""
+    decision). None when the path isn't a local directory or the
+    setting doesn't parse; the caller then asks the scan itself."""
     import math
     import os
+    import re
 
     if not os.path.isdir(table_path):
         return None
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")).lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    mpb = int(raw[:-1]) * units[raw[-1]] if raw[-1] in units else int(raw)
+    # Spark's byte strings: 128, 128b, 128m, 128mb, 1GB, ...
+    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", raw.strip(), re.IGNORECASE)
+    if m is None:
+        return None
+    mpb = int(m[1]) << (10 * " kmgtp".index(m[2].lower() or " "))
     sizes = [
         e.stat().st_size
         for e in os.scandir(table_path)
@@ -125,8 +157,11 @@ def run_pipeline(
     zoom: int | None = None,
     persist: bool = True,
 ) -> dict[str, DataFrame]:
-    """Run everything; returns the output DataFrames (lazy unless
-    stage_checkpoints materializes them)."""
+    """Run everything; returns the output DataFrames. Sinks stay lazy,
+    but the call itself runs jobs: under AQE each persisted reuse point
+    (``_persist_cut``) runs its upstream here, and stage_checkpoints
+    materializes the stage outputs. ``persist=False`` keeps the plan
+    whole and runs nothing up front."""
     t = load_tables(spark, data_dir)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
 
@@ -185,7 +220,7 @@ def run_pipeline(
     # persisted scan serves both the issue path and the J1 candidate pool
     elements_all = parse_elements(documents)
     if persist:
-        elements_all = elements_all.persist(PERSIST_LEVEL)
+        elements_all = _persist_cut(elements_all)
     elements = elements_all
     if start_ts is not None:
         elements = elements.filter(F.col("timestamp") >= F.lit(start_ts))
@@ -196,7 +231,7 @@ def run_pipeline(
     issues1 = filter_should_not_discuss(issues0, t["changesets"], ignore_already_discussed)
     issues2 = filter_priority(issues1, consider_post_fn=True)
     if persist and not stage_checkpoints:
-        issues2 = issues2.persist(PERSIST_LEVEL)  # feeds four spatial stages
+        issues2 = _persist_cut(issues2)  # feeds four spatial stages
     issues3 = stages.run(
         "post_stages",
         lambda: apply_post_stages(
@@ -212,7 +247,7 @@ def run_pipeline(
         # write them once and read them once measurably pays the storage
         # round-trip for nothing (r3 serial-floor audit; the old comment
         # here described the two-pass guilt form, long gone).
-        issues3 = issues3.persist(PERSIST_LEVEL)
+        issues3 = _persist_cut(issues3)
 
     # J8/T3: merge prior-run backlog before the per-changeset phase
     merged = issues3
@@ -244,7 +279,7 @@ def run_pipeline(
         "final_issues", lambda: apply_user_gates(deduped, t["changesets"], t["users"], slim=True)
     )
     if persist and not stage_checkpoints:
-        final_issues = final_issues.persist(PERSIST_LEVEL)  # feeds reports + tiles + counts
+        final_issues = _persist_cut(final_issues)  # feeds reports + tiles + counts
 
     reports = compose_reports(final_issues, t["users"], t["changesets"], fidelity, slim=True)
 

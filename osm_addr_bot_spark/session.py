@@ -3,6 +3,12 @@
 One place to set the engine's execution knobs so tests, bench and
 spark-submit jobs agree. Local-mode friendly but every setting is the
 one we'd ship to a multi-executor cluster (AQE, skew join, Arrow).
+
+PySpark's DataFrame debugging is off by default: it records the Python
+call site of every Column/DataFrame call over extra Py4J round trips,
+~2.8x the commands of a pipeline plan build. The trade-off: analysis
+errors lose their "DataFrame context" call-site lines; set
+``spark.python.sql.dataFrameDebugging.enabled=true`` to get them back.
 """
 
 from __future__ import annotations
@@ -10,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def get_spark(
@@ -55,22 +63,27 @@ def get_spark(
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
+        # static: read once per process by PySpark (module docstring)
+        DEBUGGING_CONF: "false",
     }
     if os.environ.get("SPARK_SUBMIT_MODE"):
         # Under spark-submit the launcher's --conf / spark-defaults are
         # authoritative — builder.config would silently override them
         # (measured: a --conf spark.sql.shuffle.partitions=7 submit ran
         # with this dict's value instead). The dict above is a set of
-        # session DEFAULTS: create the session bare, then apply only the
-        # runtime-settable keys the launcher did not set (sc.getConf()
-        # holds every explicitly-set entry — launcher's, since the
-        # builder set none). Static keys (spark.local.dir, driver
-        # memory, UI) are the launcher's domain under spark-submit.
-        spark = builder.getOrCreate()
-        launcher_set = spark.sparkContext.getConf()
+        # session DEFAULTS: attach to the launcher's JVM first, read what
+        # it set (its system properties, which SparkConf loads), and pass
+        # the builder only the engine keys it did not set. Other static
+        # keys (spark.local.dir, driver memory, UI) are the launcher's
+        # domain under spark-submit.
+        from pyspark import SparkConf, SparkContext
+
+        SparkContext._ensure_initialized()  # noqa: SLF001 — gateway only, no context yet
+        launcher_set = SparkConf()
         for k, v in conf.items():
-            if k.startswith("spark.sql.") and not launcher_set.contains(k):
-                spark.conf.set(k, v)
+            if (k.startswith("spark.sql.") or k == DEBUGGING_CONF) and not launcher_set.contains(k):
+                builder = builder.config(k, v)
+        spark = builder.getOrCreate()
         # extra_conf is an EXPLICIT caller request, not a default: apply
         # every runtime-settable key (ADVICE r2: the spark.sql. filter
         # silently dropped e.g. spark.serializer requests); static confs

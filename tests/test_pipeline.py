@@ -2,14 +2,36 @@
 checkpoint/resume semantics."""
 
 import json
+import re
 import shutil
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from osm_addr_bot_spark.datagen import T0, WINDOW_S
 from osm_addr_bot_spark.operators.report import compose_message
-from osm_addr_bot_spark.pipeline import load_tables, run_pipeline
+from osm_addr_bot_spark.pipeline import _estimated_scan_partitions, load_tables, run_pipeline
 from osm_addr_bot_spark.state.checkpoint import Checkpoint
+
+
+def _digest(df):
+    """(rows, sum of xxhash64 over every column): order-independent, and
+    every column is computed. Map columns hash as their sorted entries."""
+    cols = [
+        F.to_json(F.array_sort(F.map_entries(f.name))) if isinstance(f.dataType, MapType) else F.col(f.name)
+        for f in df.schema.fields
+    ]
+    row = df.agg(F.count(F.lit(1)), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
+    return tuple(row)
+
+
+def _scans_documents(df) -> bool:
+    """Whether df's analyzed plan scans the documents table, the only
+    table with a ``spans`` column."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return re.search(r"Relation \[[^\]]*\bspans#", plan) is not None
 
 
 def test_pipeline_end_to_end(spark, synth_dir):
@@ -45,6 +67,47 @@ def test_pipeline_end_to_end(spark, synth_dir):
     assert out["overlap"].count() > 0
     issues.unpersist()
     reports.unpersist()
+
+
+def test_reuse_points_cut_plan_and_keep_lineage(spark, synth_dir):
+    """The persisted reuse points are cut from the logical plan: the final
+    issues plan from one leaf, not from the documents scan. The cut keeps
+    RDD lineage: clearCache() releases every block the run persisted, and
+    the same returned frames recompute to the same rows. A
+    (local)checkpoint cut leaves its blocks outside the CacheManager."""
+    window = {"start_ts": T0, "end_ts": T0 + WINDOW_S}
+    assert _scans_documents(run_pipeline(spark, synth_dir, persist=False, **window)["issues"])
+
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
+    out = run_pipeline(spark, synth_dir, **window)
+    assert not _scans_documents(out["issues"])
+
+    sinks = ("issues", "reports", "tiles", "overlap")
+    first = {n: _digest(out[n]) for n in sinks}
+    assert first["issues"][0] > 0
+    spark.catalog.clearCache()
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted_before
+    assert {n: _digest(out[n]) for n in sinks} == first
+
+
+@pytest.mark.parametrize(
+    "max_partition_bytes, mpb",
+    [
+        ("16m", 16 << 20), ("128mb", 128 << 20), ("1gb", 1 << 30), ("512kb", 512 << 10),
+        ("64MB", 64 << 20), (" 2Kb ", 2 << 10), ("1048576", 1 << 20), ("4096b", 4096),
+        ("1t", 1 << 40), ("1.5g", None), ("lots", None),
+    ],
+)
+def test_estimated_scan_partitions_parses_byte_strings(tmp_path, max_partition_bytes, mpb):
+    """Every byte string Spark accepts for maxPartitionBytes parses; one
+    that doesn't gives None, so run_pipeline asks the scan instead."""
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: max_partition_bytes))
+    size = (1 << 20) + 1
+    with open(tmp_path / "part-0.parquet", "wb") as f:
+        f.truncate(size)  # sparse: apparent size only
+    want = None if mpb is None else -(-size // mpb)
+    assert _estimated_scan_partitions(spark, str(tmp_path)) == want
 
 
 def test_priority_dedup_idempotent_in_pipeline(spark, synth_dir):
