@@ -369,46 +369,24 @@ def q_nullsafe_equal_tags(spark, sf_dir):
 def q_duplicate_radius_join(spark, sf_dir):
     # J1 class: the engine runs its hex-cell k-ring join; the oracle
     # brute-forces the cross join — equality proves the cover guarantee.
-    # Each side carries a precomputed cos(lat) so the bbox prefilter
-    # (geo.haversine.radius_prefilter) short-circuits the asin/sqrt
-    # haversine for most same-cell candidate pairs, and there is NO
-    # final distinct: a pair (a, b) can match in exactly one join key —
-    # b's own cell — and the k-ring array has no duplicate cells, so
-    # the join multiplicity is 1 by construction and the old distinct
-    # was a full exchange of the output for nothing (r6: noop
-    # 4.38 s -> 3.31 s combined, same rows — oracle-verified).
-    from osm_addr_bot_spark.geo.haversine import radius_prefilter
-    from osm_addr_bot_spark.geo.hexgrid import cell_expr, cover_k, kring_expr
+    # No final distinct: a pair (a, b) can match in exactly one join key
+    # — b's own cell — and the k-ring array has no duplicate cells, so
+    # the join multiplicity is 1 by construction.
+    from osm_addr_bot_spark.geo.hexgrid import cell_expr, with_cover
+    from osm_addr_bot_spark.geo.join import radius_join
 
     pts = _cust_points(spark, sf_dir)
-    k = cover_k(100.0, 9)
-    probe = pts.withColumn(
-        "cell", F.explode(kring_expr(cell_expr(F.col("lat"), F.col("lon"), 9), k))
-    ).withColumn("_cl", F.cos(F.radians(F.col("lat"))))
+    probe = with_cover(pts, 100.0, 9)
     build = pts.select(
-        cell_expr(F.col("lat"), F.col("lon"), 9).alias("cell"),
+        cell_expr(F.col("lat"), F.col("lon"), 9).alias("_cell"),
         F.col("c_custkey").alias("k_b"),
-        F.col("lat").alias("lat_b"),
-        F.col("lon").alias("lon_b"),
-        F.cos(F.radians(F.col("lat"))).alias("_cl_b"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
     )
-    d = haversine_m(F.col("lat"), F.col("lon"), F.col("lat_b"), F.col("lon_b"))
-    return (
-        probe.join(build, "cell")
-        .filter(F.col("c_custkey") < F.col("k_b"))
-        .filter(
-            radius_prefilter(
-                F.col("lat"), F.col("lon"), F.col("lat_b"), F.col("lon_b"),
-                100.0, F.col("_cl"), F.col("_cl_b"),
-            )
-        )
-        .filter(d <= 100.0)
-        .select(
-            F.col("c_custkey").alias("k_a"),
-            "k_b",
-            F.round(d, 2).alias("dist_m"),
-        )
-    )
+    d = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
+    return radius_join(
+        probe, build, 100.0, ["_cell"], where=F.col("c_custkey") < F.col("k_b")
+    ).select(F.col("c_custkey").alias("k_a"), "k_b", F.round(d, 2).alias("dist_m"))
 
 
 @_q(
@@ -430,47 +408,29 @@ def q_street_tier_anti_join(spark, sf_dir):
     # to keep REMOTE queries cheap; its result equals "no match within
     # the largest tier" (matched@r ⊆ matched@R for r <= R by distance
     # monotonicity) — the exact equivalence streets.street_names_stage
-    # adopted in r3 and this query's own oracle (one flat NOT EXISTS at
-    # 3000 m) pins. r6 runs ONE max-tier pass here too, and the match
-    # itself is a LEFT SEMI join with the distance refine in the join
-    # condition: the hash join early-exits on the first in-range
-    # supplier per probe row instead of emitting every (probe,
-    # supplier) pair and distinct-ing millions of rows away. The seg
-    # equality rides in the equi-join key and the bbox prefilter runs
-    # before the haversine inside the condition.
-    from osm_addr_bot_spark.geo.haversine import radius_prefilter
+    # adopts and this query's own oracle (one flat NOT EXISTS at 3000 m)
+    # pins. ONE max-tier pass, matched as a radius_join LEFT SEMI with
+    # seg in the equi-join key: the hash join early-exits on the first
+    # in-range supplier per probe row. The anti join tolerates the
+    # repeated keys of a probe matched in several cover cells, so no
+    # distinct.
     from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
+    from osm_addr_bot_spark.geo.join import radius_join
 
     cust = _read(spark, sf_dir, "customer").selectExpr(
         "c_custkey", f"{_LAT} AS lat", f"{_LON} AS lon", "c_mktsegment AS seg"
     )
     supp = _read(spark, sf_dir, "supplier").selectExpr(
-        "s_suppkey",
-        "49.5 + (s_suppkey % 37) * 0.0004 AS lat",
-        "14.5 + (s_suppkey % 53) * 0.0006 AS lon",
+        "49.5 + (s_suppkey % 37) * 0.0004 AS b_lat",
+        "14.5 + (s_suppkey % 53) * 0.0006 AS b_lon",
         "CASE WHEN s_suppkey % 2 = 0 THEN 'BUILDING' ELSE 'MACHINERY' END AS seg",
     )
     radius = 3000.0
     res = pick_res(radius)
-    probe = with_cover(cust, radius, res, out="cell")
-    idx = supp.select(
-        cell_expr(F.col("lat"), F.col("lon"), res).alias("s_cell"),
-        F.col("seg").alias("s_seg"),
-        F.col("lat").alias("s_lat"),
-        F.col("lon").alias("s_lon"),
-    )
-    cond = (
-        (F.col("cell") == F.col("s_cell"))
-        & (F.col("seg") == F.col("s_seg"))
-        & radius_prefilter(
-            F.col("lat"), F.col("lon"), F.col("s_lat"), F.col("s_lon"), radius
-        )
-        & (
-            haversine_m(F.col("lat"), F.col("lon"), F.col("s_lat"), F.col("s_lon"))
-            <= radius
-        )
-    )
-    matched = probe.join(idx, cond, "left_semi").select("c_custkey").distinct()
+    idx = supp.withColumn("_cell", cell_expr(F.col("b_lat"), F.col("b_lon"), res))
+    matched = radius_join(
+        with_cover(cust, radius, res), idx, radius, ["_cell", "seg"], "left_semi"
+    ).select("c_custkey")
     return cust.join(matched, "c_custkey", "left_anti").select("c_custkey")
 
 

@@ -32,26 +32,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE_QUERIES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE_QUERIES = [
-    "duplicate_radius_join",
-    "street_tier_anti_join",
-    "pip_containment",
-    "tile_overlap_report",
-    "priority_dedup_window",
-    "broadcast_dim_join",
-    "dedup_minhash_lsh_pairs",
-    "dedup_components",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_near_pairs",
-    "ann_cosine_topk",
-    "text_quality_features",
-    "text_repetition_stats",
-    "text_winnow_fingerprints",
-    "events_sessionize",
-]
 
 
 def host_canary(iters: int = 2_000_000) -> float:

@@ -15,7 +15,9 @@ internalizes those operators as native Spark stages:
 
   * duplicate-address radius join (100 m)  -> hex-cell k-ring hash join
   * place containment / proximity (10 km)  -> cell-cover PIP + radius join
-  * tiered street-name search (0.5/1/3 km) -> anti-join cascade
+  * tiered street-name search (0.5/1/3 km) -> one 3 km semi/anti join
+
+The three radius searches share one primitive, ``geo.join.radius_join``.
   * historical guilt diff                  -> snapshot join + map diff
   * raster tile assignment                 -> native XYZ slippy-map exprs
 
@@ -24,7 +26,9 @@ analysis, multimodal plumbing) under `datapipe/`.
 
 Design rules (see SURVEY.md):
   - DataFrame/SQL first; Catalyst does pushdown/pruning/join selection.
-  - Python only in vectorized pandas/Arrow UDFs (cell math, PIP refine).
+  - Native expressions on the hot path: hex/S2 cell math, PIP and the
+    distance refine run in whole-stage codegen. The one pandas UDF in
+    the pipeline composes report messages.
   - Explicit partitioning: spatial shuffles key on cell ids, skewed
     urban cells are salted, small dims are broadcast.
 """

@@ -150,8 +150,8 @@ def minhash_signatures(
     of the i-th universal hash of one md5 per shingle (see above)."""
     sh = exploded_shingles(docs, n, text_col, key)
     # h32 as a real column first: fanning md5 into the k slot exprs
-    # directly can re-evaluate it per slot (the cover_expr inlining trap,
-    # BENCH.md optimization log)
+    # directly can re-evaluate it per slot (the inlining trap
+    # hexgrid.with_cover avoids, BENCH.md optimization log)
     hashed = sh.select("doc_id", md5_int32(F.col("sh")).alias("h32")).select(
         "doc_id",
         *[minhash_slot_expr(F.col("h32"), i).alias(f"h{i}") for i in range(num_hashes)],

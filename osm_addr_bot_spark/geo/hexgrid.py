@@ -1,4 +1,4 @@
-"""Hexagonal cell index (H3-style) in pure numpy, exposed as pandas UDFs.
+"""Hexagonal cell index (H3-style): native Spark Columns plus a numpy reference.
 
 The north rule asks for an H3 res-9 style hex index as the spatial join
 key. The real `h3` library is not installed in this sandbox, so we
@@ -20,8 +20,10 @@ brute force):
 The 1.08 factor absorbs the equirectangular east-west distortion across
 the reference's Poland bbox (cos 49°/cos 52° ≈ 1.066).
 
-All functions are vectorized numpy over Arrow batches — no per-row
-Python (BASELINE.json input_hint).
+The engine's joins use the native Column builders (``cell_expr``,
+``kring_expr``, ``with_cover``): whole-stage codegen, no Python workers.
+The numpy functions and ``hex_cell_udf`` are the reference those
+builders are property-tested against, bit for bit.
 """
 
 from __future__ import annotations
@@ -161,9 +163,7 @@ def pick_res(radius_m: float) -> int:
 
 # -------------------------------------------------- native Column builders
 # The same math as the numpy path, but as pure Spark SQL expressions —
-# whole-stage codegen, no Arrow round trip, no Python workers. These are
-# the hot-path implementations; the numpy/pandas-UDF forms remain for
-# batch pre-indexing and tests (equality is property-tested).
+# whole-stage codegen, no Arrow round trip, no Python workers.
 
 
 def cell_expr(lat, lon, res: int):
@@ -209,22 +209,12 @@ def kring_expr(cell, k: int):
     return F.array(*[cell + F.lit(int(dq) * (1 << 29) + int(dr)) for dq, dr in offs])
 
 
-def cover_expr(lat, lon, radius_m: float, res: int):
-    """Native Column: disk-cover cells (cell + k-ring per cover_k).
-
-    WARNING: inlines the trig cell computation into every ring member —
-    fine for k<=1 (7 copies folded by codegen is measurable but small);
-    for larger rings use ``with_cover`` which materializes the base cell
-    once (a 6x stage-cost difference was measured at k=3).
-    """
-    return kring_expr(cell_expr(lat, lon, res), cover_k(radius_m, res))
-
-
 def with_cover(df, radius_m: float, res: int, out: str = "_cell",
                lat: str = "lat", lon: str = "lon"):
     """Explode df by the disk-cover cells, computing the base cell ONCE
-    into a real column so codegen doesn't duplicate the trig per ring
-    member."""
+    into a real column: ``kring_expr(cell_expr(...))`` would inline the
+    trig into every ring member (a 6x stage-cost difference was
+    measured at k=3)."""
     from pyspark.sql import functions as F
 
     k = cover_k(radius_m, res)
@@ -235,40 +225,14 @@ def with_cover(df, radius_m: float, res: int, out: str = "_cell",
     )
 
 
-# ------------------------------------------------------------- pandas UDFs
+# ------------------------------------------------------------- test oracle
 @lru_cache(maxsize=None)
 def hex_cell_udf(res: int):
-    """pandas UDF (lat, lon) -> cell id at ``res``."""
+    """pandas UDF (lat, lon) -> cell id at ``res`` (the numpy reference,
+    for tests)."""
 
     @F.pandas_udf(T.LongType())
     def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
         return pd.Series(cell_of(lat.to_numpy(), lon.to_numpy(), res))
-
-    return _udf
-
-
-@lru_cache(maxsize=None)
-def hex_kring_udf(k: int):
-    """pandas UDF cell -> array of cells within hex distance k."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(cell: pd.Series) -> pd.Series:
-        mat = kring(cell.to_numpy(), k)
-        return pd.Series(list(mat))
-
-    return _udf
-
-
-@lru_cache(maxsize=None)
-def hex_cover_udf(radius_m: float, res: int):
-    """pandas UDF (lat, lon) -> array of cells covering the disk of
-    ``radius_m`` around the point (cell + k-ring, k per ``cover_k``)."""
-    k = cover_k(radius_m, res)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        cells = cell_of(lat.to_numpy(), lon.to_numpy(), res)
-        mat = kring(cells, k)
-        return pd.Series(list(mat))
 
     return _udf

@@ -5,8 +5,7 @@ The exact even-odd (ray casting) test is a single native expression:
 inside whole-stage codegen per candidate (point, polygon) pair, no UDF
 and no extra shuffle. Candidate pairs come from a hex-cell equi-join:
 polygons pre-explode their covering cells (native bbox-lattice sample
-+ 1-ring margin since r6; the numpy/pandas-UDF form remains for tests
-and batch pre-indexing), points probe with their own cell.
++ 1-ring margin), points probe with their own cell.
 
 This replaces the reference's remote `is_in` queries
 (reference overpass.py:112-140) with a cell-prefix hash join +
@@ -15,13 +14,8 @@ native refine.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm_addr_bot_spark.geo import hexgrid as hg
 
@@ -51,51 +45,18 @@ def point_in_ring(lat: Column, lon: Column, ring: Column) -> Column:
     return F.aggregate(idx, F.lit(0), step) % 2 == 1
 
 
-@lru_cache(maxsize=None)
-def ring_cover_udf(res: int):
-    """pandas UDF: ring array -> covering hex cells at ``res``.
-
-    Lattice-samples the ring bbox at 0.8x cell inradius then adds a
-    1-ring margin — a superset of every cell whose area intersects the
-    polygon (bbox superset + margin absorbs sampling gaps), which is
-    all the join needs (exact PIP refines after).
-    """
-    edge = hg.EDGE_M[res]
-    step_deg_lat = (edge * 0.8) / 111_194.9
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(ring: pd.Series) -> pd.Series:
-        out = []
-        for verts in ring:
-            lats = np.asarray([v["lat"] for v in verts])
-            lons = np.asarray([v["lon"] for v in verts])
-            la0, la1 = lats.min(), lats.max()
-            lo0, lo1 = lons.min(), lons.max()
-            step_lon = step_deg_lat / max(np.cos(np.radians((la0 + la1) / 2)), 0.1)
-            glat = np.arange(la0, la1 + step_deg_lat, step_deg_lat)
-            glon = np.arange(lo0, lo1 + step_lon, step_lon)
-            mlat = np.repeat(glat, len(glon))
-            mlon = np.tile(glon, len(glat))
-            cells = np.unique(hg.cell_of(mlat, mlon, res))
-            cells = np.unique(hg.kring(cells, 1).ravel())
-            out.append(cells)
-        return pd.Series(out)
-
-    return _udf
-
-
 def polygons_with_cells(polygons: DataFrame, res: int) -> DataFrame:
     """Polygon dim exploded by covering cell — the build side of every
     PIP join. At scale this is computed once and reused (cacheable).
 
-    r6: native lattice (bbox extents -> sequence explodes -> codegen'd
-    cell_expr -> 1-ring margin) instead of the pandas UDF — the cover
-    is a candidate SUPERSET refined by exact point_in_ring downstream,
-    so any valid cover yields identical stage output, and the UDF's
-    real cost was spawning Python workers inside the pipeline's first
-    broadcast builds (2 serial ~1.8 s single-task stages, r6 event-log
-    audit; the numpy form stays for tests/batch use). dropDuplicates
-    mirrors the UDF's np.unique so overlapping k-rings don't multiply
+    Native lattice: the ring's bbox is sampled at 0.8x the cell
+    inradius (sequence explodes -> codegen'd cell_expr), then a 1-ring
+    margin absorbs sampling gaps. The cover is a candidate SUPERSET
+    refined by exact point_in_ring downstream, so any valid cover
+    yields identical stage output. Native, because a Python cover
+    spawns Python workers inside the pipeline's first broadcast builds
+    (2 serial ~1.8 s single-task stages in an event-log audit).
+    dropDuplicates keeps overlapping k-rings from multiplying
     downstream PIP candidate pairs.
     """
     edge = hg.EDGE_M[res]

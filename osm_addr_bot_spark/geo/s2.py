@@ -26,10 +26,8 @@ frozen from this implementation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MAX_LEVEL = 30
 _LOOKUP_BITS = 4
@@ -132,23 +130,6 @@ def parent_id(cell: np.ndarray, level: int) -> np.ndarray:
     u = np.asarray(cell, np.int64).view(np.uint64)
     lsb = np.uint64(1 << (2 * (MAX_LEVEL - level)))
     return ((u & ~(lsb - np.uint64(1))) | lsb).view(np.int64)
-
-
-def s2_cell_udf(level: int = 15):
-    """pandas UDF (lat, lon) -> S2 cell id (LongType).
-
-    Reference implementation for tests and numpy batch pre-indexing;
-    hot paths use ``with_s2_cell`` (native expressions, no Python
-    workers — the r6 event-log audit measured ~82 core-s of Python
-    worker start/init against <1 s of actual S2 math in the sf0.1
-    parse stage, plus 3 serial 3-5 s single-task broadcast builds
-    paying the same worker spawn)."""
-
-    @F.pandas_udf(T.LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(cell_id(lat.to_numpy(), lon.to_numpy(), level))
-
-    return _udf
 
 
 def with_s2_cell(df, lat: str = "lat", lon: str = "lon", level: int = 15, out: str = "s2_15"):

@@ -23,8 +23,9 @@ Physical plan: candidates keep their parse-time res-9 hex cell; issues
 explode cell x k-ring-1 (7 cells — proven sufficient for 100 m in
 tests/test_geo.py) x a deterministic salt sequence; candidates carry
 ``pmod(hash(uid), k)`` salt. The (cell, salt) equi-join bounds per-task
-fan-in under urban skew; AQE skew-join remains as backstop. Distance +
-tag equality refine after the join, all native exprs.
+fan-in under urban skew; AQE skew-join remains as backstop. The join and
+its distance + tag equality refine are one ``geo.join.radius_join``, all
+native exprs.
 
 Shuffle-width note (r3 event-log audit): the match predicates need only
 (family, lat/lon, the five EQUAL_TAGS values, uid) — so BOTH sides of
@@ -49,9 +50,8 @@ from osm_addr_bot_spark.config import (
     SALT_BUCKETS,
     WHITELIST_TAGS,
 )
-from osm_addr_bot_spark.geo import haversine_m
-from osm_addr_bot_spark.geo.haversine import radius_prefilter
 from osm_addr_bot_spark.geo.hexgrid import cover_k, kring_expr
+from osm_addr_bot_spark.geo.join import radius_join
 
 
 def whitelist_expr(tags: Column) -> Column:
@@ -109,17 +109,9 @@ def duplicates_stage(
     radius_m: float = DUPLICATE_RADIUS_M,
     salt_buckets: int = SALT_BUCKETS,
     hot_cell_threshold: int = 4000,
-    broadcast_refetch: bool = True,
 ) -> DataFrame:
     """Run J1 for the DUPLICATED check's issue rows; returns the check's
-    new issue set in the same long format.
-
-    ``broadcast_refetch``: the payload re-fetch join (matched links x
-    candidate universe) broadcasts the link side — links are bounded by
-    the whitelist-clean issue count, orders of magnitude below the
-    universe. Disable only if a workload's match set outgrows the
-    broadcast budget; the join then shuffles on c_uid with AQE picking
-    the strategy."""
+    new issue set in the same long format."""
     issue_cols = issues.columns
 
     # single fused filters: every extra DataFrame op costs a full
@@ -163,10 +155,6 @@ def duplicates_stage(
     iss_probe = (
         iss.select(
             *_ISSUE_KEY, "element_type", "lat", "lon", "hex9",
-            # one cos per probe row so the bbox prefilter below runs
-            # without trig per candidate pair (8 bytes on the exchange
-            # against skipping the haversine for out-of-box pairs)
-            F.cos(F.radians(F.col("lat"))).alias("_coslat"),
             *_eq_vals(F.col("tags"), "_eq"),
         )
         .withColumn("_cell", F.explode(kring_expr(F.col("hex9"), k)))
@@ -202,9 +190,8 @@ def duplicates_stage(
             F.col("doc_id").alias("c_doc_id"),
             F.col("span_offset").alias("c_span_offset"),
             F.col("element_type").alias("c_element_type"),
-            F.col("lat").alias("c_lat"),
-            F.col("lon").alias("c_lon"),
-            F.cos(F.radians(F.col("lat"))).alias("c_coslat"),
+            F.col("lat").alias("b_lat"),
+            F.col("lon").alias("b_lon"),
             *_eq_vals(F.col("tags"), "_ceq"),
         )
     )
@@ -217,27 +204,11 @@ def duplicates_stage(
     for i in range(len(EQUAL_TAGS)):
         eq_quintuple = eq_quintuple & F.col(f"_eq{i}").eqNullSafe(F.col(f"_ceq{i}"))
 
-    # ONE fused refine filter, cheap predicates first (codegen
-    # short-circuits a conjunction left to right): family/uid tests,
-    # then the trig-free bbox prefilter, and only survivors pay the
-    # asin/sqrt haversine and the null-safe quintuple
-    refine = (
-        opposite_family
-        & (F.col("c_uid") != F.col("uid"))
-        & radius_prefilter(
-            F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"),
-            float(radius_m), F.col("_coslat"), F.col("c_coslat"),
-        )
-        & (
-            haversine_m(F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"))
-            <= F.lit(float(radius_m))
-        )
-        & eq_quintuple
-    )
-    links = (
-        iss_probe.join(cand, ["_cell", "_salt"])
-        .filter(refine)
-        .select(*_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset")
+    # cheap tests first; radius_join then runs the bbox prefilter and
+    # only its survivors pay the haversine
+    where = opposite_family & (F.col("c_uid") != F.col("uid")) & eq_quintuple
+    links = radius_join(iss_probe, cand, radius_m, ["_cell", "_salt"], where=where).select(
+        *_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset"
     )
 
     # one row per surviving issue carrying its matched candidate row
@@ -265,8 +236,6 @@ def duplicates_stage(
         F.col("_k.c_doc_id").alias("c_doc_id"),
         F.col("_k.c_span_offset").alias("c_span_offset"),
     )
-    if broadcast_refetch:
-        link_prov = F.broadcast(link_prov)
     cand_payload = cand_base.select(
         F.col("uid").alias("c_uid"),
         F.col("doc_id").alias("c_doc_id"),
@@ -280,7 +249,7 @@ def duplicates_stage(
         F.col("s2_15").alias("c_s2_15"),
     )
     dup_rows = cand_payload.join(
-        link_prov, ["c_uid", "c_doc_id", "c_span_offset"]
+        F.broadcast(link_prov), ["c_uid", "c_doc_id", "c_span_offset"]
     ).select(
         *prov_cols,
         F.col("c_doc_id").alias("doc_id"),

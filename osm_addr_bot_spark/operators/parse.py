@@ -71,10 +71,9 @@ def parse_elements(
 ) -> DataFrame:
     """Parse kind='text' spans into the canonical elements DataFrame.
 
-    All expressions are native (whole-stage codegen) including the hex
-    cell id; the only Python is the vectorized S2-index Arrow UDF, and
-    the index columns are skippable via ``with_index`` for purely
-    relational consumers.
+    All expressions are native (whole-stage codegen), the hex cell id
+    and the S2 cell id included — no Python workers; the index columns
+    are skippable via ``with_index`` for purely relational consumers.
     """
     spans = explode_spans(documents).filter(F.col("kind") == "text")
     e = spans.select(

@@ -28,9 +28,10 @@ interpretations agree (FIXTURES.md §4).
 
 Physical plan: polygons explode covering hex cells once (res 7 —
 town-sized polygons); issues probe with their own cell. Arm A joins on
-(cell, name) so only same-named pairs survive the shuffle; arm B joins
-place nodes on (cell, name) at res 5 (10 km cover = 7 cells). Exact
-PIP / distance refine are native exprs after the equi-joins.
+(cell, name) so only same-named pairs survive the shuffle; arm B is a
+``geo.join.radius_join`` LEFT SEMI of the issues' 10 km cover against
+place nodes on (cell, name). Exact PIP / distance refine are native
+exprs on the equi-joined pairs.
 """
 
 from __future__ import annotations
@@ -40,8 +41,8 @@ from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import PLACE_PROXIMITY_M
 from osm_addr_bot_spark.checks.selectors import normalize_expr
-from osm_addr_bot_spark.geo import haversine_m
 from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
+from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.geo.pip import point_in_ring, polygons_with_cells
 from osm_addr_bot_spark.operators.duplicates import skip_large_expr
 
@@ -89,16 +90,11 @@ def place_not_in_area_stage(
     nodes = place_nodes.select(
         cell_expr(F.col("lat"), F.col("lon"), res).alias("_cell"),
         F.col("name").alias("_name"),
-        F.col("lat").alias("p_lat"),
-        F.col("lon").alias("p_lon"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
     )
-    hit_b = (
-        probe.join(nodes, ["_cell", "_name"])
-        .filter(
-            haversine_m(F.col("lat"), F.col("lon"), F.col("p_lat"), F.col("p_lon"))
-            <= F.lit(float(radius_m))
-        )
-        .select(*_ISSUE_KEY)
+    hit_b = radius_join(probe, nodes, radius_m, ["_cell", "_name"], "left_semi").select(
+        *_ISSUE_KEY
     )
 
     # anti join tolerates duplicate keys on the build side — no distinct

@@ -1,22 +1,22 @@
-"""J4 — tiered street-name proximity anti-join cascade.
+"""J4 — street-name proximity anti-join.
 
 Internalizes the reference's ``query_street_names``
 (overpass.py:143-151 compile, 347-382 exec, tier driver 37-55):
 an UNKNOWN_STREET_NAME issue is CLEARED when a named highway within the
 current tier radius (500 -> 1000 -> 3000 m) carries its ``addr:street``
 as ``name`` or ``alt_name`` — EXACT string match, no normalization
-(quirk Q3, overpass.py:379). Issues cleared at a tier leave the
-cascade; the rest escalate; whoever survives tier 3000 stays flagged.
+(quirk Q3, overpass.py:379); whoever survives tier 3000 stays flagged.
 Large elements never enter (reference @skip_large).
 
-Physical plan per tier: street polylines pre-explode to vertices and
-name variants, indexed by hex cell at the tier's resolution (built once
-per resolution and reusable across runs — at 100 TB this is a static
-index table). Issues explode their disk-cover cells and equi-join on
-(cell, name) so the shuffle carries only same-named candidates; the
-haversine refine is native. Matched = left_semi, remainder = left_anti
-— the reference's tier() loop as three shrinking anti-joins (P5:
-deliberate driver-side loop, no Catalyst analog).
+The tier escalation exists to keep the reference's *remote* queries
+cheap; its final result equals "no matching street within the largest
+tier" (matched@500 ⊆ matched@3000 by distance monotonicity). So the
+stage runs ONE pass at ``max(STREET_TIERS_M)``: street polylines
+pre-explode to vertices and name variants, indexed by hex cell (a
+static index table at scale); issues explode their disk-cover cells and
+``geo.join.radius_join`` LEFT SEMI-joins them on (cell, name), so the
+shuffle carries only same-named candidates and each issue stops at its
+first in-range vertex. The unmatched rest is a left-anti join.
 
 Distance note: point-to-way distance is approximated by min distance
 to the way's vertices (generator emits 100 m-spaced vertices; fixtures
@@ -29,15 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import STREET_TIERS_M
-from osm_addr_bot_spark.geo import haversine_m
 from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
+from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.operators.duplicates import skip_large_expr
 
 _ISSUE_KEY = ["category", "check_id", "changeset_id", "uid"]
 
 
 def street_vertex_index(streets: DataFrame, res: int) -> DataFrame:
-    """(cell, name, v_lat, v_lon): one row per (vertex, name-variant)."""
+    """(_cell, _name, b_lat, b_lon): one row per (vertex, name-variant)."""
     return (
         streets.select(
             "way_id",
@@ -48,59 +48,32 @@ def street_vertex_index(streets: DataFrame, res: int) -> DataFrame:
         .select("way_id", "_name", F.explode("points").alias("p"))
         .select(
             "_name",
-            F.col("p.lat").alias("v_lat"),
-            F.col("p.lon").alias("v_lon"),
+            F.col("p.lat").alias("b_lat"),
+            F.col("p.lon").alias("b_lon"),
         )
-        .withColumn("_cell", cell_expr(F.col("v_lat"), F.col("v_lon"), res))
+        .withColumn("_cell", cell_expr(F.col("b_lat"), F.col("b_lon"), res))
     )
 
 
-def street_names_stage(
-    issues: DataFrame,
-    streets: DataFrame,
-    tiers: tuple[int, ...] = STREET_TIERS_M,
-    cascade: bool = False,
-) -> DataFrame:
-    """J4: returns the issues still flagged after the search.
-
-    The reference's tier escalation exists to keep *remote* queries
-    cheap; its final result equals "no matching street within the
-    largest tier" (matched@500 ⊆ matched@3000 by monotonicity). In
-    Spark the (cell, name) equi-join already prunes candidates to
-    same-named streets, so the default runs ONE join at max(tiers) —
-    two shuffles instead of six, same rows (equivalence under test).
-    ``cascade=True`` keeps the reference-shaped 3-round anti-join loop
-    (P5) for workloads where tier-1 hits are cheap and dominant.
-    """
-    remaining = issues.filter(skip_large_expr()).withColumn(
-        "_street", F.element_at(F.col("tags"), F.lit("addr:street"))
+def street_names_stage(issues: DataFrame, streets: DataFrame) -> DataFrame:
+    """J4: returns the issues with no same-named street vertex within
+    ``max(STREET_TIERS_M)``."""
+    radius = max(STREET_TIERS_M)
+    res = pick_res(radius)
+    iss = issues.filter(skip_large_expr())
+    # slim probe (r3 shuffle-width audit): the (cell, name) exchange
+    # replicates every probe row once per cover cell, so it ships only
+    # the issue key + point + name — the full issue payload (tags map,
+    # bbox) stays on the anti-join side, keyed on _ISSUE_KEY
+    probe = with_cover(
+        iss.select(
+            *_ISSUE_KEY, "lat", "lon",
+            F.element_at(F.col("tags"), F.lit("addr:street")).alias("_name"),
+        ),
+        radius,
+        res,
     )
-    radii = list(tiers) if cascade else [max(tiers)]
-
-    for radius in radii:
-        res = pick_res(radius)
-        index = street_vertex_index(streets, res)
-        # slim probe (r3 shuffle-width audit): the (cell, name) exchange
-        # replicates every probe row once per cover cell, so it ships
-        # only the issue key + point + name — the full issue payload
-        # (tags map, bbox) rejoins via the anti-join below, which was
-        # already keyed on _ISSUE_KEY
-        probe = (
-            remaining.select(*_ISSUE_KEY, "lat", "lon", F.col("_street").alias("_name"))
-            .transform(lambda df: with_cover(df, float(radius), res))
-        )
-        matched = (
-            probe.join(index, ["_cell", "_name"])
-            .filter(
-                haversine_m(F.col("lat"), F.col("lon"), F.col("v_lat"), F.col("v_lon"))
-                <= F.lit(float(radius))
-            )
-            .select(*_ISSUE_KEY)
-        )
-        remaining = remaining.join(matched, _ISSUE_KEY, "left_anti")
-        # NOTE: the reference early-exits when a tier clears everything
-        # (overpass.py:46-47); Spark's lazy plan makes the remaining
-        # tiers no-ops on an empty side automatically (AQE empty-relation
-        # propagation), so no driver-side count is spent here.
-
-    return remaining.drop("_street")
+    matched = radius_join(
+        probe, street_vertex_index(streets, res), radius, ["_cell", "_name"], "left_semi"
+    ).select(*_ISSUE_KEY)
+    return iss.join(matched, _ISSUE_KEY, "left_anti")

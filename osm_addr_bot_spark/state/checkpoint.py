@@ -142,7 +142,8 @@ class StageRunner:
     """Stage-granular checkpointing: ``run(name, fn)`` materializes a
     stage once, records per-partition lineage, and replays from parquet
     on restart — kill the job at any stage boundary and the rerun skips
-    everything committed (resume test in tests/test_state.py)."""
+    everything committed (resume test:
+    tests/test_pipeline.py::test_checkpoint_resume)."""
 
     def __init__(self, spark: SparkSession, root: str | os.PathLike, run_id: str, enabled: bool = True):
         self.spark = spark

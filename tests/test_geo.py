@@ -256,3 +256,61 @@ def test_native_s2_cell_matches_numpy(spark):
         ]
         want = list(s2.cell_id(lat, lon, level))
         assert got == want, f"level={level}"
+
+
+@pytest.mark.parametrize("radius", [100.0, 3000.0, 10000.0])
+def test_radius_join_equals_brute_force(spark, radius):
+    """radius_join over the cover at pick_res/cover_k must return exactly
+    the brute-force cross join filtered by haversine <= r: every pair
+    once (inner), and the distinct matching probe keys (left_semi).
+    Half the build points sit within +-1% of the radius of a same-named
+    probe; the rest are sparse enough that most probes have a same-named
+    build point in their cover cells but none within the radius."""
+    from osm_addr_bot_spark.geo.join import radius_join
+
+    rng = np.random.default_rng(17)
+    lat0, lon0, n = 52.1, 21.1, 120
+    span = 10 * radius / 111_194.9
+    plat = lat0 + rng.uniform(-span, span, n)
+    plon = lon0 + rng.uniform(-span, span, n) / math.cos(math.radians(lat0))
+    d = radius * rng.uniform(0.99, 1.01, n)
+    brg = rng.uniform(0, 2 * math.pi, n)
+    blat = np.where(
+        np.arange(n) % 2 == 0,
+        plat + d * np.sin(brg) / 111_194.9,
+        lat0 + rng.uniform(-span, span, n),
+    )
+    blon = np.where(
+        np.arange(n) % 2 == 0,
+        plon + d * np.cos(brg) / (111_194.9 * np.cos(np.radians(plat))),
+        lon0 + rng.uniform(-span, span, n) / math.cos(math.radians(lat0)),
+    )
+    names = ["a", "b"]
+    probe = spark.createDataFrame(
+        [(i, float(a), float(b), names[i % 2]) for i, (a, b) in enumerate(zip(plat, plon))],
+        "pid long, lat double, lon double, _name string",
+    )
+    build = spark.createDataFrame(
+        [(i, float(a), float(b), names[i % 2]) for i, (a, b) in enumerate(zip(blat, blon))],
+        "bid long, b_lat double, b_lon double, _name string",
+    )
+    res = hg.pick_res(radius)
+
+    brute = (
+        probe.crossJoin(build.withColumnRenamed("_name", "b_name"))
+        .filter(
+            (F.col("_name") == F.col("b_name"))
+            & (haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon")) <= radius)
+        )
+        .select("pid", "bid")
+    )
+    want = sorted(tuple(r) for r in brute.collect())
+    assert want, "no pair within the radius: the test would prove nothing"
+
+    cover = hg.with_cover(probe, radius, res)
+    cells = build.withColumn("_cell", hg.cell_expr(F.col("b_lat"), F.col("b_lon"), res))
+    inner = radius_join(cover, cells, radius, ["_cell", "_name"]).select("pid", "bid")
+    assert sorted(tuple(r) for r in inner.collect()) == want
+
+    semi = radius_join(cover, cells, radius, ["_cell", "_name"], "left_semi")
+    assert sorted({r["pid"] for r in semi.collect()}) == sorted({p for p, _ in want})

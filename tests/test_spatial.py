@@ -5,6 +5,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from osm_addr_bot_spark.config import PLACE_PROXIMITY_M, STREET_TIERS_M
 from osm_addr_bot_spark.operators.duplicates import duplicates_stage
 from osm_addr_bot_spark.operators.guilt import filter_guilty, guilty_changesets
 from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in_area_stage
@@ -358,34 +359,45 @@ def test_duplicates_salting_preserves_results(spark):
     assert salted.count() > 0
 
 
-def test_street_cascade_equals_single_join(spark):
-    """cascade=True (reference-shaped tier loop) and the default single
-    max-tier join must produce identical rows."""
-    streets = _streets(
-        spark,
-        [_street_at(400, "Polna"), _street_at(2500, "Leśna"), _street_at(3300, "Ogrodowa", n_pts=1)],
-    )
-    issues = issues_df(
-        spark, [_usn(1, "Polna"), _usn(2, "Leśna"), _usn(3, "Ogrodowa"), _usn(4, "Zmyślona")]
-    )
-    single = street_names_stage(issues, streets)
-    casc = street_names_stage(issues, streets, cascade=True)
-    key = lambda r: (r["check_id"], r["changeset_id"], r["uid"])
-    assert sorted(map(key, single.collect())) == sorted(map(key, casc.collect()))
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_spatial_plans_have_no_python(spark):
     """Scale guard: the spatial joins must stay whole-stage-codegen
     JVM-native — no row-at-a-time or Arrow Python eval in the plan
-    (BENCH.md 'hot paths are native')."""
+    (BENCH.md 'hot paths are native'). J2 and J4 must match through a
+    LEFT SEMI join that carries the distance refine in its condition,
+    so the hash join stops at the first in-range match."""
     issue = mk_issue(check_id="DUPLICATED", changeset_id=1, element_id=1,
                      tags=dict(ADDR), lat=LAT, lon=LON)
     cand = mk_issue(changeset_id=2, element_id=2, element_type="way",
                     tags=dict(ADDR), lat=LAT, lon=LON)
-    plan = duplicates_stage(
-        issues_df(spark, [issue]), elements_df(spark, [issue, cand])
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    dup_plan = _executed_plan(
+        duplicates_stage(issues_df(spark, [issue]), elements_df(spark, [issue, cand]))
+    )
+
+    polys = _polygons(spark, [(1, "Wola", None, None, _poly_ring(LAT, LON, 1000))])
+    place_nodes = spark.createDataFrame(
+        [(1, "Wola", LAT, LON)], "node_id long, name string, lat double, lon double"
+    )
+    bcwp = mk_issue(check_id="BAD_CITY_WITH_PLACE", post_stage="place_not_in_area",
+                    changeset_id=1, element_id=1, tags={"addr:place": "Wola"},
+                    lat=LAT, lon=LON)
+    place_plan = _executed_plan(
+        place_not_in_area_stage(issues_df(spark, [bcwp]), polys, place_nodes)
+    )
+    street_plan = _executed_plan(
+        street_names_stage(
+            issues_df(spark, [_usn(1, "Polna")]), _streets(spark, [_street_at(400, "Polna")])
+        )
+    )
+
+    for plan in (dup_plan, place_plan, street_plan):
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    for plan, radius in ((place_plan, PLACE_PROXIMITY_M), (street_plan, max(STREET_TIERS_M))):
+        semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
+        assert any("ASIN" in ln and f"<= {float(radius)}" in ln for ln in semi), plan
 
 
 def test_guilt_strategies_equivalent(spark):
