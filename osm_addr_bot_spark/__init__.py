@@ -16,10 +16,10 @@ internalizes those operators as native Spark stages:
   * duplicate-address radius join (100 m)  -> hex-cell k-ring hash join
   * place containment / proximity (10 km)  -> cell-cover PIP + radius join
   * tiered street-name search (0.5/1/3 km) -> one 3 km semi/anti join
+  * historical guilt diff                  -> as-of join + map diff
+  * raster tile assignment                 -> native XYZ slippy-map exprs
 
 The three radius searches share one primitive, ``geo.join.radius_join``.
-  * historical guilt diff                  -> snapshot join + map diff
-  * raster tile assignment                 -> native XYZ slippy-map exprs
 
 plus a training-data-pipeline suite (dedup, similarity search, text
 analysis, multimodal plumbing) under `datapipe/`.

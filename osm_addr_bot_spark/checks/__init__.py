@@ -1,5 +1,5 @@
 from osm_addr_bot_spark.checks.model import CategorySpec, CheckSpec
-from osm_addr_bot_spark.checks.registry import all_categories, all_checks, checks_meta_df
+from osm_addr_bot_spark.checks.registry import all_categories
 from osm_addr_bot_spark.checks.selectors import glob_to_like, normalize_expr, selector_expr
 from osm_addr_bot_spark.checks.fanout import fan_out_checks
 
@@ -7,8 +7,6 @@ __all__ = [
     "CategorySpec",
     "CheckSpec",
     "all_categories",
-    "all_checks",
-    "checks_meta_df",
     "glob_to_like",
     "normalize_expr",
     "selector_expr",

@@ -52,14 +52,8 @@ def _all_hits(categories: tuple[CategorySpec, ...]):
     return F.array(*entries)
 
 
-def fan_out_checks(
-    elements: DataFrame,
-    categories: tuple[CategorySpec, ...] | None = None,
-    fidelity: bool = False,
-) -> DataFrame:
-    if categories is None:
-        categories = all_categories(fidelity)
-    hits = _all_hits(categories)
+def fan_out_checks(elements: DataFrame, fidelity: bool = False) -> DataFrame:
+    hits = _all_hits(all_categories(fidelity))
     return elements.withColumn("c", F.explode(F.filter(hits, lambda x: x["hit"]))).select(
         F.col("c.category").alias("category"),
         F.col("c.min_changesets").alias("min_changesets"),

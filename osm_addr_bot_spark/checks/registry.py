@@ -333,19 +333,3 @@ def all_categories(fidelity: bool = False) -> tuple[CategorySpec, ...]:
 
     return (address, redundancy, syntax, tags_combination)
 
-
-def all_checks(fidelity: bool = False) -> tuple[CheckSpec, ...]:
-    return tuple(c for cat in all_categories(fidelity) for c in cat.checks)
-
-
-def checks_meta_df(spark, fidelity: bool = False):
-    """Small dim of per-check metadata (priority, has_post, critical) —
-    broadcast-joined wherever the pipeline needs rule attributes."""
-    rows = [
-        (cat.identifier, c.identifier, c.priority, c.critical, c.post_stage is not None)
-        for cat in all_categories(fidelity)
-        for c in cat.checks
-    ]
-    return spark.createDataFrame(
-        rows, "category string, check_id string, priority int, critical boolean, has_post boolean"
-    )

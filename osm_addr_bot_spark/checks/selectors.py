@@ -77,10 +77,3 @@ def normalize_expr(x: Column) -> Column:
     (reference utils.py:43-47)."""
     return F.regexp_replace(F.lower(F.trim(x)), r"\s{2,}", " ")
 
-
-NORMALIZE_SQL = "regexp_replace(lower(trim({x})), '\\s{{2,}}', ' ', 'g')"
-
-
-def normalize_sql(x: str) -> str:
-    """DuckDB-flavored SQL equivalent of normalize_expr (oracle parity)."""
-    return f"regexp_replace(lower(trim({x})), '\\s{{2,}}', ' ', 'g')"

@@ -108,17 +108,6 @@ def cell_of(lat: np.ndarray, lon: np.ndarray, res: int) -> np.ndarray:
     return pack(res, q, r)
 
 
-def cell_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Cell center back to lat/lon (deg) — test helper."""
-    res, q, r = unpack(cell)
-    e = np.vectorize(EDGE_M.get)(res)
-    x = e * 1.5 * q
-    y = e * (_SQRT3 / 2.0 * q + _SQRT3 * r)
-    lat = np.degrees(y / EARTH_RADIUS_M)
-    lon = np.degrees(x / (EARTH_RADIUS_M * math.cos(math.radians(HEX_LAT0_DEG))))
-    return lat, lon
-
-
 @lru_cache(maxsize=None)
 def _ring_offsets(k: int) -> np.ndarray:
     """All (dq, dr) with hex distance <= k, shape (3k(k+1)+1, 2)."""

@@ -5,11 +5,13 @@ The reference resolves "state of element E as of timestamp T" by
 compiling a dated Overpass query per timestamp group (reference
 overpass.py:92-98, consumed by is_editing_tags at 384-421); the engine's
 `elements_history` table carries the same information as SCD2 rows with
-[valid_from, valid_to) validity intervals (sources.py module docs), and
-`operators/guilt.py` inlines one such join. This module generalizes it:
-probe rows pick the single history version whose interval contains the
+[valid_from, valid_to) validity intervals (sources.py module docs).
+Probe rows pick the single history version whose interval contains the
 probe timestamp, LEFT semantics (a probe with no live version keeps a
-null payload — the reference's created-element case, quirk Q6).
+null payload — the reference's created-element case, quirk Q6). The J5
+guilt check (`operators/guilt.py`) calls it with the default
+``interval`` strategy; the ``snapshot_asof_join`` bench query uses
+``union``.
 
 Two physical strategies, output-equivalent (pinned by test):
 

@@ -43,8 +43,3 @@ def filter_priority(
         F.col("priority") >= F.col("_claim")
     ).drop("_claim")
 
-
-def drop_duplicate_entries(issues: DataFrame, keys=("category", "check_id", "changeset_id", "uid")) -> DataFrame:
-    """Set semantics on entry identity (reference overpass_entry.py:52-59:
-    hash/eq by uid; applied per check result set, overpass.py:239/270-272)."""
-    return issues.dropDuplicates(list(keys))

@@ -67,20 +67,6 @@ def whitelist_expr(tags: Column) -> Column:
     return F.forall(F.map_keys(tags), _ok)
 
 
-def equal_tags_expr(left: Column, right: Column) -> Column:
-    """Null-safe equality on the five address tags
-    (reference duplicate_search.py:21-27, 40-44): absent == absent.
-
-    Reference semantics form (X9); the pipeline's join itself uses the
-    pre-extracted scalar quintuple (``_eq_vals`` below) so the exchange
-    never ships the maps — this expression and that projection are
-    equivalent by construction (same element_at + eqNullSafe per key)."""
-    acc = F.lit(True)
-    for k in EQUAL_TAGS:
-        acc = acc & F.element_at(left, F.lit(k)).eqNullSafe(F.element_at(right, F.lit(k)))
-    return acc
-
-
 def skip_large_expr() -> Column:
     """bbox strictly under 1000 m in both dims keeps
     (reference overpass.py:58-70, config.py:48)."""
@@ -106,7 +92,6 @@ _CAND_SOURCED = frozenset(
 def duplicates_stage(
     issues: DataFrame,
     elements: DataFrame,
-    radius_m: float = DUPLICATE_RADIUS_M,
     salt_buckets: int = SALT_BUCKETS,
     hot_cell_threshold: int = 4000,
 ) -> DataFrame:
@@ -119,7 +104,7 @@ def duplicates_stage(
     # each at the pipeline's tail, measured r6)
     iss = issues.filter(skip_large_expr() & whitelist_expr(F.col("tags")))
 
-    k = cover_k(radius_m, 9)
+    k = cover_k(DUPLICATE_RADIUS_M, 9)
 
     cand_base = elements.filter(
         F.map_contains_key(F.col("tags"), F.lit("addr:housenumber"))
@@ -200,6 +185,8 @@ def duplicates_stage(
         F.col("element_type") == "node", F.col("c_element_type") != "node"
     ).otherwise(F.col("c_element_type") == "node")
 
+    # null-safe equality on the five address tags: absent == absent
+    # (reference duplicate_search.py:21-27, 40-44)
     eq_quintuple = F.lit(True)
     for i in range(len(EQUAL_TAGS)):
         eq_quintuple = eq_quintuple & F.col(f"_eq{i}").eqNullSafe(F.col(f"_ceq{i}"))
@@ -207,7 +194,9 @@ def duplicates_stage(
     # cheap tests first; radius_join then runs the bbox prefilter and
     # only its survivors pay the haversine
     where = opposite_family & (F.col("c_uid") != F.col("uid")) & eq_quintuple
-    links = radius_join(iss_probe, cand, radius_m, ["_cell", "_salt"], where=where).select(
+    links = radius_join(
+        iss_probe, cand, DUPLICATE_RADIUS_M, ["_cell", "_salt"], where=where
+    ).select(
         *_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset"
     )
 

@@ -74,9 +74,7 @@ def split_open_changesets(issues: DataFrame, changesets: DataFrame) -> tuple[Dat
     return closed, rescheduled
 
 
-def apply_user_gates(
-    issues: DataFrame, changesets: DataFrame, users: DataFrame, slim: bool = False
-) -> DataFrame:
+def apply_user_gates(issues: DataFrame, users: DataFrame) -> DataFrame:
     """Per-changeset user gates (reference main.py:227-243):
 
       * author missing from users dim (deleted) -> skip changeset
@@ -84,22 +82,11 @@ def apply_user_gates(
       * > MAX_ISSUES_PER_CHANGESET issues (per category) -> skip whole
         changeset, not truncate (main.py:240-243)
 
-    Input issues must carry `category` and `min_changesets`.
-    ``slim=True`` is the pipeline's slim-payload contract: issues
-    already carry an authoritative ``cs_uid`` (from the open-changeset
-    split's changesets join), so the data-sized join is skipped.
-    Explicit, not sniffed — a stray same-named column in a
-    non-pipeline caller must not silently change attribution.
+    Input issues must carry `category`, `min_changesets` and the
+    author's `cs_uid`, which the closed side of `split_open_changesets`
+    provides — no second data-sized changesets join here.
     """
-    if slim:
-        if "cs_uid" not in issues.columns:
-            raise ValueError("slim=True requires a cs_uid column on issues")
-        withuid = issues
-    else:
-        withuid = issues.drop("cs_uid").join(
-            changesets.select("changeset_id", "cs_uid"), "changeset_id", "left"  # data-sized
-        )
-    authored = withuid.join(
+    authored = issues.join(
         F.broadcast(users.withColumnRenamed("user_uid", "cs_uid")),  # users dim: tiny
         "cs_uid",
         "left",

@@ -20,11 +20,12 @@ category has no selectors; this engine evaluates each (check, element)
 row — a deterministic superset. Same verdicts whenever an element is
 claimed by a single check per category (always true in the fixtures).
 
-Spark mapping: snapshot scan S2 as an equi-join on
-(element_type, element_id) against the `elements_history` table filtered
-to the as-of interval (Iceberg time travel at scale), the map diff as a
-native `map_filter`, selectors as compiled exprs, per-changeset verdict
-as a bool_or aggregate broadcast back — no Python anywhere.
+Spark mapping: snapshot scan S2 as the interval as-of join
+(operators/asof.py) on (element_type, element_id) against the
+`elements_history` table (Iceberg time travel at scale), the map diff as
+a native `map_filter`, selectors as compiled exprs, the per-changeset
+verdict as a window max over (category, changeset_id) — no Python
+anywhere.
 """
 
 from __future__ import annotations
@@ -35,32 +36,6 @@ from pyspark.sql import functions as F
 from osm_addr_bot_spark.checks.registry import all_categories
 from osm_addr_bot_spark.checks.selectors import selector_expr
 from osm_addr_bot_spark.operators.asof import asof_join
-
-
-def _join_pre_snapshot(
-    issues: DataFrame, elements_history: DataFrame, strategy: str
-) -> DataFrame:
-    """issues + ``old_tags`` of the version live at timestamp-1 (null ->
-    element created in this changeset). One shared implementation — the
-    reusable as-of operator (operators/asof.py) — serves both guilt
-    entry points; ``strategy='union'`` is the sort-based scale path for
-    version-heavy histories (one shuffle regardless of versions/key)."""
-    hist = elements_history.select(
-        "element_type",
-        "element_id",
-        "valid_from",
-        "valid_to",
-        F.col("tags").alias("old_tags"),
-    )
-    probe = issues.withColumn("_asof_ts", F.col("timestamp") - 1)
-    return asof_join(
-        probe,
-        hist,
-        keys=["element_type", "element_id"],
-        probe_ts="_asof_ts",
-        payload=["old_tags"],
-        strategy=strategy,
-    ).drop("_asof_ts")
 
 
 def _diff_selector_expr(diff: Column, fidelity: bool = False) -> Column:
@@ -89,46 +64,35 @@ def _diff_selector_expr(diff: Column, fidelity: bool = False) -> Column:
     return F.when(has_cat_selectors, cat_expr).otherwise(check_expr)
 
 
-def guilty_changesets(
-    issues: DataFrame, elements_history: DataFrame, fidelity: bool = False,
-    strategy: str = "interval",
-) -> DataFrame:
-    """(category, changeset_id, guilty) for every changeset with issues.
-
-    The as-of LEFT join keeps issues whose history rows all miss the
-    interval, with null old_tags (=> created => guilty) — the
-    reference's missing-snapshot semantics rather than silently
-    vanishing."""
-    iss = issues.select(
-        "category", "check_id", "changeset_id", "element_type", "element_id", "timestamp", "tags"
-    )
-    joined = _join_pre_snapshot(iss, elements_history, strategy)
-    created = F.col("old_tags").isNull()
-    diff = F.map_filter(
-        F.col("tags"),
-        lambda k, v: ~v.eqNullSafe(F.element_at(F.col("old_tags"), k)),
-    )
-    row_guilty = F.when(created, F.lit(True)).otherwise(_diff_selector_expr(diff, fidelity))
-    return (
-        joined.withColumn("_g", row_guilty)
-        .groupBy("category", "changeset_id")
-        .agg(F.max(F.col("_g")).alias("guilty"))
-    )
-
-
 def filter_guilty(
-    issues: DataFrame, elements_history: DataFrame, fidelity: bool = False,
-    strategy: str = "interval",
+    issues: DataFrame, elements_history: DataFrame, fidelity: bool = False
 ) -> DataFrame:
     """Keep only issues of guilty changesets (reference main.py:221-223:
     'Not guilty' changesets are skipped entirely).
 
-    Single-pass form: per-row verdicts are window-aggregated over
-    (category, changeset_id) on the already-joined rows — one shuffle
-    instead of aggregate + semi join."""
+    Each issue gets the ``old_tags`` of the history version live at
+    timestamp-1 through the as-of LEFT join (operators/asof.py): an
+    issue whose history rows all miss the interval keeps null old_tags
+    (=> created => guilty), the reference's missing-snapshot semantics,
+    rather than silently vanishing. Per-row verdicts are then
+    window-aggregated over (category, changeset_id) on the joined rows —
+    one shuffle instead of aggregate + semi join."""
     from pyspark.sql import Window
 
-    joined = _join_pre_snapshot(issues, elements_history, strategy)
+    hist = elements_history.select(
+        "element_type",
+        "element_id",
+        "valid_from",
+        "valid_to",
+        F.col("tags").alias("old_tags"),
+    )
+    joined = asof_join(
+        issues.withColumn("_asof_ts", F.col("timestamp") - 1),
+        hist,
+        keys=["element_type", "element_id"],
+        probe_ts="_asof_ts",
+        payload=["old_tags"],
+    ).drop("_asof_ts")
     created = F.col("old_tags").isNull()
     diff = F.map_filter(
         F.col("tags"), lambda k, v: ~v.eqNullSafe(F.element_at(F.col("old_tags"), k))

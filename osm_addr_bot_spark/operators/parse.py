@@ -12,9 +12,11 @@ OverpassEntry semantics:
   * uid: node -> -id, way -> id + 2^27, relation -> id
                                        (reference overpass_entry.py:44-50)
   * untagged-element prune             (reference overpass.py:185-186)
-  * scan-window filter                 (reference overpass.py:218-219)
 
 plus the engine's dual spatial index (hex res-9 cell + S2 level-15 id).
+The scan window (reference overpass.py:218-219) is not applied here:
+``pipeline.run_pipeline`` parses once and filters the persisted elements,
+so the same scan also serves the unwindowed J1 candidate pool.
 
 The span-sequence invariant (kind, text, media_ref, order) is preserved
 because parsing only *reads* spans; `reassemble_documents` proves
@@ -63,17 +65,11 @@ def explode_spans(documents: DataFrame, keep_empty: bool = False) -> DataFrame:
     )
 
 
-def parse_elements(
-    documents: DataFrame,
-    start_ts: int | None = None,
-    end_ts: int | None = None,
-    with_index: bool = True,
-) -> DataFrame:
+def parse_elements(documents: DataFrame) -> DataFrame:
     """Parse kind='text' spans into the canonical elements DataFrame.
 
     All expressions are native (whole-stage codegen), the hex cell id
-    and the S2 cell id included — no Python workers; the index columns
-    are skippable via ``with_index`` for purely relational consumers.
+    and the S2 cell id included — no Python workers.
     """
     spans = explode_spans(documents).filter(F.col("kind") == "text")
     e = spans.select(
@@ -101,35 +97,26 @@ def parse_elements(
     # (reference overpass.py:185-186)
     e = e.filter(F.size("tags") > 0)
 
-    # scan-window re-filter (reference overpass.py:218-219)
-    if start_ts is not None:
-        e = e.filter(F.col("timestamp") >= F.lit(start_ts))
-    if end_ts is not None:
-        e = e.filter(F.col("timestamp") <= F.lit(end_ts))
-
-    derived = {
-        "bb_width_m": haversine_m(
-            F.col("minlat"), F.col("minlon"), F.col("minlat"), F.col("maxlon")
-        ),
-        "bb_height_m": haversine_m(
-            F.col("minlat"), F.col("minlon"), F.col("maxlat"), F.col("minlon")
-        ),
-        "uid": uid_expr(F.col("element_type"), F.col("element_id")),
-    }
-    if with_index:
-        # hex9 rides in the same projection as the bbox/uid columns
-        # (one withColumns batch — every extra DataFrame op re-analyzes
-        # the whole plan on the driver); s2_15 is the other native index
-        # column — r6 removed the last ArrowEvalPython from the parse
-        # path (the S2 pandas UDF cost ~82 core-s of Python worker
-        # start/init per sf0.1 run against <1 s of actual S2 math;
-        # with_s2_cell is property-tested bit-equal to the numpy
-        # reference)
-        derived["hex9"] = cell_expr(F.col("lat"), F.col("lon"), 9)
-    e = e.withColumns(derived)
-    if with_index:
-        e = with_s2_cell(e, level=15, out="s2_15")
-    return e
+    # hex9 rides in the same projection as the bbox/uid columns (one
+    # withColumns batch — every extra DataFrame op re-analyzes the whole
+    # plan on the driver); s2_15 is the other native index column — r6
+    # removed the last ArrowEvalPython from the parse path (the S2 pandas
+    # UDF cost ~82 core-s of Python worker start/init per sf0.1 run
+    # against <1 s of actual S2 math; with_s2_cell is property-tested
+    # bit-equal to the numpy reference)
+    e = e.withColumns(
+        {
+            "bb_width_m": haversine_m(
+                F.col("minlat"), F.col("minlon"), F.col("minlat"), F.col("maxlon")
+            ),
+            "bb_height_m": haversine_m(
+                F.col("minlat"), F.col("minlon"), F.col("maxlat"), F.col("minlon")
+            ),
+            "uid": uid_expr(F.col("element_type"), F.col("element_id")),
+            "hex9": cell_expr(F.col("lat"), F.col("lon"), 9),
+        }
+    )
+    return with_s2_cell(e, level=15, out="s2_15")
 
 
 def parse_media(documents: DataFrame) -> DataFrame:

@@ -72,10 +72,7 @@ def _pip_hits(issues: DataFrame, polygons: DataFrame, name_equi: bool) -> DataFr
 
 
 def place_not_in_area_stage(
-    issues: DataFrame,
-    polygons: DataFrame,
-    place_nodes: DataFrame,
-    radius_m: float = PLACE_PROXIMITY_M,
+    issues: DataFrame, polygons: DataFrame, place_nodes: DataFrame
 ) -> DataFrame:
     """J2: keep only issues with no containment (arm A) nor proximity
     (arm B) hit."""
@@ -83,9 +80,11 @@ def place_not_in_area_stage(
 
     hit_a = _pip_hits(iss, polygons, name_equi=True).select(*_ISSUE_KEY)
 
-    res = pick_res(radius_m)
+    res = pick_res(PLACE_PROXIMITY_M)
     probe = with_cover(
-        iss.withColumn("_name", F.element_at(F.col("tags"), F.lit("addr:place"))), radius_m, res
+        iss.withColumn("_name", F.element_at(F.col("tags"), F.lit("addr:place"))),
+        PLACE_PROXIMITY_M,
+        res,
     )
     nodes = place_nodes.select(
         cell_expr(F.col("lat"), F.col("lon"), res).alias("_cell"),
@@ -93,7 +92,9 @@ def place_not_in_area_stage(
         F.col("lat").alias("b_lat"),
         F.col("lon").alias("b_lon"),
     )
-    hit_b = radius_join(probe, nodes, radius_m, ["_cell", "_name"], "left_semi").select(
+    hit_b = radius_join(
+        probe, nodes, PLACE_PROXIMITY_M, ["_cell", "_name"], "left_semi"
+    ).select(
         *_ISSUE_KEY
     )
 

@@ -18,9 +18,10 @@ Entry order inside a group is the document's span sequence
 (doc_id, span_offset) — the deterministic analog of the reference's
 scan order.
 
-String assembly is not a hot path (one row per changeset); it runs as
-``applyInPandas`` over (category, changeset_id) groups — Arrow-batched,
-and the same pure function serves the golden tests directly.
+String assembly is not a hot path (one row per changeset): a native
+``collect_list`` gathers each (category, changeset_id) group's entries,
+and one scalar pandas UDF composes the messages of a whole Arrow batch
+of groups. The same pure function serves the golden tests directly.
 """
 
 from __future__ import annotations
@@ -110,41 +111,17 @@ def compose_message(
     return message
 
 
-REPORT_SCHEMA = (
-    "category string, changeset_id long, message string, n_issues long, is_critical boolean"
-)
-
-
-def compose_reports(
-    issues: DataFrame,
-    users: DataFrame,
-    changesets: DataFrame,
-    fidelity: bool = False,
-    slim: bool = False,
-) -> DataFrame:
+def compose_reports(issues: DataFrame, users: DataFrame, fidelity: bool = False) -> DataFrame:
     """issues (post all gates/dedup) -> one report row per
-    (category, changeset). Needs the author's changesets_count; the dims
-    are broadcast (J6/J7).
+    (category, changeset). Needs the author's changesets_count from the
+    broadcast users dim (J6/J7).
 
-    ``slim=True`` is the pipeline's slim-payload contract: the issues
-    frame already carries ``cs_uid`` (authoritative, from the
-    open-changeset split's changesets join) and ``street`` (extracted
-    from the tags map before it was dropped), so the data-sized
-    changesets join and the tags map are not needed here. Explicit, not
-    sniffed from column presence — a stray same-named column in a
-    non-pipeline caller must not silently change attribution."""
-    if slim:
-        missing = {"cs_uid", "street"} - set(issues.columns)
-        if missing:
-            raise ValueError(f"slim=True requires columns {sorted(missing)} on issues")
-        withuid = issues
-    else:
-        withuid = issues.drop("cs_uid", "street").join(
-            changesets.select("changeset_id", "cs_uid"), "changeset_id"  # data-sized
-        )
+    The issues carry the author's ``cs_uid`` (from the open-changeset
+    split's changesets join) and ``street`` (addr:street, extracted
+    before the pipeline dropped the tags map), so neither the
+    data-sized changesets dim nor the tags map is needed here."""
     enriched = (
-        withuid
-        .join(
+        issues.join(
             F.broadcast(users.selectExpr("user_uid as cs_uid", "changesets_count")),
             "cs_uid",
         )
@@ -155,11 +132,7 @@ def compose_reports(
             "critical",
             "element_type",
             "element_id",
-            (
-                F.col("street")
-                if slim
-                else F.element_at(F.col("tags"), F.lit("addr:street")).alias("street")
-            ),
+            "street",
             "doc_id",
             "span_offset",
             "changesets_count",

@@ -6,8 +6,6 @@ coordinates. This stage:
 
   * assigns every element (vector side) its slippy-map tile at a fixed
     zoom — a native expression, no UDF, no shuffle;
-  * validates every media span's declared ``media_ref`` against the
-    tile computed from its anchor (consistency metric);
   * produces the overlap report: per tile, how many vector elements and
     raster (media) spans land there — one hash aggregate keyed by the
     tile ref.
@@ -27,32 +25,24 @@ from osm_addr_bot_spark.config import DEFAULT_TILE_ZOOM
 from osm_addr_bot_spark.geo.tiles import xyz_tile_cols, xyz_tile_ref
 
 
-def assign_tiles(df: DataFrame, zoom: int = DEFAULT_TILE_ZOOM) -> DataFrame:
-    """Add tile_x / tile_y / tile_ref from lat/lon columns."""
-    x, y = xyz_tile_cols(F.col("lat"), F.col("lon"), zoom)
+def assign_tiles(df: DataFrame) -> DataFrame:
+    """Add tile_x / tile_y / tile_ref from lat/lon columns, at the
+    DEFAULT_TILE_ZOOM that datagen writes every media_ref at."""
+    x, y = xyz_tile_cols(F.col("lat"), F.col("lon"), DEFAULT_TILE_ZOOM)
     return df.withColumns(
         {
             "tile_x": x,
             "tile_y": y,
-            "tile_ref": xyz_tile_ref(F.col("lat"), F.col("lon"), zoom),
+            "tile_ref": xyz_tile_ref(F.col("lat"), F.col("lon"), DEFAULT_TILE_ZOOM),
         }
     )
 
 
-def media_ref_mismatches(media: DataFrame, zoom: int = DEFAULT_TILE_ZOOM) -> DataFrame:
-    """Media spans whose declared media_ref differs from the tile of
-    their anchor point — an integrity check (FIXTURES.md §4 'Tiles')."""
-    return media.filter(
-        xyz_tile_ref(F.col("lat"), F.col("lon"), zoom) != F.col("media_ref")
-    )
-
-
-def raster_vector_overlap(
-    elements: DataFrame, media: DataFrame, zoom: int = DEFAULT_TILE_ZOOM
-) -> DataFrame:
-    """Per-tile overlap: (tile_ref, n_elements, n_media, n_docs)."""
+def raster_vector_overlap(elements: DataFrame, media: DataFrame) -> DataFrame:
+    """Per-tile overlap: (tile_ref, n_elements, n_media, n_docs). Media
+    spans count under their declared media_ref."""
     vec = (
-        assign_tiles(elements.select("doc_id", "lat", "lon"), zoom)
+        assign_tiles(elements.select("doc_id", "lat", "lon"))
         .groupBy("tile_ref")
         .agg(
             F.count("*").alias("n_elements"),

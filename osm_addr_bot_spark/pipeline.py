@@ -26,6 +26,9 @@ per-partition lineage.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -154,14 +157,11 @@ def run_pipeline(
     fidelity: bool = False,
     stage_checkpoints: bool = False,
     ignore_already_discussed: bool = False,
-    zoom: int | None = None,
-    persist: bool = True,
 ) -> dict[str, DataFrame]:
     """Run everything; returns the output DataFrames. Sinks stay lazy,
     but the call itself runs jobs: under AQE each persisted reuse point
     (``_persist_cut``) runs its upstream here, and stage_checkpoints
-    materializes the stage outputs. ``persist=False`` keeps the plan
-    whole and runs nothing up front."""
+    materializes the stage outputs."""
     t = load_tables(spark, data_dir)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
 
@@ -216,21 +216,23 @@ def run_pipeline(
     if est < par:
         documents = documents.repartition(par)
 
-    # parse ONCE; the windowed view is a filter over the same plan so the
-    # persisted scan serves both the issue path and the J1 candidate pool
-    elements_all = parse_elements(documents)
-    if persist:
-        elements_all = _persist_cut(elements_all)
+    # parse ONCE; the scan window (reference overpass.py:218-219) is one
+    # fused filter over the persisted elements, so the same scan serves
+    # both the issue path and the unwindowed J1 candidate pool
+    elements_all = _persist_cut(parse_elements(documents))
     elements = elements_all
+    bounds = []
     if start_ts is not None:
-        elements = elements.filter(F.col("timestamp") >= F.lit(start_ts))
+        bounds.append(F.col("timestamp") >= F.lit(start_ts))
     if end_ts is not None:
-        elements = elements.filter(F.col("timestamp") <= F.lit(end_ts))
+        bounds.append(F.col("timestamp") <= F.lit(end_ts))
+    if bounds:
+        elements = elements.filter(reduce(operator.and_, bounds))
 
     issues0 = stages.run("fanout", lambda: fan_out_checks(elements, fidelity=fidelity))
     issues1 = filter_should_not_discuss(issues0, t["changesets"], ignore_already_discussed)
     issues2 = filter_priority(issues1, consider_post_fn=True)
-    if persist and not stage_checkpoints:
+    if not stage_checkpoints:
         issues2 = _persist_cut(issues2)  # feeds four spatial stages
     issues3 = stages.run(
         "post_stages",
@@ -239,7 +241,7 @@ def run_pipeline(
         ),
     )
 
-    if persist and not stage_checkpoints and ckpt is not None:
+    if not stage_checkpoints and ckpt is not None:
         # With a checkpoint, the spatial-stage output is read twice (the
         # closed-changeset chain AND the rescheduled backlog written at
         # commit). WITHOUT one, the single-pass guilt window is its only
@@ -276,17 +278,16 @@ def run_pipeline(
         guilty, consider_post_fn=False, scope=("category", "changeset_id", "uid")
     )
     final_issues = stages.run(
-        "final_issues", lambda: apply_user_gates(deduped, t["changesets"], t["users"], slim=True)
+        "final_issues", lambda: apply_user_gates(deduped, t["users"])
     )
-    if persist and not stage_checkpoints:
+    if not stage_checkpoints:
         final_issues = _persist_cut(final_issues)  # feeds reports + tiles + counts
 
-    reports = compose_reports(final_issues, t["users"], t["changesets"], fidelity, slim=True)
+    reports = compose_reports(final_issues, t["users"], fidelity)
 
     media = parse_media(documents)
-    kw = {"zoom": zoom} if zoom is not None else {}
-    tiles = assign_tiles(final_issues, **kw)
-    overlap = raster_vector_overlap(elements_all, media, **kw)
+    tiles = assign_tiles(final_issues)
+    overlap = raster_vector_overlap(elements_all, media)
 
     out = {
         "elements": elements,

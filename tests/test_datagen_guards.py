@@ -67,9 +67,7 @@ def test_watermark_probe_is_metadata_only(spark, tmp_path, monkeypatch):
 
     for action in ("first", "collect", "count", "take"):
         monkeypatch.setattr(DataFrame, action, boom)
-    out = run_pipeline(
-        spark, str(world), checkpoint_dir=str(tmp_path / "ckpt"), persist=False
-    )
+    out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "ckpt"))
     assert "commit" in out  # window was computed -> commit closure exists
     monkeypatch.undo()
     # and the computed window is the sidecar clock, capped by the
@@ -158,14 +156,12 @@ def test_bare_table_watermark_fallback_warns(spark, tmp_path):
     # metadata-only test above)
     with _warnings.catch_warnings():
         _warnings.simplefilter("error", RuntimeWarning)
-        run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c1"), persist=False)
+        run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c1"))
 
     # sidecar removed -> the documented fallback, loudly
     (world / "_table_stats.json").unlink()
     with pytest.warns(RuntimeWarning, match="FULL SCAN"):
-        out = run_pipeline(
-            spark, str(world), checkpoint_dir=str(tmp_path / "c2"), persist=False
-        )
+        out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c2"))
     assert "commit" in out  # fallback still computes a window
 
 

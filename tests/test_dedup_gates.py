@@ -126,6 +126,7 @@ def test_user_gates(spark):
         # cs 4: 101 issues -> whole changeset dropped (F23 cap)
         mk_issue(changeset_id=4, element_id=100 + i) for i in range(101)
     ]
-    out = apply_user_gates(issues_df(spark, rows), cs, users)
+    closed, _ = split_open_changesets(issues_df(spark, rows), cs)
+    out = apply_user_gates(closed, users)
     got = {(r["changeset_id"], r["category"]) for r in out.select("changeset_id", "category").collect()}
     assert got == {(1, "ADDRESS"), (2, "TAGS_COMBINATION")}

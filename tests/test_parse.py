@@ -25,7 +25,7 @@ def test_span_roundtrip_invariant(spark, documents):
 
 
 def test_parse_elements_schema_and_uid(spark, documents):
-    e = parse_elements(documents, with_index=False).cache()
+    e = parse_elements(documents).cache()
     rows = e.collect()
     assert rows, "no elements parsed"
     for r in rows:
@@ -41,14 +41,17 @@ def test_parse_elements_schema_and_uid(spark, documents):
     e.unpersist()
 
 
-def test_parse_window_filter(spark, documents):
+def test_parse_window_filter(spark, synth_dir, documents):
+    """The scan window run_pipeline applies to the parsed elements
+    (reference overpass.py:218-219)."""
     from osm_addr_bot_spark.datagen import T0, WINDOW_S
+    from osm_addr_bot_spark.pipeline import run_pipeline
 
-    all_e = parse_elements(documents, with_index=False).count()
-    windowed = parse_elements(documents, start_ts=T0, end_ts=T0 + WINDOW_S, with_index=False).count()
-    assert windowed == all_e  # generator stays in-window
-    none = parse_elements(documents, start_ts=0, end_ts=1, with_index=False).count()
-    assert none == 0
+    all_e = parse_elements(documents).count()
+    windowed = run_pipeline(spark, synth_dir, start_ts=T0, end_ts=T0 + WINDOW_S)["elements"]
+    assert windowed.count() == all_e  # generator stays in-window
+    none = run_pipeline(spark, synth_dir, start_ts=0, end_ts=1)["elements"]
+    assert none.count() == 0
 
 
 def test_parse_media_tiles_match(spark, documents):

@@ -69,14 +69,16 @@ def test_pipeline_end_to_end(spark, synth_dir):
     reports.unpersist()
 
 
-def test_reuse_points_cut_plan_and_keep_lineage(spark, synth_dir):
+def test_reuse_points_cut_plan_and_keep_lineage(spark, synth_dir, documents):
     """The persisted reuse points are cut from the logical plan: the final
     issues plan from one leaf, not from the documents scan. The cut keeps
     RDD lineage: clearCache() releases every block the run persisted, and
     the same returned frames recompute to the same rows. A
     (local)checkpoint cut leaves its blocks outside the CacheManager."""
+    from osm_addr_bot_spark.operators.parse import parse_elements
+
     window = {"start_ts": T0, "end_ts": T0 + WINDOW_S}
-    assert _scans_documents(run_pipeline(spark, synth_dir, persist=False, **window)["issues"])
+    assert _scans_documents(parse_elements(documents))
 
     jsc = spark.sparkContext._jsc
     persisted_before = set(jsc.getPersistentRDDs().keys())

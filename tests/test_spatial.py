@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import PLACE_PROXIMITY_M, STREET_TIERS_M
 from osm_addr_bot_spark.operators.duplicates import duplicates_stage
-from osm_addr_bot_spark.operators.guilt import filter_guilty, guilty_changesets
+from osm_addr_bot_spark.operators.guilt import filter_guilty
 from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in_area_stage
 from osm_addr_bot_spark.operators.streets import street_names_stage
 from tests.helpers import elements_df, issues_df, mk_issue, offset
@@ -299,15 +299,15 @@ def test_guilt_semantics(spark):
         spark,
         [
             ("node", 1, 0, ts, {"addr:postcode": "old"}),
+            # a later version of node 1: the as-of join must pick the
+            # version live at ts-1, not this one
+            ("node", 1, ts, ts + 50, {"addr:postcode": "mid"}),
             ("node", 2, 0, ts, {"addr:postcode": "bad", "note": "old"}),
             ("node", 4, 0, ts, {"addr:postcode": "bad"}),
         ],
     )
-    g = {r["changeset_id"]: r["guilty"] for r in guilty_changesets(issues, hist).collect()}
-    assert g == {1: True, 2: False, 3: True, 4: False}
-
-    kept = filter_guilty(issues, hist)
-    assert {r["changeset_id"] for r in kept.collect()} == {1, 3}
+    kept = filter_guilty(issues, hist).select("changeset_id", "element_id").collect()
+    assert {tuple(r) for r in kept} == {(1, 1), (3, 3)}
 
 
 def test_guilt_changeset_level(spark):
@@ -399,38 +399,3 @@ def test_spatial_plans_have_no_python(spark):
         semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
         assert any("ASIN" in ln and f"<= {float(radius)}" in ln for ln in semi), plan
 
-
-def test_guilt_strategies_equivalent(spark):
-    """J5 now routes through the shared as-of operator (VERDICT r3 #6):
-    the union (sort-based scale path) and interval strategies must give
-    identical guilt verdicts and identical surviving issue sets."""
-    ts = 1_700_000_000
-    issues = issues_df(
-        spark,
-        [
-            mk_issue(changeset_id=1, element_id=1, check_id="BAD_POSTCODE_FORMAT",
-                     tags={"addr:postcode": "bad"}, timestamp=ts),
-            mk_issue(changeset_id=2, element_id=2, check_id="BAD_POSTCODE_FORMAT",
-                     tags={"addr:postcode": "bad", "note": "new"}, timestamp=ts),
-            mk_issue(changeset_id=3, element_id=3, check_id="BAD_POSTCODE_FORMAT",
-                     tags={"addr:postcode": "bad"}, timestamp=ts),
-        ],
-    )
-    hist = _hist(
-        spark,
-        [
-            ("node", 1, 0, ts, {"addr:postcode": "old"}),
-            ("node", 1, ts, ts + 50, {"addr:postcode": "mid"}),  # multi-version key
-            ("node", 2, 0, ts, {"addr:postcode": "bad", "note": "old"}),
-        ],
-    )
-    g_i = {r["changeset_id"]: r["guilty"]
-           for r in guilty_changesets(issues, hist, strategy="interval").collect()}
-    g_u = {r["changeset_id"]: r["guilty"]
-           for r in guilty_changesets(issues, hist, strategy="union").collect()}
-    assert g_i == g_u == {1: True, 2: False, 3: True}
-    kept_i = {tuple(r) for r in filter_guilty(issues, hist, strategy="interval")
-              .select("changeset_id", "element_id").collect()}
-    kept_u = {tuple(r) for r in filter_guilty(issues, hist, strategy="union")
-              .select("changeset_id", "element_id").collect()}
-    assert kept_i == kept_u
