@@ -35,6 +35,8 @@ def main() -> int:
         "(the reference's DRY_RUN console sink, main.py:247-252)",
     )
     args = ap.parse_args()
+    if args.stage_checkpoints and not args.checkpoint_dir:
+        ap.error("--stage-checkpoints requires --checkpoint-dir")
 
     os.environ.setdefault("SPARK_SUBMIT_MODE", "1")
     from osm_addr_bot_spark.pipeline import run_pipeline
@@ -59,16 +61,16 @@ def main() -> int:
         stats["reports"] = out["reports"].count()
     else:
         # Two-phase materialization (r3 serial-floor cut, BENCH.md).
-        # run_pipeline has already filled the persisted reuse points
-        # (pipeline._persist_cut: under AQE, cutting each one runs its
-        # upstream), so every sink starts from completed blocks. Phase 1
-        # computes `issues` from the final-issues blocks. Phase 2 then
-        # runs `reports` and `overlap` as CONCURRENT jobs from driver
-        # threads — they read those blocks and the parsed elements plus
-        # disjoint fresh work (report composition vs the media re-parse
-        # + tile join), so their stages interleave and each fills the
-        # other's barrier tails instead of idling cores between
-        # sequential jobs.
+        # run_pipeline has already materialized its reuse points
+        # (StageRunner: persisted cuts, which under AQE run their
+        # upstream, or stage-checkpoint parquet), so every sink starts
+        # from completed data. Phase 1 computes `issues` from the final
+        # issues. Phase 2 then runs `reports` and `overlap` as
+        # CONCURRENT jobs from driver threads — they read the final
+        # issues and the parsed elements plus disjoint fresh work
+        # (report composition vs the media re-parse + tile join), so
+        # their stages interleave and each fills the other's barrier
+        # tails instead of idling cores between sequential jobs.
         from concurrent.futures import ThreadPoolExecutor
 
         def materialize(name: str) -> int:

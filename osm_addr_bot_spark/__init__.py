@@ -22,7 +22,7 @@ internalizes those operators as native Spark stages:
 The three radius searches share one primitive, ``geo.join.radius_join``.
 
 plus a training-data-pipeline suite (dedup, similarity search, text
-analysis, multimodal plumbing) under `datapipe/`.
+analysis) under `datapipe/`.
 
 Design rules (see SURVEY.md):
   - DataFrame/SQL first; Catalyst does pushdown/pruning/join selection.

@@ -2,8 +2,8 @@
 
 First-class components beyond the reference's own operators (task
 brief): deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard),
-similarity search (brute-force + LSH-bucketed ANN), text analysis
-(language-ID, quality, tokens, fingerprints), and multimodal plumbing.
+similarity search (brute-force + LSH-bucketed ANN), and text analysis
+(language-ID, quality, tokens, fingerprints).
 
 Design rule shared by all of them: every hash is md5-derived so the
 DuckDB oracle can reproduce results bit-for-bit (Spark's hash() and

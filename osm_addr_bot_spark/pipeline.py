@@ -15,23 +15,23 @@ Shuffle topology (the part the reference outsources to Overpass):
   * grouping: one hash-partition by (category, changeset_id)
   * dims: broadcast
 Reuse points (the parsed elements, the pre-spatial issues, the spatial
-output when a checkpoint reads it twice, the final issues) are persisted
-DISK_ONLY and cut from the logical plan (``_persist_cut``): downstream
-operators and every sink plan from one leaf over the persisted RDD, so
-the upstream plan is analysed once and its exchanges run once. The RDD
-keeps its lineage, so lost blocks recompute. Stage boundaries can
-materialize through StageRunner for kill-restart resume with
-per-partition lineage.
+output, the final issues) materialize once: downstream operators and
+every sink plan from one leaf over them, so the upstream plan is
+analysed once and its exchanges run once. The parsed elements are
+persisted DISK_ONLY and cut from the logical plan (``_persist_cut``);
+the three stage outputs go through StageRunner, which does the same
+cut, or with stage checkpoints writes parquet keyed by the run's inputs
+for kill-restart resume with per-partition lineage.
 """
 
 from __future__ import annotations
 
 import operator
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from osm_addr_bot_spark.checks import fan_out_checks
 from osm_addr_bot_spark.operators.dedup import filter_priority
@@ -47,34 +47,8 @@ from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in
 from osm_addr_bot_spark.operators.report import compose_reports
 from osm_addr_bot_spark.operators.streets import street_names_stage
 from osm_addr_bot_spark.operators.tiles import assign_tiles, raster_vector_overlap
-from osm_addr_bot_spark.state.checkpoint import Checkpoint, StageRunner
-
-
-# Storage of the reuse points: deserialized MEMORY_AND_DISK rows of
-# map-typed tags create heavy GC pressure at millions of rows; DISK_ONLY
-# against a fast local dir (tmpfs/NVMe) is GC-free and measured faster.
-# Blocks live in the CacheManager (spark.catalog.clearCache() releases
-# them) and recompute from lineage when lost.
-PERSIST_LEVEL = StorageLevel.DISK_ONLY
-
-
-def _persist_cut(df: DataFrame) -> DataFrame:
-    """Persist ``df`` at PERSIST_LEVEL and return the same rows as a
-    frame whose logical plan is a single leaf over the persisted frame's
-    executed RDD — the LogicalRDD that Dataset.checkpoint builds, carrying
-    the origin's statistics. Every later operator and sink then analyses
-    and plans from that leaf instead of the whole upstream plan, and the
-    upstream exchanges run once, shared through the RDD.
-
-    Unlike (local)checkpoint, nothing is copied out of the CacheManager:
-    the RDD reads the persisted blocks and keeps its lineage, so a lost
-    or released block recomputes. Under AQE, building the RDD runs the
-    upstream query stages, so the reuse point materializes here."""
-    df = df.persist(PERSIST_LEVEL)
-    jdf, jvm = df._jdf, df.sparkSession._jvm  # noqa: SLF001 — no public API builds this leaf
-    logical_rdd = getattr(getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$"), "MODULE$")
-    leaf = logical_rdd.fromDataset(jdf.queryExecution().toRdd(), jdf, False)
-    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jdf.sparkSession(), leaf), df.sparkSession)
+from osm_addr_bot_spark.sources import source_clock
+from osm_addr_bot_spark.state.checkpoint import Checkpoint, StageRunner, _persist_cut
 
 
 def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
@@ -101,7 +75,6 @@ def _estimated_scan_partitions(spark: SparkSession, table_path: str) -> int | No
     decision). None when the path isn't a local directory or the
     setting doesn't parse; the caller then asks the scan itself."""
     import math
-    import os
     import re
 
     if not os.path.isdir(table_path):
@@ -159,11 +132,14 @@ def run_pipeline(
     ignore_already_discussed: bool = False,
 ) -> dict[str, DataFrame]:
     """Run everything; returns the output DataFrames. Sinks stay lazy,
-    but the call itself runs jobs: under AQE each persisted reuse point
-    (``_persist_cut``) runs its upstream here, and stage_checkpoints
-    materializes the stage outputs."""
+    but the call itself runs jobs: each reuse point materializes here
+    (under AQE a persisted cut runs its upstream; a stage checkpoint
+    writes parquet under ``checkpoint_dir``, which it requires)."""
+    if stage_checkpoints and not checkpoint_dir:
+        raise ValueError("stage_checkpoints=True needs a checkpoint_dir to write its stages under")
     t = load_tables(spark, data_dir)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
+    clock = source_clock(data_dir)
 
     if ckpt and (start_ts is None or end_ts is None):
         # source clock (S4, reference timestamp_osm_base): METADATA ONLY
@@ -171,9 +147,7 @@ def run_pipeline(
         # stats sidecar) — at 100 TB a full scan to learn one number is
         # the first thing a cluster bill notices. The scan below is the
         # legacy fallback for bare tables only.
-        from osm_addr_bot_spark.sources import source_clock
-
-        src_max = source_clock(data_dir)
+        src_max = clock
         if src_max is None:
             # loud by design (VERDICT r3 #4): at 100 TB this fallback is
             # a full scan of the documents table to learn ONE number;
@@ -197,7 +171,18 @@ def run_pipeline(
         start_ts, end_ts = ckpt.compute_window(now=src_max, source_max_ts=src_max + 1)
 
     run_id = f"run-{end_ts if end_ts is not None else 'full'}"
-    stages = StageRunner(spark, checkpoint_dir or "/tmp/osm_ckpt", run_id, enabled=stage_checkpoints)
+    # a stage replays only for the inputs it was written from; the
+    # backlog version is an input of the final issues
+    stage_key = {
+        "data_dir": os.path.realpath(data_dir),
+        "start_ts": start_ts,
+        "end_ts": end_ts,
+        "fidelity": fidelity,
+        "ignore_already_discussed": ignore_already_discussed,
+        "source_clock": clock,
+        "backlog": ckpt.backlog_version() if ckpt else None,
+    }
+    stages = StageRunner(spark, ckpt.stage_dir(run_id) if stage_checkpoints else None, stage_key)
 
     # If the documents table arrives as few large files, fan the rows out
     # across the cluster BEFORE the expensive JSON-parse + cell-index
@@ -229,27 +214,21 @@ def run_pipeline(
     if bounds:
         elements = elements.filter(reduce(operator.and_, bounds))
 
-    issues0 = stages.run("fanout", lambda: fan_out_checks(elements, fidelity=fidelity))
-    issues1 = filter_should_not_discuss(issues0, t["changesets"], ignore_already_discussed)
-    issues2 = filter_priority(issues1, consider_post_fn=True)
-    if not stage_checkpoints:
-        issues2 = _persist_cut(issues2)  # feeds four spatial stages
-    issues3 = stages.run(
+    issues2 = stages.run(  # feeds four spatial stages
+        "fanout",
+        lambda: filter_priority(
+            filter_should_not_discuss(
+                fan_out_checks(elements, fidelity=fidelity), t["changesets"], ignore_already_discussed
+            ),
+            consider_post_fn=True,
+        ),
+    )
+    issues3 = stages.run(  # feeds the closed-changeset chain and the backlog
         "post_stages",
         lambda: apply_post_stages(
             issues2, elements_all, t["polygons"], t["streets"], t["place_nodes"]
         ),
     )
-
-    if not stage_checkpoints and ckpt is not None:
-        # With a checkpoint, the spatial-stage output is read twice (the
-        # closed-changeset chain AND the rescheduled backlog written at
-        # commit). WITHOUT one, the single-pass guilt window is its only
-        # materialized consumer — persisting 4.7M tag-mapped rows to
-        # write them once and read them once measurably pays the storage
-        # round-trip for nothing (r3 serial-floor audit; the old comment
-        # here described the two-pass guilt form, long gone).
-        issues3 = _persist_cut(issues3)
 
     # J8/T3: merge prior-run backlog before the per-changeset phase
     merged = issues3
@@ -277,11 +256,9 @@ def run_pipeline(
     deduped = filter_priority(
         guilty, consider_post_fn=False, scope=("category", "changeset_id", "uid")
     )
-    final_issues = stages.run(
+    final_issues = stages.run(  # feeds reports + tiles + counts
         "final_issues", lambda: apply_user_gates(deduped, t["users"])
     )
-    if not stage_checkpoints:
-        final_issues = _persist_cut(final_issues)  # feeds reports + tiles + counts
 
     reports = compose_reports(final_issues, t["users"], fidelity)
 
@@ -301,7 +278,8 @@ def run_pipeline(
     # caller materializes its sinks first, then calls out["commit"]() to
     # write reports/backlog and advance the watermark in one atomic
     # rename. Committing here would let a post-commit sink failure skip
-    # the window permanently.
+    # the window permanently. The commit deletes the window's stage
+    # checkpoints: read the outputs before it.
     if ckpt and end_ts is not None:
         out["commit"] = lambda: ckpt.commit(
             end_ts, rescheduled, reports, metrics=stages.metrics or None

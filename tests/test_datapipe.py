@@ -1,5 +1,5 @@
 """Training-data-pipeline operators: dedup family, similarity search,
-text analysis, multimodal plumbing."""
+text analysis."""
 
 import math
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.datapipe import dedup as dd
-from osm_addr_bot_spark.datapipe import multimodal as mm
 from osm_addr_bot_spark.datapipe import similarity as sim
 from osm_addr_bot_spark.datapipe import text as tx
 
@@ -175,42 +174,6 @@ def test_fingerprints_stable(spark):
     assert out[1] == out[2]  # normalization collapses case/space
 
 
-def test_multimodal_decode_plumbing(spark):
-    rows = [
-        (1, "d1", "image", bytearray(b"\x89PNGfakebytes"), {"fmt": "png"}),
-        (2, "d1", "video", bytearray(b"RIFFfakevideobytes"), {"fmt": "avi"}),
-    ]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    dec = mm.decode_media(media, feat_dim=4).collect()
-    assert len(dec) == 2
-    for r in dec:
-        assert 16 <= r["width"] <= 256 and len(r["feat"]) == 4
-    # determinism
-    dec2 = mm.decode_media(media, feat_dim=4).collect()
-    assert sorted(map(str, dec)) == sorted(map(str, dec2))
-
-    frames = mm.sample_frames(media).collect()
-    assert frames and all(r["media_id"] == 2 for r in frames)  # only video
-    assert [r["frame_idx"] for r in frames] == list(range(len(frames)))
-
-    rs = mm.resize_stub(mm.decode_media(media, feat_dim=4), target=224).collect()
-    for r in rs:
-        assert max(r["out_width"], r["out_height"]) == 224
-
-
-def test_strict_decode_raises(spark):
-    media = spark.createDataFrame(
-        [(1, "d1", "image", bytearray(b"x"), {})], mm.MEDIA_SCHEMA
-    )
-    old = mm.STRICT_DECODE
-    mm.STRICT_DECODE = True
-    try:
-        with pytest.raises(Exception):
-            mm.decode_media(media).collect()
-    finally:
-        mm.STRICT_DECODE = old
-
-
 def test_ngram_jaccard_max_df_conservative(spark, docs):
     """The df cap only removes pairs (under-estimates), never adds."""
     exact = {
@@ -288,17 +251,6 @@ def test_simhash_width_metadata_guard(spark, docs):
     assert (1, 2) in {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     with pytest.raises(ValueError, match="bits=32"):
         dd.simhash_near_pairs(fp32, max_hamming=8, bits=64)
-
-
-def test_audio_video_guard_fallback():
-    """VERDICT r3 #5: audio/video decode rides the same import-guard
-    pattern as images — absent decoder (or undecodable payload) falls
-    back to the deterministic stub, never aborts the batch."""
-    import osm_addr_bot_spark.datapipe.multimodal as mm
-
-    payload = b"not-a-real-media-file"
-    for kind in ("image", "audio", "video"):
-        assert mm._decode_dims(payload, kind) == mm._fake_dims(payload)
 
 
 # ------------------------------------------------------- dedup clustering

@@ -2,18 +2,23 @@
 checkpoint/resume semantics."""
 
 import json
+import os
 import re
 import shutil
 from types import SimpleNamespace
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
-from osm_addr_bot_spark.datagen import T0, WINDOW_S
+from osm_addr_bot_spark.datagen import T0, WINDOW_S, ensure_dataset
 from osm_addr_bot_spark.operators.report import compose_message
 from osm_addr_bot_spark.pipeline import _estimated_scan_partitions, load_tables, run_pipeline
 from osm_addr_bot_spark.state.checkpoint import Checkpoint
+
+OTHER_SYNTH_DIR = "/tmp/osm_addr_bot_synth/test-seed7"
 
 
 def _digest(df):
@@ -180,55 +185,201 @@ def test_compose_message_street_title_grouping():
     assert '"Polna"' not in msg2
 
 
+def _issue_keys(df):
+    return {(r["category"], r["check_id"], r["changeset_id"], r["uid"]) for r in df.collect()}
+
+
+def _manifests(root):
+    return {p: p.read_text() for p in root.rglob("manifest.json")}
+
+
+def _assert_bounded_state(ck, run_id):
+    """After a commit: no stage dir for the window, exactly one backlog
+    version, and nothing staged or superseded left behind."""
+    assert not (ck / "stages" / run_id).exists()
+    assert len(list((ck / "rescheduled").iterdir())) == 1
+    assert not [p for p in ck.rglob("*") if p.name.startswith(("_old-", "_staging-"))]
+
+
 def test_checkpoint_resume(spark, synth_dir, tmp_path):
-    """Kill-after-stage resume: run once with stage checkpoints, corrupt
-    nothing, run again — stages replay from manifests and outputs agree
-    (ST2/ST3; resume test of FIXTURES.md §5)."""
+    """Kill-after-stage resume: run once with stage checkpoints and, before
+    the commit (where a real kill-restart happens), run again — stages
+    replay from manifests and outputs agree (ST2/ST3; resume test of
+    FIXTURES.md §5). The commit then deletes the window's stages."""
     ck = tmp_path / "ckpt"
-    out1 = run_pipeline(
-        spark, synth_dir, checkpoint_dir=str(ck), start_ts=T0, end_ts=T0 + WINDOW_S,
-        stage_checkpoints=True,
-    )
+    window = {"checkpoint_dir": str(ck), "start_ts": T0, "end_ts": T0 + WINDOW_S, "stage_checkpoints": True}
+    run_id = f"run-{T0 + WINDOW_S}"
+    stage_dir = ck / "stages" / run_id
+    out1 = run_pipeline(spark, synth_dir, **window)
     n1 = out1["issues"].count()
-    rows1 = {
-        (r["category"], r["check_id"], r["changeset_id"], r["uid"])
-        for r in out1["issues"].collect()
-    }
+    rows1 = _issue_keys(out1["issues"])
+
+    # lineage manifests exist with per-partition rows, read from the
+    # written files' footers
+    m = json.loads((stage_dir / "fanout" / "manifest.json").read_text())
+    assert m["rows"] == sum(p["rows"] for p in m["partitions"])
+    assert m["rows"] == spark.read.parquet(str(stage_dir / "fanout" / "data")).count() > 0
+    manifests = _manifests(stage_dir)
+    assert len(manifests) == 3
+
+    # simulate restart: second run must reuse committed stages (same rows)
+    out2 = run_pipeline(spark, synth_dir, **window)
+    rows2 = _issue_keys(out2["issues"])
+    assert rows1 == rows2 and n1 == len(rows1)
+    assert _manifests(stage_dir) == manifests
+
+    # partial kill: drop a late-stage checkpoint, keep early ones -> rerun
+    # recomputes only the missing tail and still agrees
+    shutil.rmtree(stage_dir / "final_issues")
+    out3 = run_pipeline(spark, synth_dir, **window)
+    assert _issue_keys(out3["issues"]) == rows1
 
     # state writes LAST: watermark must not move until the caller commits
     ckpt = Checkpoint(str(ck))
     assert ckpt.read_watermark() is None
-    out1["commit"]()
+    out3["commit"]()
     assert ckpt.read_watermark() == T0 + WINDOW_S
+    _assert_bounded_state(ck, run_id)
 
-    # lineage manifests exist with per-partition rows
-    man = ck / "stages" / f"run-{T0 + WINDOW_S}" / "fanout" / "manifest.json"
-    m = json.loads(man.read_text())
-    assert m["rows"] == sum(p["rows"] for p in m["partitions"])
 
-    # simulate restart: second run must reuse committed stages (same rows)
-    out2 = run_pipeline(
-        spark, synth_dir, checkpoint_dir=str(ck), start_ts=T0, end_ts=T0 + WINDOW_S,
-        stage_checkpoints=True,
-    )
-    rows2 = {
-        (r["category"], r["check_id"], r["changeset_id"], r["uid"])
-        for r in out2["issues"].collect()
-    }
-    assert rows1 == rows2 and n1 == len(rows1)
+def test_stage_checkpoints_never_replay_other_inputs(spark, synth_dir, tmp_path):
+    """Two worlds, one checkpoint dir, one window: the second world's
+    stages are not replayed from the first's, and rerunning the second
+    world with the same inputs replays its own stages untouched."""
+    other = str(ensure_dataset(OTHER_SYNTH_DIR, n_docs=300, seed=7))
+    window = {"start_ts": T0, "end_ts": T0 + WINDOW_S}
+    fresh = {d: _digest(run_pipeline(spark, d, **window)["issues"]) for d in (synth_dir, other)}
+    assert fresh[synth_dir] != fresh[other]
 
-    # partial kill: drop a late-stage checkpoint, keep early ones -> rerun
-    # recomputes only the missing tail and still agrees
-    shutil.rmtree(ck / "stages" / f"run-{T0 + WINDOW_S}" / "final_issues")
-    out3 = run_pipeline(
-        spark, synth_dir, checkpoint_dir=str(ck), start_ts=T0, end_ts=T0 + WINDOW_S,
-        stage_checkpoints=True,
-    )
-    rows3 = {
-        (r["category"], r["check_id"], r["changeset_id"], r["uid"])
-        for r in out3["issues"].collect()
-    }
-    assert rows3 == rows1
+    staged = {"checkpoint_dir": str(tmp_path / "ckpt"), "stage_checkpoints": True, **window}
+    assert _digest(run_pipeline(spark, synth_dir, **staged)["issues"]) == fresh[synth_dir]
+    assert _digest(run_pipeline(spark, other, **staged)["issues"]) == fresh[other]
+    manifests = _manifests(tmp_path / "ckpt")
+    assert len(manifests) == 3
+    assert _digest(run_pipeline(spark, other, **staged)["issues"]) == fresh[other]
+    assert _manifests(tmp_path / "ckpt") == manifests
+
+
+class _Fault(Exception):
+    pass
+
+
+def _on_call(owner, name, action):
+    """Replace owner.name by a wrapper that calls action(n) before the
+    n-th call (counting from 1)."""
+    orig, calls = getattr(owner, name), []
+
+    def wrapper(*a, **kw):
+        calls.append(None)
+        action(len(calls))
+        return orig(*a, **kw)
+
+    return wrapper, calls
+
+
+def test_commit_converges_after_a_fault_at_every_write_and_rename(spark, synth_dir, tmp_path, monkeypatch):
+    """Commit w1, then make each parquet write and each rename inside
+    w2's commit raise in turn. The backlog stays readable after every
+    fault, and rerunning w2 (without stage checkpoints, so nothing
+    replays) converges to the uninterrupted w1+w2 state:
+    watermark, backlog rows and w2's committed reports. w2 reads a copy
+    of the world in which w1's open changesets have closed, so w1's
+    backlog rows report in w2 — a rerun that merged any other backlog
+    would change those reports."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    half = WINDOW_S // 2
+    w1 = {"start_ts": T0, "end_ts": T0 + half}
+    w2 = {"start_ts": T0 + half, "end_ts": T0 + WINDOW_S}
+    run_id = f"run-{T0 + WINDOW_S}"
+
+    def run(ck, world, window, stage_checkpoints=True):
+        return run_pipeline(spark, str(world), checkpoint_dir=str(ck), stage_checkpoints=stage_checkpoints, **window)
+
+    def state(ck):
+        backlog = Checkpoint(ck).read_rescheduled(spark)
+        return (
+            Checkpoint(ck).read_watermark(),
+            _digest(backlog) if backlog is not None else None,
+            _digest(spark.read.parquet(str(ck / "reports" / run_id))),
+        )
+
+    entry = ("doc_id", "span_offset", "check_id")
+    after_w1 = tmp_path / "after-w1"
+    run(after_w1, synth_dir, w1)["commit"]()
+    backlog = Checkpoint(after_w1).read_rescheduled(spark).select("changeset_id", *entry).collect()
+    backlog_cs = {r[0] for r in backlog}
+
+    world2 = tmp_path / "world2"
+    shutil.copytree(synth_dir, world2)
+    cs_path = next((world2 / "changesets.parquet").glob("*.parquet"))
+    cs = pq.read_table(cs_path)
+    still_open = pa.array([
+        o and c not in backlog_cs
+        for c, o in zip(cs.column("changeset_id").to_pylist(), cs.column("open").to_pylist())
+    ])
+    pq.write_table(cs.set_column(cs.schema.get_field_index("open"), "open", still_open), cs_path)
+
+    # w2's stages, written once and replayed by the clean and each faulted attempt
+    staged = tmp_path / "staged"
+    shutil.copytree(after_w1, staged)
+    run(staged, world2, w2)
+
+    clean = tmp_path / "clean"
+    shutil.copytree(staged, clean)
+    out = run(clean, world2, w2)
+    final = set(out["issues"].select(*entry).collect())
+    assert final & {tuple(r[1:]) for r in backlog}, "no w1 backlog row closes and reports in w2"
+    counts = {}
+    with monkeypatch.context() as m:
+        for owner, name in ((os, "rename"), (DataFrameWriter, "parquet")):
+            wrapper, counts[name] = _on_call(owner, name, lambda n: None)
+            m.setattr(owner, name, wrapper)
+        out["commit"]()
+    want = state(clean)
+    _assert_bounded_state(clean, run_id)
+    assert counts["rename"] and counts["parquet"]
+
+    for name, calls in counts.items():
+        owner = os if name == "rename" else DataFrameWriter
+        for k in range(1, len(calls) + 1):
+            ck = tmp_path / f"fault-{name}-{k}"
+            shutil.copytree(staged, ck)
+            out = run(ck, world2, w2)
+
+            def fail(n, k=k):
+                if n == k:
+                    raise _Fault(f"{name} call {k}")
+
+            with monkeypatch.context() as m:
+                m.setattr(owner, name, _on_call(owner, name, fail)[0])
+                with pytest.raises(_Fault):
+                    out["commit"]()
+            backlog = Checkpoint(ck).read_rescheduled(spark)  # never raises
+            if backlog is not None:
+                backlog.count()
+
+            # a plain restart recomputes every stage from the backlog it reads
+            run(ck, world2, w2, stage_checkpoints=False)["commit"]()
+            assert state(ck) == want, (name, k)
+            _assert_bounded_state(ck, run_id)
+
+
+def test_stage_checkpoints_require_a_checkpoint_dir(spark, synth_dir):
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        run_pipeline(spark, synth_dir, start_ts=T0, end_ts=T0 + WINDOW_S, stage_checkpoints=True)
+
+
+def test_old_backlog_layout_fails_loudly(spark, tmp_path):
+    """A root whose backlog lives in rescheduled/data behind a
+    _committed.json marker, with a watermark that names no backlog
+    version, must not read as an empty backlog."""
+    ck = tmp_path / "old"
+    spark.range(3).write.parquet(str(ck / "rescheduled" / "data"))
+    (ck / "rescheduled" / "_committed.json").write_text(json.dumps({"run_id": "run-1"}))
+    (ck / "watermark.json").write_text(json.dumps({"state": 1, "committed_at": 0, "run_id": "run-1"}))
+    with pytest.raises(ValueError, match="rescheduled/data"):
+        Checkpoint(ck).read_rescheduled(spark)
 
 
 def test_rescheduled_backlog_merges_next_run(spark, synth_dir, tmp_path):

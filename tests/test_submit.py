@@ -48,3 +48,14 @@ def test_submit_counts_match_in_process(spark, synth_dir, tmp_path):
     assert want["issues"] > 0
     assert {n: stats[n] for n in want} == want
     assert Checkpoint(tmp_path / "ckpt").read_watermark() == end_ts
+
+
+def test_job_rejects_stage_checkpoints_without_checkpoint_dir():
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / "run_pipeline.py"), "--data-dir", "unused", "--stage-checkpoints"],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert proc.returncode == 2
+    assert "--stage-checkpoints requires --checkpoint-dir" in proc.stderr
