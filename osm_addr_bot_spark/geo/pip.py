@@ -14,9 +14,12 @@ native refine.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm_addr_bot_spark.config import HEX_LAT0_DEG
 from osm_addr_bot_spark.geo import hexgrid as hg
 
 
@@ -47,66 +50,34 @@ def point_in_ring(lat: Column, lon: Column, ring: Column) -> Column:
 
 def polygons_with_cells(polygons: DataFrame, res: int) -> DataFrame:
     """Polygon dim exploded by covering cell — the build side of every
-    PIP join. At scale this is computed once and reused (cacheable).
+    PIP join: one row per (polygon row, ``_cell``), no shuffle.
 
-    Native lattice: the ring's bbox is sampled at 0.8x the cell
-    inradius (sequence explodes -> codegen'd cell_expr), then a 1-ring
-    margin absorbs sampling gaps. The cover is a candidate SUPERSET
-    refined by exact point_in_ring downstream, so any valid cover
-    yields identical stage output. Native, because a Python cover
-    spawns Python workers inside the pipeline's first broadcast builds
-    (2 serial ~1.8 s single-task stages in an event-log audit).
-    dropDuplicates keeps overlapping k-rings from multiplying
-    downstream PIP candidate pairs.
+    Native lattice: the ring's bbox is sampled at 0.8x the cell edge,
+    then a 1-ring margin absorbs sampling gaps. The grid projects at the
+    fixed ``HEX_LAT0_DEG``, so both lattice steps are constants and the
+    sampling is as dense as the cells at every latitude: each point lies
+    within 0.57 edges of a sample, closer than the one-edge gap between
+    cells two rings apart, so its cell is in the sample's 1-ring. The
+    cover is a candidate SUPERSET refined by exact point_in_ring
+    downstream, so any valid cover yields identical stage output.
+    Native, because a Python cover spawns Python workers inside the
+    pipeline's first broadcast builds (2 serial ~1.8 s single-task
+    stages in an event-log audit). Each row's cells are deduplicated as
+    an array before the one explode, so overlapping 1-rings do not
+    multiply downstream PIP candidate pairs.
     """
-    edge = hg.EDGE_M[res]
-    step_lat = (edge * 0.8) / 111_194.9
-    lats = F.transform(F.col("ring"), lambda v: v["lat"])
-    lons = F.transform(F.col("ring"), lambda v: v["lon"])
-    c = F.col
-    out_cols = polygons.columns
-    p = polygons.withColumns(
-        {
-            "_pc_la0": F.array_min(lats),
-            "_pc_la1": F.array_max(lats),
-            "_pc_lo0": F.array_min(lons),
-            "_pc_lo1": F.array_max(lons),
-        }
-    ).withColumn(
-        "_pc_slon",
-        F.lit(step_lat)
-        / F.greatest(F.cos(F.radians((c("_pc_la0") + c("_pc_la1")) / 2)), F.lit(0.1)),
+    step_lat = (hg.EDGE_M[res] * 0.8) / 111_194.9
+    step_lon = step_lat / math.cos(math.radians(HEX_LAT0_DEG))
+
+    def axis(vals: Column, step: float) -> Column:
+        lo = F.array_min(vals)
+        n = F.ceil((F.array_max(vals) - lo) / step).cast("int")
+        return F.transform(F.sequence(F.lit(0), n), lambda i: lo + i * step)
+
+    lats = axis(F.transform(F.col("ring"), lambda v: v["lat"]), step_lat)
+    lons = axis(F.transform(F.col("ring"), lambda v: v["lon"]), step_lon)
+    samples = F.flatten(
+        F.transform(lats, lambda la: F.transform(lons, lambda lo: hg.cell_expr(la, lo, res)))
     )
-    p = (
-        p.withColumn(
-            "_pc_i",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.ceil((c("_pc_la1") - c("_pc_la0")) / step_lat).cast("int"),
-                )
-            ),
-        )
-        .withColumn(
-            "_pc_j",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.ceil((c("_pc_lo1") - c("_pc_lo0")) / c("_pc_slon")).cast("int"),
-                )
-            ),
-        )
-        .withColumn(
-            "_pc_base",
-            hg.cell_expr(
-                c("_pc_la0") + c("_pc_i") * step_lat,
-                c("_pc_lo0") + c("_pc_j") * c("_pc_slon"),
-                res,
-            ),
-        )
-        .withColumn("_cell", F.explode(hg.kring_expr(c("_pc_base"), 1)))
-    )
-    # dedup key: the polygon identity column when present (polygon_id is
-    # unique in the dim; keying the ring struct would be needlessly wide)
-    key = ["polygon_id"] if "polygon_id" in out_cols else list(out_cols)
-    return p.select(*out_cols, "_cell").dropDuplicates([*key, "_cell"])
+    cells = F.flatten(F.transform(samples, lambda c: hg.kring_expr(c, 1)))
+    return polygons.select("*", F.explode(F.array_distinct(cells)).alias("_cell"))

@@ -26,17 +26,19 @@ nodes (``node(w); is_in`` — overpass.py:117,133); this engine uses the
 element's representative point. Fixtures place geometries so both
 interpretations agree (FIXTURES.md §4).
 
-Physical plan: polygons explode covering hex cells once (res 7 —
-town-sized polygons); issues probe with their own cell. Arm A joins on
-(cell, name) so only same-named pairs survive the shuffle; arm B is a
+Physical plan: the non-admin named polygons explode their covering hex
+cells (res 7 — town-sized polygons) in one narrow projection, no
+shuffle; issues probe with their own cell. Arm A is a LEFT SEMI join on
+(cell, name = addr:place) with the exact PIP fold in its condition, so
+each issue stops at its first containing polygon; J3 inner-joins the
+same cover on cell and filters by the fold. Arm B is a
 ``geo.join.radius_join`` LEFT SEMI of the issues' 10 km cover against
-place nodes on (cell, name). Exact PIP / distance refine are native
-exprs on the equi-joined pairs.
+place nodes on (cell, name) with the distance refine in its condition.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import PLACE_PROXIMITY_M
@@ -44,31 +46,24 @@ from osm_addr_bot_spark.checks.selectors import normalize_expr
 from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
 from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.geo.pip import point_in_ring, polygons_with_cells
-from osm_addr_bot_spark.operators.duplicates import skip_large_expr
+from osm_addr_bot_spark.operators.duplicates import _ISSUE_KEY, skip_large_expr
 
 _PIP_RES = 7
-_ISSUE_KEY = ["category", "check_id", "changeset_id", "uid"]
 
 
-def _pip_hits(issues: DataFrame, polygons: DataFrame, name_equi: bool) -> DataFrame:
-    """(issue key cols + polygon name/alt_name) for issues inside a
-    non-admin polygon. ``name_equi`` additionally equi-joins on
-    name == addr:place (arm A of J2)."""
-    polys = polygons.filter(F.col("admin_level").isNull())
-    poly_cells = polygons_with_cells(polys, _PIP_RES)
+def _polygon_cover(polygons: DataFrame) -> DataFrame:
+    """(_cell, name, alt_name, ring): the res-7 cover of the non-admin
+    named polygons — the one build side of J2 arm A and J3."""
+    polys = polygons.filter(F.col("admin_level").isNull() & F.col("name").isNotNull())
+    return polygons_with_cells(polys, _PIP_RES).select("_cell", "name", "alt_name", "ring")
 
-    probe = issues.withColumn("_cell", cell_expr(F.col("lat"), F.col("lon"), _PIP_RES))
-    if name_equi:
-        probe = probe.withColumn("_name", F.element_at(F.col("tags"), F.lit("addr:place")))
-        cond = ["_cell", "_name"]
-        poly_cells = poly_cells.withColumn("_name", F.col("name"))
-    else:
-        cond = ["_cell"]
 
-    pairs = probe.join(
-        poly_cells.select(*cond, "polygon_id", "name", "alt_name", "ring"), cond
-    )
-    return pairs.filter(point_in_ring(F.col("lat"), F.col("lon"), F.col("ring")))
+def _with_pip_cell(issues: DataFrame) -> DataFrame:
+    return issues.withColumn("_cell", cell_expr(F.col("lat"), F.col("lon"), _PIP_RES))
+
+
+def _inside() -> Column:
+    return point_in_ring(F.col("lat"), F.col("lon"), F.col("ring"))
 
 
 def place_not_in_area_stage(
@@ -77,15 +72,18 @@ def place_not_in_area_stage(
     """J2: keep only issues with no containment (arm A) nor proximity
     (arm B) hit."""
     iss = issues.filter(skip_large_expr())
+    place = F.element_at(F.col("tags"), F.lit("addr:place"))
 
-    hit_a = _pip_hits(iss, polygons, name_equi=True).select(*_ISSUE_KEY)
+    probe_a = _with_pip_cell(iss)
+    cover = _polygon_cover(polygons)
+    hit_a = probe_a.join(
+        cover,
+        (probe_a["_cell"] == cover["_cell"]) & (place == cover["name"]) & _inside(),
+        "left_semi",
+    ).select(*_ISSUE_KEY)
 
     res = pick_res(PLACE_PROXIMITY_M)
-    probe = with_cover(
-        iss.withColumn("_name", F.element_at(F.col("tags"), F.lit("addr:place"))),
-        PLACE_PROXIMITY_M,
-        res,
-    )
+    probe = with_cover(iss.withColumn("_name", place), PLACE_PROXIMITY_M, res)
     nodes = place_nodes.select(
         cell_expr(F.col("lat"), F.col("lon"), res).alias("_cell"),
         F.col("name").alias("_name"),
@@ -106,7 +104,7 @@ def place_not_in_area_stage(
 def place_mistype_stage(issues: DataFrame, polygons: DataFrame) -> DataFrame:
     """J3: flag issues whose addr:place mismatches every enclosing name
     exactly but matches one after normalization."""
-    pairs = _pip_hits(issues, polygons.filter(F.col("name").isNotNull()), name_equi=False)
+    pairs = _with_pip_cell(issues).join(_polygon_cover(polygons), "_cell").filter(_inside())
 
     names = (
         pairs.withColumn("_n", F.explode(F.array(F.col("name"), F.col("alt_name"))))

@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 from osm_addr_bot_spark.config import STREET_TIERS_M
 from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
 from osm_addr_bot_spark.geo.join import radius_join
-from osm_addr_bot_spark.operators.duplicates import skip_large_expr
-
-_ISSUE_KEY = ["category", "check_id", "changeset_id", "uid"]
+from osm_addr_bot_spark.operators.duplicates import _ISSUE_KEY, skip_large_expr
 
 
 def street_vertex_index(streets: DataFrame, res: int) -> DataFrame:

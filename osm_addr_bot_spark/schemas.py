@@ -1,8 +1,8 @@
-"""Canonical schemas for every table the engine reads or produces.
+"""Schemas of the engine's inputs: the interleaved-documents table, the
+JSON payloads of its spans, and the DDL of every world table.
 
 The primary input is the interleaved-documents table (BASELINE.json
-``input_hint``); everything else is derived or a small dimension.
-Field-by-field provenance cites /root/reference/.
+``input_hint``); the other world tables are small dimensions.
 """
 
 from pyspark.sql import types as T
@@ -83,121 +83,3 @@ TABLE_DDL = {
         "valid_to BIGINT, tags MAP<STRING, STRING>"
     ),
 }
-
-# --------------------------------------------------------------------------
-# Parsed elements (engine-internal, long format). uid derivation per
-# reference overpass_entry.py:44-50.
-ELEMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("span_offset", T.IntegerType(), False),
-        T.StructField("timestamp", T.LongType(), False),
-        T.StructField("changeset_id", T.LongType(), False),
-        T.StructField("element_type", T.StringType(), False),
-        T.StructField("element_id", T.LongType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-        T.StructField("minlat", T.DoubleType(), False),
-        T.StructField("minlon", T.DoubleType(), False),
-        T.StructField("maxlat", T.DoubleType(), False),
-        T.StructField("maxlon", T.DoubleType(), False),
-        T.StructField("bb_width_m", T.DoubleType(), False),
-        T.StructField("bb_height_m", T.DoubleType(), False),
-        T.StructField("uid", T.LongType(), False),
-        T.StructField("hex9", T.LongType(), False),    # hex cell, res 9-like
-        T.StructField("s2_15", T.LongType(), False),   # S2 cell id, level 15
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Dimensions (FIXTURES.md §2)
-CHANGESETS = T.StructType(
-    [
-        T.StructField("changeset_id", T.LongType(), False),
-        T.StructField("cs_uid", T.LongType(), False),          # author user id
-        T.StructField("open", T.BooleanType(), False),
-        T.StructField("created_by", T.StringType(), True),
-        T.StructField(
-            "discussion",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("uid", T.LongType(), False),
-                        T.StructField("text", T.StringType(), False),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
-
-USERS = T.StructType(
-    [
-        T.StructField("user_uid", T.LongType(), False),
-        T.StructField("display_name", T.StringType(), False),
-        T.StructField("changesets_count", T.LongType(), False),
-    ]
-)
-
-POLYGONS = T.StructType(
-    [
-        T.StructField("polygon_id", T.LongType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("alt_name", T.StringType(), True),
-        T.StructField("admin_level", T.StringType(), True),
-        T.StructField(
-            "ring",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("lat", T.DoubleType(), False),
-                        T.StructField("lon", T.DoubleType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-STREETS = T.StructType(
-    [
-        T.StructField("way_id", T.LongType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("alt_name", T.StringType(), True),
-        T.StructField(
-            "points",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("lat", T.DoubleType(), False),
-                        T.StructField("lon", T.DoubleType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-PLACE_NODES = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-    ]
-)
-
-# Pre-change snapshots for the guilt check (reference overpass.py:384-421)
-ELEMENTS_HISTORY = T.StructType(
-    [
-        T.StructField("element_type", T.StringType(), False),
-        T.StructField("element_id", T.LongType(), False),
-        T.StructField("valid_from", T.LongType(), False),
-        T.StructField("valid_to", T.LongType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-    ]
-)

@@ -105,21 +105,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, location: str, fmt: str = "auto") -> DataFrame:
-    """Read a table by location; 'auto' prefers Iceberg when its runtime
-    is on the classpath and the location is a catalog table name."""
-    if fmt == "iceberg" or (fmt == "auto" and "/" not in location):
-        if not iceberg_available(spark):
-            if fmt == "iceberg":
-                raise RuntimeError(
-                    "Iceberg runtime not on the classpath; add "
-                    "iceberg-spark-runtime to spark.jars.packages"
-                )
-        else:
-            return spark.read.format("iceberg").load(location)
-    return spark.read.parquet(location)
-
-
 def snapshot_as_of(spark: SparkSession, location: str, timestamp_ms: int) -> DataFrame:
     """Historical snapshot scan (S2, reference overpass.py:92-98 — the
     `[date:...]` Overpass setting selecting a past database state).

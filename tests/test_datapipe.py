@@ -126,20 +126,6 @@ def test_brute_force_and_lsh_topk(spark):
         assert r["cosine"] == pytest.approx(full[r["vec_id"]], abs=1e-9)
 
 
-def test_pairwise_topk_per_label(spark):
-    df = spark.createDataFrame(
-        [
-            (1, 0, [1.0, 0.0]), (2, 0, [0.9, 0.1]), (3, 0, [0.0, 1.0]),
-            (4, 1, [1.0, 0.0]),
-        ],
-        "vec_id long, label int, embedding array<double>",
-    )
-    pairs = sim.pairwise_topk_per_label(df, k=1).collect()
-    got = {(r["vec_a"], r["vec_b"]) for r in pairs}
-    assert (1, 2) in got        # most similar within label 0
-    assert all(a != 4 and b != 4 for a, b in got)  # label blocking
-
-
 def test_lang_id(spark):
     df = spark.createDataFrame(
         [

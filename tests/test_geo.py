@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from osm_addr_bot_spark.geo import hexgrid as hg
 from osm_addr_bot_spark.geo import s2
 from osm_addr_bot_spark.geo.haversine import haversine_m, haversine_sql
+from osm_addr_bot_spark.geo.pip import polygons_with_cells
 from osm_addr_bot_spark.geo.tiles import xyz_tile_cols, xyz_tile_ref
 
 
@@ -76,6 +77,32 @@ def test_hex_cover_guarantee(radius, res):
     within = true_d <= radius
     hit = np.array([c2[i] in set(cover[i]) for i in range(n)])
     assert np.all(hit[within]), "cover missed a within-radius neighbor"
+
+
+@pytest.mark.parametrize("clat", [52.0, 70.0, 80.0, 85.0])
+def test_polygon_cover_is_complete_at_every_latitude(spark, clat):
+    """Every point inside a polygon has its cell in the polygon's cover —
+    the superset property the PIP joins rely on — also far from the
+    grid's reference latitude, where cells span more degrees of lon."""
+    half_m, clon, res = 3000.0, 21.0, 7
+    dlat = half_m / 111_194.9
+    dlon = dlat / math.cos(math.radians(clat))
+    ring = [
+        {"lat": clat + sy * dlat, "lon": clon + sx * dlon}
+        for sy, sx in ((-1, -1), (-1, 1), (1, 1), (1, -1))
+    ]
+    polys = spark.createDataFrame(
+        [(1, ring)], "polygon_id long, ring array<struct<lat:double, lon:double>>"
+    )
+    cover = [r["_cell"] for r in polygons_with_cells(polys, res).collect()]
+    assert len(cover) == len(set(cover))
+
+    rng = np.random.default_rng(11)
+    n = 20_000
+    lat = rng.uniform(clat - dlat, clat + dlat, n)
+    lon = rng.uniform(clon - dlon, clon + dlon, n)
+    missed = ~np.isin(hg.cell_of(lat, lon, res), cover)
+    assert not missed.any(), f"{missed.sum()} of {n} points outside the cover at {clat} N"
 
 
 def test_hex_kring_counts():

@@ -368,7 +368,9 @@ def test_spatial_plans_have_no_python(spark):
     JVM-native — no row-at-a-time or Arrow Python eval in the plan
     (BENCH.md 'hot paths are native'). J2 and J4 must match through a
     LEFT SEMI join that carries the distance refine in its condition,
-    so the hash join stops at the first in-range match."""
+    so the hash join stops at the first in-range match; J2 arm A does
+    the same with the PIP fold. The polygon cover is a narrow projection:
+    no J2/J3 exchange is keyed on polygon_id."""
     issue = mk_issue(check_id="DUPLICATED", changeset_id=1, element_id=1,
                      tags=dict(ADDR), lat=LAT, lon=LON)
     cand = mk_issue(changeset_id=2, element_id=2, element_type="way",
@@ -387,15 +389,23 @@ def test_spatial_plans_have_no_python(spark):
     place_plan = _executed_plan(
         place_not_in_area_stage(issues_df(spark, [bcwp]), polys, place_nodes)
     )
+    mistype = mk_issue(check_id="PLACE_MISTYPE", post_stage="place_mistype",
+                       changeset_id=1, element_id=1, tags={"addr:place": "wola"},
+                       lat=LAT, lon=LON)
+    mistype_plan = _executed_plan(place_mistype_stage(issues_df(spark, [mistype]), polys))
     street_plan = _executed_plan(
         street_names_stage(
             issues_df(spark, [_usn(1, "Polna")]), _streets(spark, [_street_at(400, "Polna")])
         )
     )
 
-    for plan in (dup_plan, place_plan, street_plan):
+    for plan in (dup_plan, place_plan, mistype_plan, street_plan):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     for plan, radius in ((place_plan, PLACE_PROXIMITY_M), (street_plan, max(STREET_TIERS_M))):
         semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
         assert any("ASIN" in ln and f"<= {float(radius)}" in ln for ln in semi), plan
+    semi = [ln for ln in place_plan.splitlines() if "LeftSemi" in ln]
+    assert any("aggregate(sequence" in ln for ln in semi), place_plan
+    for plan in (place_plan, mistype_plan):
+        assert "hashpartitioning(polygon_id" not in plan, plan
 
