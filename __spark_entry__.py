@@ -1311,9 +1311,8 @@ def q_ann_embedding_near_dups(spark, sf_dir):
 # Probe keys user_id*11 stretch past the custkey domain (missing key ->
 # null payload, the reference's created-element case Q6) and early probe
 # times predate a customer's first order (as-of miss -> null). The Spark
-# side runs the UNION (sort-based, version-count-independent) strategy of
-# operators/asof.py so the scale path itself sits under the DuckDB hash
-# check; interval-vs-union equivalence is pinned in tests/test_asof.py.
+# side runs operators/asof.py, the same interval join the J5 guilt check
+# uses, under the DuckDB hash check.
 _ASOF_T0 = 788918400  # 1995-01-01 UTC
 _ASOF_SPAN = 207705600  # just under the orders table's date span
 
@@ -1364,7 +1363,7 @@ def q_snapshot_asof_join(spark, sf_dir):
             F.expr("cast(cast(ts as timestamp) as bigint)") % _ASOF_SPAN + _ASOF_T0
         ).alias("ets"),
     )
-    out = asof_join(probe, hist, keys=["custkey"], probe_ts="ets", strategy="union")
+    out = asof_join(probe, hist, keys=["custkey"], probe_ts="ets")
     # null-free projection (the driver's row sort chokes on None): the
     # LEFT-miss cases stay visible through asof_hit + sentinels
     return out.select(

@@ -27,10 +27,13 @@ analysis) under `datapipe/`.
 Design rules (see SURVEY.md):
   - DataFrame/SQL first; Catalyst does pushdown/pruning/join selection.
   - Native expressions on the hot path: hex/S2 cell math, PIP and the
-    distance refine run in whole-stage codegen. The one pandas UDF in
-    the pipeline composes report messages.
-  - Explicit partitioning: spatial shuffles key on cell ids, skewed
-    urban cells are salted, small dims are broadcast.
+    distance refine run in the JVM, no Python. The S2 encode and the
+    PIP ray-cast are ``aggregate`` folds, which Spark 4.1.2 evaluates
+    interpreted (``CodegenFallback``); the rest is whole-stage codegen.
+    The one pandas UDF in the pipeline composes report messages.
+  - Explicit partitioning: spatial shuffles key on cell ids (J1 also on
+    the address quintuple, which spreads dense cells), AQE skew-join is
+    the backstop, small dims are broadcast.
 """
 
 __version__ = "0.1.0"

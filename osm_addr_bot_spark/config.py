@@ -89,5 +89,4 @@ EQUAL_TAGS = (
 HEX_LAT0_DEG = 52.0        # equirectangular projection reference latitude
                            # (center of SEARCH_BBOX); cell ids are a pure
                            # function of (lat, lon, res) given this constant
-SALT_BUCKETS = 8           # deterministic salt fan-out for skewed cells
 DEFAULT_TILE_ZOOM = 14     # XYZ raster tile zoom for assignment reports

@@ -17,7 +17,9 @@ processes (~30x over the old sequential loop; 4M docs in ~1 min) and
 each chunk writes its own parquet part file, which also gives big
 worlds the multi-file layout a real 100 TB table would have (no
 single-file scan bottleneck). ~30% of changesets concentrate in one
-"hotspot" town to exercise salted-skew handling (FIXTURES.md §1).
+"hotspot" town; it skews towns, not hex cells (the densest res-9
+candidate cell holds 17 candidates at 1,200 docs, 128 at 12,000 —
+FIXTURES.md §1).
 
 Scenario mix is chosen so every check and spatial stage has positive and
 negative cases at safe distance margins (FIXTURES.md §3-4).
@@ -483,7 +485,7 @@ def generate(
     rng = np.random.default_rng(seed)
     # world area scales with document count (constant density ~3k docs
     # per town); the hotspot town keeps a strong skew but is capped so
-    # it stresses the salt path, not quadratic-pair physics
+    # its pair counts do not grow quadratically with the world
     n_towns = max(20, n_docs // 3000)
     hotspot_frac = min(0.30, 20_000 / max(n_docs, 1))
     town_names, tlat, tlon, polygons, streets, place_nodes, town_streets = _make_world(rng, n_towns)

@@ -3,7 +3,7 @@
 The reference's radius searches (J1 duplicates at 100 m, J2 place
 proximity at 10 km, J4 street names at 3 km) all run here as the same
 two steps: an equi-join on hex cell (plus any other equal key, e.g. a
-name or a salt), then an exact distance refine on the candidate pairs.
+name), then an exact distance refine on the candidate pairs.
 Cover construction stays with the callers; this module only owns the
 join and the refine, so the prefilter's placement and the semi-join
 early exit exist once.

@@ -6,17 +6,16 @@ cell-id scheme (faces of the cube, quadratic u,v->s,t projection,
 Hilbert-curve position via 4-bit lookup tables):
 https://s2geometry.io/devguide/s2cell_hierarchy
 
-The engine uses S2 as the second half of the dual index (north rule):
-  * `s2_15` is a spatial-locality clustering key — `repartitionByRange`
-    / sort by it gives Hilbert-ordered storage so scans of a geographic
-    region prune to few partitions at 100 TB scale;
-  * `s2_parent` (native bit-arithmetic, no UDF) yields coarse cells for
-    prefix equi-joins.
+The engine computes `s2_15` per element at parse (`with_s2_cell`), the
+second half of the paper's dual index. Nothing reads it yet: every
+spatial join is a hash equi-join on hex cells, no table is range-
+partitioned or sorted by it, and no join uses `s2_parent` (native
+bit-arithmetic coarse cells). The column rides to the guilt phase,
+which drops it.
 
 Cell ids are the standard uint64, reinterpreted as signed int64 for
-Spark's LongType (faces 4-5 come out negative; orderings used by the
-engine only rely on equality and prefix masking, and the range-
-clustering key uses the same reinterpretation everywhere).
+Spark's LongType (faces 4-5 come out negative; `s2_parent` relies only
+on equality and prefix masking, which the reinterpretation keeps).
 
 Self-consistency is tested (tests/test_geo.py): parent/child prefix
 containment, locality of nearby points, face coverage, golden vectors
@@ -134,10 +133,10 @@ def parent_id(cell: np.ndarray, level: int) -> np.ndarray:
 
 def with_s2_cell(df, lat: str = "lat", lon: str = "lon", level: int = 15, out: str = "s2_15"):
     """Append the S2 cell id as a NATIVE column — the same table-driven
-    Hilbert encode as ``cell_id``, expressed as whole-stage-codegen
-    Spark SQL (guide §4: the S2 math is trivial next to the JVM->Python
-    boundary it used to pay; removing the ArrowEvalPython node removes
-    the per-executor Python worker fleet from the parse stage).
+    Hilbert encode as ``cell_id``, expressed as Spark SQL (guide §4:
+    the S2 math is trivial next to the JVM->Python boundary it used to
+    pay; removing the ArrowEvalPython node removes the per-executor
+    Python worker fleet from the parse stage).
 
     Exactness: mirrors the numpy path operation for operation — IEEE
     doubles through the same projection formulas, then pure integer

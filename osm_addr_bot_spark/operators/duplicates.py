@@ -1,5 +1,5 @@
 """J1 — duplicate-address radius join (100 m), the reference's
-``query_duplicates`` internalized as a salted hex-cell hash join.
+``query_duplicates`` internalized as a hex-cell hash join.
 
 Reference semantics (overpass.py:101-109 compile, 223-274 exec,
 duplicate_search.py:21-56 predicate):
@@ -17,20 +17,26 @@ duplicate_search.py:21-56 predicate):
     issue's timestamp/changeset_id and a zeroed bbox (overpass.py:250-259,
     quirk Q4); no match -> drop the issue
   * set semantics on uid across the check's result (overpass.py:239,
-    270-272) — here deterministic: min (changeset_id, timestamp) wins
+    270-272) — here deterministic: issue rows win over duplicate rows
+    (the reference fills set(issues) first), then min (changeset_id,
+    timestamp)
 
 Physical plan: candidates keep their parse-time res-9 hex cell; issues
 explode cell x k-ring-1 (7 cells — proven sufficient for 100 m in
-tests/test_geo.py) x a deterministic salt sequence; candidates carry
-``pmod(hash(uid), k)`` salt. The (cell, salt) equi-join bounds per-task
-fan-in under urban skew; AQE skew-join remains as backstop. The join and
-its distance + tag equality refine are one ``geo.join.radius_join``, all
-native exprs.
+tests/test_geo.py). Catalyst turns the five null-safe EQUAL_TAGS tests
+into join keys, so the executed join is keyed on the address quintuple
+(``coalesce``/``isnull`` of each tag) plus the cell: a dense cell
+spreads over partitions by address, and only identical addresses in one
+cell share a key — the rows J1 must emit anyway. The densest res-9
+candidate cell holds 17 candidates in the 1,200-doc synthetic world and
+128 in the 12,000-doc one; AQE skew-join (session.py) stays on as the
+backstop. The join and its distance + tag equality refine are one
+``geo.join.radius_join``, all native exprs.
 
 Shuffle-width note (r3 event-log audit): the match predicates need only
 (family, lat/lon, the five EQUAL_TAGS values, uid) — so BOTH sides of
-the (cell, salt) exchange ship that slim projection (the probe side is
-replicated 7 x salt ways, so every byte there is multiplied), the join
+the cell exchange ship that slim projection (the probe side is
+replicated 7 ways, so every byte there is multiplied), the join
 emits bare (issue-key, c_uid) links, and the full payloads (tags map,
 bbox, provenance) are re-fetched AFTER matching by one issue-key join
 plus one broadcast-sized uid join against the already-persisted
@@ -47,7 +53,6 @@ from osm_addr_bot_spark.config import (
     DUPLICATE_RADIUS_M,
     EQUAL_TAGS,
     LARGE_ELEMENT_MAX_SIZE,
-    SALT_BUCKETS,
     WHITELIST_TAGS,
 )
 from osm_addr_bot_spark.geo.hexgrid import cover_k, kring_expr
@@ -89,12 +94,7 @@ _CAND_SOURCED = frozenset(
 )
 
 
-def duplicates_stage(
-    issues: DataFrame,
-    elements: DataFrame,
-    salt_buckets: int = SALT_BUCKETS,
-    hot_cell_threshold: int = 4000,
-) -> DataFrame:
+def duplicates_stage(issues: DataFrame, elements: DataFrame) -> DataFrame:
     """Run J1 for the DUPLICATED check's issue rows; returns the check's
     new issue set in the same long format."""
     issue_cols = issues.columns
@@ -119,66 +119,31 @@ def duplicates_stage(
             for i, t in enumerate(EQUAL_TAGS)
         ]
 
-    # Targeted salting: only cells whose candidate count exceeds the
-    # threshold are split into salt buckets (build side) and probed with
-    # all salts (probe side). Cold cells — the overwhelming majority —
-    # keep salt 0 and pay no replication. The hot-cell list is one cheap
-    # aggregate, tiny even at 10^12 rows (bounded by #cells above the
-    # threshold), broadcast into both sides. AQE skew-join stays on as
-    # the backstop for skew this static rule can't see.
-    hot = (
-        cand_base.groupBy(F.col("hex9").alias("_cell"))
-        .count()
-        .filter(F.col("count") > hot_cell_threshold)
-        .select("_cell", F.lit(True).alias("_hot"))
-    )
-
     # ---- slim match phase: only what the predicates read crosses the
-    # (cell, salt) exchange — probe bytes are multiplied by 7 ring cells
-    # x salt fan-out, so the slim projection is the direct attack on the
-    # widest shuffle (r3 DRAM-inflation audit)
-    iss_probe = (
-        iss.select(
-            *_ISSUE_KEY, "element_type", "lat", "lon", "hex9",
-            *_eq_vals(F.col("tags"), "_eq"),
-        )
-        .withColumn("_cell", F.explode(kring_expr(F.col("hex9"), k)))
-        .drop("hex9")
-        .join(F.broadcast(hot), "_cell", "left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("_hot")
+    # cell exchange — probe bytes are multiplied by the 7 ring cells, so
+    # the slim projection is the direct attack on the widest shuffle
+    # (r3 DRAM-inflation audit)
+    iss_probe = iss.select(
+        *_ISSUE_KEY, "element_type", "lat", "lon",
+        *_eq_vals(F.col("tags"), "_eq"),
+        F.explode(kring_expr(F.col("hex9"), k)).alias("_cell"),
     )
 
-    cand = (
-        cand_base.join(
-            F.broadcast(hot.withColumnRenamed("_cell", "hex9")), "hex9", "left"
-        )
-        .select(
-            F.col("hex9").alias("_cell"),
-            F.when(F.col("_hot"), F.pmod(F.hash(F.col("uid")), F.lit(salt_buckets)))
-            .otherwise(F.lit(0))
-            .alias("_salt"),
-            F.col("uid").alias("c_uid"),
-            # (doc_id, span_offset) ride along so the payload refetch
-            # re-selects EXACTLY the matched candidate rows — uid alone
-            # is not a row key when the same element appears in several
-            # documents, and a repeated uid would otherwise attach rows
-            # that never passed the match predicates (ADVICE r4). Two
-            # ints on the build side, which salting never replicates.
-            F.col("doc_id").alias("c_doc_id"),
-            F.col("span_offset").alias("c_span_offset"),
-            F.col("element_type").alias("c_element_type"),
-            F.col("lat").alias("b_lat"),
-            F.col("lon").alias("b_lon"),
-            *_eq_vals(F.col("tags"), "_ceq"),
-        )
+    cand = cand_base.select(
+        F.col("hex9").alias("_cell"),
+        F.col("uid").alias("c_uid"),
+        # (doc_id, span_offset) ride along so the payload refetch
+        # re-selects EXACTLY the matched candidate rows — uid alone
+        # is not a row key when the same element appears in several
+        # documents, and a repeated uid would otherwise attach rows
+        # that never passed the match predicates (ADVICE r4). Two
+        # ints on the build side, which is never replicated.
+        F.col("doc_id").alias("c_doc_id"),
+        F.col("span_offset").alias("c_span_offset"),
+        F.col("element_type").alias("c_element_type"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
+        *_eq_vals(F.col("tags"), "_ceq"),
     )
 
     opposite_family = F.when(
@@ -195,10 +160,8 @@ def duplicates_stage(
     # only its survivors pay the haversine
     where = opposite_family & (F.col("c_uid") != F.col("uid")) & eq_quintuple
     links = radius_join(
-        iss_probe, cand, DUPLICATE_RADIUS_M, ["_cell", "_salt"], where=where
-    ).select(
-        *_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset"
-    )
+        iss_probe, cand, DUPLICATE_RADIUS_M, ["_cell"], where=where
+    ).select(*_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset")
 
     # one row per surviving issue carrying its matched candidate row
     # keys — the only aggregate over the (small) link set

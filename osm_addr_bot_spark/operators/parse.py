@@ -68,8 +68,10 @@ def explode_spans(documents: DataFrame, keep_empty: bool = False) -> DataFrame:
 def parse_elements(documents: DataFrame) -> DataFrame:
     """Parse kind='text' spans into the canonical elements DataFrame.
 
-    All expressions are native (whole-stage codegen), the hex cell id
-    and the S2 cell id included — no Python workers.
+    All expressions are native, the hex cell id and the S2 cell id
+    included — no Python workers. The S2 encode is an ``aggregate``
+    fold, which Spark 4.1.2 evaluates interpreted (``CodegenFallback``);
+    the rest runs in whole-stage codegen.
     """
     spans = explode_spans(documents).filter(F.col("kind") == "text")
     e = spans.select(

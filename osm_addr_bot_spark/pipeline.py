@@ -11,7 +11,7 @@ Stage order preserves the reference's semantics exactly:
 
 Shuffle topology (the part the reference outsources to Overpass):
   * fan-out, gates, dedup pass 1: narrow after one scan
-  * J1-J4: cell-keyed equi-joins (salted where skewed)
+  * J1-J4: cell-keyed equi-joins (J1 also keyed on the address tags)
   * grouping: one hash-partition by (category, changeset_id)
   * dims: broadcast
 Reuse points (the parsed elements, the pre-spatial issues, the spatial

@@ -2,11 +2,11 @@
 
 The engine targets Iceberg-style tables (BASELINE.json input_hint): at
 production scale the documents table is an Iceberg table partitioned by
-a time bucket (partition pruning for the incremental window, S1) and
-sorted within files by the S2 cell id (Hilbert clustering -> spatial
-scan pruning). The sandbox image ships no Iceberg/Delta jars, so those
-formats are import-try gated; parquet carries the same schema and all
-tests/benches.
+a time bucket (partition pruning for the incremental window, S1). No
+table here is sorted or clustered by a spatial key: the documents hold
+raw span text, and the S2 id exists only after parse. The sandbox image
+ships no Iceberg/Delta jars, so those formats are import-try gated;
+parquet carries the same schema and all tests/benches.
 
 Time travel (S2 snapshot scan, reference overpass.py:92-98) maps to
 `VERSION AS OF` on Iceberg; the engine's `elements_history` table with

@@ -1,11 +1,10 @@
-"""As-of join operator (operators/asof.py, J5/S2 class): interval vs
-union strategy equivalence on the awkward cases — missing keys, probes
-before any version, boundary instants, zero-width intervals, gaps."""
+"""As-of join operator (operators/asof.py, J5/S2 class) on the awkward
+cases — missing keys, probes before any version, boundary instants,
+zero-width intervals, gaps."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.operators.asof import asof_join
 
@@ -65,28 +64,19 @@ EXPECT = {
 }
 
 
-@pytest.mark.parametrize("strategy", ["interval", "union"])
-def test_asof_semantics(spark, history, probes, strategy):
-    out = asof_join(probes, history, keys=["key"], probe_ts="ts", strategy=strategy)
+def test_asof_semantics(spark, history, probes):
+    out = asof_join(probes, history, keys=["key"], probe_ts="ts")
     rows = out.collect()
     assert len(rows) == probes.count()  # LEFT: every probe survives once
     got = {r["event_id"]: r["payload"] for r in rows}
     assert got == EXPECT
 
 
-def test_asof_strategies_equivalent(spark, history, probes):
-    a = asof_join(probes, history, keys=["key"], probe_ts="ts", strategy="interval")
-    b = asof_join(probes, history, keys=["key"], probe_ts="ts", strategy="union")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_asof_payload_subset_and_bad_strategy(spark, history, probes):
+def test_asof_payload_subset(spark, history, probes):
     out = asof_join(
         probes, history, keys=["key"], probe_ts="ts", payload=["payload"]
     )
     assert out.columns == ["event_id", "key", "ts", "payload"]
-    with pytest.raises(ValueError, match="strategy"):
-        asof_join(probes, history, keys=["key"], strategy="sorted")
 
 
 def test_asof_multi_key(spark):
@@ -98,24 +88,8 @@ def test_asof_multi_key(spark):
         [(1, 1, "a", 10), (2, 1, "b", 10), (3, 1, "c", 10)],
         "event_id long, k1 long, k2 string, ts long",
     )
-    for strategy in ("interval", "union"):
-        got = {
-            r["event_id"]: r["payload"]
-            for r in asof_join(
-                probes, hist, keys=["k1", "k2"], probe_ts="ts", strategy=strategy
-            ).collect()
-        }
-        assert got == {1: "x", 2: "y", 3: None}
-
-
-def test_asof_reserved_column_names_raise(spark, history, probes):
-    """ADVICE r3: the union strategy's internal columns (_t, _ver, ...)
-    silently corrupted the join when a caller's column shared the name;
-    both strategies now reject the collision up front."""
-    bad_probe = probes.withColumn("_ver", F.lit(1))
-    for strategy in ("interval", "union"):
-        with pytest.raises(ValueError, match="_ver"):
-            asof_join(bad_probe, history, keys=["key"], probe_ts="ts", strategy=strategy)
-    bad_hist = history.withColumn("_live", F.lit(1))  # becomes a payload column
-    with pytest.raises(ValueError, match="_live"):
-        asof_join(probes, bad_hist, keys=["key"], probe_ts="ts")
+    got = {
+        r["event_id"]: r["payload"]
+        for r in asof_join(probes, hist, keys=["k1", "k2"], probe_ts="ts").collect()
+    }
+    assert got == {1: "x", 2: "y", 3: None}

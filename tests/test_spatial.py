@@ -5,12 +5,20 @@ import math
 
 from pyspark.sql import functions as F
 
-from osm_addr_bot_spark.config import PLACE_PROXIMITY_M, STREET_TIERS_M
+from osm_addr_bot_spark.config import (
+    DUPLICATE_RADIUS_M,
+    EQUAL_TAGS,
+    LARGE_ELEMENT_MAX_SIZE,
+    PLACE_PROXIMITY_M,
+    STREET_TIERS_M,
+    WHITELIST_TAGS,
+)
+from osm_addr_bot_spark.geo.haversine import EARTH_RADIUS_M
 from osm_addr_bot_spark.operators.duplicates import duplicates_stage
 from osm_addr_bot_spark.operators.guilt import filter_guilty
 from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in_area_stage
 from osm_addr_bot_spark.operators.streets import street_names_stage
-from tests.helpers import elements_df, issues_df, mk_issue, offset
+from tests.helpers import ISSUE_SCHEMA, elements_df, issues_df, mk_issue, offset
 
 LAT, LON = 52.1, 21.1
 ADDR = {"addr:city": "Warszawa", "addr:housenumber": "7", "addr:street": "Polna"}
@@ -333,30 +341,96 @@ def test_guilt_changeset_level(spark):
     assert kept.count() == 2
 
 
-def test_duplicates_salting_preserves_results(spark):
-    """Row-for-row equality between salted (hot cell forced) and
-    unsalted plans — the skew mechanism must not change semantics."""
+def _haversine_m(lat1, lon1, lat2, lon2):
+    p1, p2 = math.radians(lat1), math.radians(lat2)
+    a = (math.sin((p2 - p1) / 2) ** 2
+         + math.cos(p1) * math.cos(p2) * math.sin(math.radians(lon2 - lon1) / 2) ** 2)
+    return 2 * EARTH_RADIUS_M * math.asin(math.sqrt(min(a, 1.0)))
+
+
+def _duplicates_brute_force(issue_rows, element_rows):
+    """The reference predicate (duplicate_search.py:21-56, overpass.py:
+    223-274) evaluated pair by pair in Python, over mk_issue tuples."""
+    col = {c.split()[0]: i for i, c in enumerate(ISSUE_SCHEMA.split(", "))}
+
+    def g(row, name):
+        return row[col[name]]
+
+    def clean(row):
+        return all(k.startswith(WHITELIST_TAGS) for k in g(row, "tags"))
+
+    out = []  # (is_dup, changeset_id, timestamp, doc_id, span_offset, check_id, uid)
+    for iss in issue_rows:
+        if not (g(iss, "bb_width_m") < LARGE_ELEMENT_MAX_SIZE
+                and g(iss, "bb_height_m") < LARGE_ELEMENT_MAX_SIZE and clean(iss)):
+            continue
+        matches = [
+            c for c in element_rows
+            if "addr:housenumber" in g(c, "tags") and clean(c)
+            and (g(iss, "element_type") == "node") != (g(c, "element_type") == "node")
+            and g(c, "uid") != g(iss, "uid")
+            and all(g(iss, "tags").get(t) == g(c, "tags").get(t) for t in EQUAL_TAGS)
+            and _haversine_m(g(iss, "lat"), g(iss, "lon"), g(c, "lat"), g(c, "lon"))
+            <= DUPLICATE_RADIUS_M
+        ]
+        if not matches:
+            continue
+        prov = (g(iss, "changeset_id"), g(iss, "timestamp"))
+        out.append((0, *prov, g(iss, "doc_id"), g(iss, "span_offset"),
+                    g(iss, "check_id"), g(iss, "uid")))
+        out += [(1, *prov, g(c, "doc_id"), g(c, "span_offset"),
+                 g(iss, "check_id"), g(c, "uid")) for c in matches]
+    # set semantics on uid, issue rows first (set(issues), then .update)
+    best = {}
+    for row in sorted(out):
+        best.setdefault(row[-1], row)
+    return {(r[5], r[1], r[6], r[2]) for r in best.values()}
+
+
+def test_duplicates_dense_cell_matches_brute_force(spark):
+    """~60 nodes and ways in ONE res-9 cell with a few distinct
+    addresses: the cell-keyed join (no salting, keyed on the address
+    quintuple by Catalyst) must return exactly what the reference
+    predicate gives pair by pair."""
     import numpy as np
 
-    rng = np.random.default_rng(9)
-    rows = []
-    # 60 addresses inside one res-9 cell (a 'hot' urban cell)
-    for i in range(60):
-        la, lo = offset(LAT, LON, north_m=float(rng.uniform(-60, 60)),
-                        east_m=float(rng.uniform(-60, 60)))
-        etype = "node" if i % 2 == 0 else "way"
-        rows.append(
-            mk_issue(check_id="DUPLICATED", changeset_id=100 + i, element_id=i + 1,
-                     element_type=etype, tags=dict(ADDR, building="yes"), lat=la, lon=lo)
-        )
-    issues = issues_df(spark, [r for i, r in enumerate(rows) if i % 3 == 0])
-    elements = elements_df(spark, rows)
+    from osm_addr_bot_spark.geo import hexgrid as hg
 
-    salted = duplicates_stage(issues, elements, salt_buckets=8, hot_cell_threshold=10)
-    plain = duplicates_stage(issues, elements, salt_buckets=1, hot_cell_threshold=10**9)
-    key = lambda r: (r["check_id"], r["changeset_id"], r["uid"], r["timestamp"])
-    assert sorted(map(key, salted.collect())) == sorted(map(key, plain.collect()))
-    assert salted.count() > 0
+    rng = np.random.default_rng(9)
+    pts = [offset(LAT, LON, north_m=float(n), east_m=float(e))
+           for n, e in rng.uniform(-150, 150, size=(400, 2))]
+    cells = hg.cell_of(np.array([p[0] for p in pts]), np.array([p[1] for p in pts]), 9)
+    ids, counts = np.unique(cells, return_counts=True)
+    dense = ids[counts.argmax()]
+    kept = []
+    for p, c in zip(pts, cells):
+        # fixture margin: no pair sits within 0.5 m of the radius
+        if c == dense and all(
+            abs(_haversine_m(*p, *q) - DUPLICATE_RADIUS_M) > 0.5 for q in kept
+        ):
+            kept.append(p)
+    pts = kept[:60]
+    assert len(pts) == 60
+    rows = []
+    for i, (la, lo) in enumerate(pts):
+        tags = {"addr:city": "Warszawa", "addr:street": "Polna",
+                "addr:housenumber": str(1 + (i // 4) % 3), "building": "yes"}
+        if i % 5 == 0:
+            tags["addr:unit"] = "A"      # absent on the rest: null-safe equality
+        if i % 11 == 0:
+            tags["shop"] = "bakery"      # not whitelist-clean
+        rows.append(mk_issue(
+            check_id="DUPLICATED", changeset_id=100 + (i * 7) % 60, element_id=i + 1,
+            element_type="node" if i % 2 == 0 else "way", tags=tags, lat=la, lon=lo,
+            timestamp=1_700_000_000 + (i * 13) % 60, bb_m=1500.0 if i % 17 == 3 else 0.0,
+        ))
+    issue_rows = [r for i, r in enumerate(rows) if i % 3 == 0]
+
+    out = duplicates_stage(issues_df(spark, issue_rows), elements_df(spark, rows))
+    got = {(r["check_id"], r["changeset_id"], r["uid"], r["timestamp"]) for r in out.collect()}
+    expect = _duplicates_brute_force(issue_rows, rows)
+    assert len(expect) > 10  # 33 issue and duplicate rows with this seed
+    assert got == expect
 
 
 def _executed_plan(df):
@@ -364,9 +438,10 @@ def _executed_plan(df):
 
 
 def test_spatial_plans_have_no_python(spark):
-    """Scale guard: the spatial joins must stay whole-stage-codegen
-    JVM-native — no row-at-a-time or Arrow Python eval in the plan
-    (BENCH.md 'hot paths are native'). J2 and J4 must match through a
+    """Scale guard: the spatial joins must stay JVM-native — no
+    row-at-a-time or Arrow Python eval in the plan (BENCH.md 'hot paths
+    are native'). J1's join is keyed on the address quintuple besides
+    the cell. J2 and J4 must match through a
     LEFT SEMI join that carries the distance refine in its condition,
     so the hash join stops at the first in-range match; J2 arm A does
     the same with the PIP fold. The polygon cover is a narrow projection:
@@ -401,6 +476,12 @@ def test_spatial_plans_have_no_python(spark):
 
     for plan in (dup_plan, place_plan, mistype_plan, street_plan):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # J1 needs no salting: Catalyst keys its join on the null-safe
+    # address quintuple as well as the cell, so a dense cell spreads
+    # over partitions by address
+    dup_joins = [ln for ln in dup_plan.splitlines() if "Join" in ln and "_cell" in ln]
+    assert dup_joins and all("isnull(_eq0" in ln for ln in dup_joins), dup_plan
+    assert "_salt" not in dup_plan and "_hot" not in dup_plan, dup_plan
     for plan, radius in ((place_plan, PLACE_PROXIMITY_M), (street_plan, max(STREET_TIERS_M))):
         semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
         assert any("ASIN" in ln and f"<= {float(radius)}" in ln for ln in semi), plan
