@@ -36,10 +36,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# default 16, not 32: on the 32-core box each task thread pairs with a
-# pandas-UDF worker process, so local[32] runs ~64 busy processes and is
-# measurably SLOWER than local[16] (32.5 vs 22.9 s at sf0.1; 470.8 vs
-# 444.0 s at 4M docs — BENCH.md). Override via SPARK_GRAFT_CPUS.
+# default 16, not 32: local[32] measured SLOWER than local[16] on a
+# 32-core box (32.5 vs 22.9 s at sf0.1; 470.8 vs 444.0 s at 4M docs —
+# BENCH.md), explained then by a pandas-UDF worker process per task
+# thread. The pipeline now starts no Python worker (parse and report
+# composition are native), and the 16-vs-32 numbers predate both and
+# have not been re-measured. Override via SPARK_GRAFT_CPUS.
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
 
 # documents in the synthetic world per sf unit (sf0.1 -> 12k docs)
@@ -165,10 +167,10 @@ def run_scaling(n_docs: int | None = None, cpus_pair: tuple[int, int] | None = N
 
     Pair defaults to SPARK_GRAFT_SCALING_PAIR (default "4,16"; the
     BASELINE.md-named "8,32" pair is also measured and reported in
-    BENCH.md, but at local[32] each task thread pairs with a pandas-UDF
-    worker process — ~64 busy processes on 32 cores measures
-    oversubscription, not the engine; a real cluster gives executors
-    dedicated cores). World defaults to 4M docs
+    BENCH.md; it was measured when each local[32] task thread paired
+    with a pandas-UDF worker process, ~64 busy processes on 32 cores.
+    The pipeline now starts no Python worker, and that pair has not been
+    re-measured since). World defaults to 4M docs
     (SPARK_GRAFT_SCALING_DOCS) so parallel work dominates the per-box
     serial floor. Shuffle partitions are pinned EQUAL at both levels
     (= hi cpus: identical physical plans, so the pair measures

@@ -30,7 +30,8 @@ Design rules (see SURVEY.md):
     distance refine run in the JVM, no Python. The S2 encode and the
     PIP ray-cast are ``aggregate`` folds, which Spark 4.1.2 evaluates
     interpreted (``CodegenFallback``); the rest is whole-stage codegen.
-    The one pandas UDF in the pipeline composes report messages.
+    Report messages are composed natively too: the pipeline runs no
+    Python UDF and starts no Python worker.
   - Explicit partitioning: spatial shuffles key on cell ids (J1 also on
     the address quintuple, which spreads dense cells), AQE skew-join is
     the backstop, small dims are broadcast.

@@ -18,97 +18,86 @@ Entry order inside a group is the document's span sequence
 (doc_id, span_offset) — the deterministic analog of the reference's
 scan order.
 
-String assembly is not a hot path (one row per changeset): a native
-``collect_list`` gathers each (category, changeset_id) group's entries,
-and one scalar pandas UDF composes the messages of a whole Arrow batch
-of groups. The same pure function serves the golden tests directly.
+The message is one native Column expression, so no Python runs per row.
+Each (category, changeset) group collects its entries once and sorts
+them by (registry order, doc_id, span_offset); the registry's strings
+enter the plan as literal maps.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import NEW_USER_THRESHOLD, PRO_USER_THRESHOLD
 from osm_addr_bot_spark.checks.registry import all_categories
 
-LINK_SORT = {"node": 0, "way": 1, "relation": 2}
+LINK_RANK = {"node": 0, "way": 1, "relation": 2}
+GREETING = "🗺️ Witaj na OpenStreetMap!\n\n"
+SIGN_OFF = "Pozdrawiam! 🦀"
+HELP = "W razie problemów lub pytań, proszę pisać. Chętnie pomogę.\n"
 
 
-def _meta(fidelity: bool = False):
-    """{category: (header, header_critical, docs, {check_id: (ord, desc,
-    extra, docs, critical)})}"""
-    out = {}
-    for cat in all_categories(fidelity):
-        checks = {
-            c.identifier: (i, c.desc, c.extra, c.docs, c.critical)
-            for i, c in enumerate(cat.checks)
-        }
-        out[cat.identifier] = (cat.header, cat.header_critical, cat.docs, checks)
-    return out
+def _literal_map(entries: dict) -> Column:
+    return F.create_map(*[c for k, v in entries.items() for c in (F.lit(k), v)])
 
 
-def compose_message(
-    category: str,
-    issues: Iterable[dict],
-    changesets_count: int,
-    fidelity: bool = False,
-) -> str:
-    """Pure composer over issue dicts with keys: check_id, element_type,
-    element_id, street (addr:street or None), doc_id, span_offset."""
-    header, header_critical, cat_docs, checks = _meta(fidelity)[category]
-    new_user = changesets_count <= NEW_USER_THRESHOLD
-    pro_user = changesets_count >= PRO_USER_THRESHOLD
+def _texts(**fields) -> list[Column]:
+    """Named string literals; None becomes a typed null."""
+    return [F.lit(v).cast("string").alias(k) for k, v in fields.items()]
 
-    rows = sorted(issues, key=lambda r: (r["doc_id"], r["span_offset"]))
-    by_check: dict[str, list[dict]] = {}
-    for r in rows:
-        by_check.setdefault(r["check_id"], []).append(r)
-    ordered_checks = sorted(by_check, key=lambda cid: checks[cid][0])
 
-    message = ""
-    if new_user:
-        message += "🗺️ Witaj na OpenStreetMap!\n\n"
+def _metadata(fidelity: bool) -> tuple[Column, Column]:
+    """Literal maps category -> {header, header_critical, docs} and
+    check_id -> {order, desc, extra, docs}; order is registry order."""
+    cats = all_categories(fidelity)
+    category = _literal_map({
+        c.identifier: F.struct(*_texts(header=c.header, header_critical=c.header_critical, docs=c.docs))
+        for c in cats
+    })
+    check = _literal_map({
+        c.identifier: F.struct(F.lit(i).alias("order"), *_texts(desc=c.desc, extra=c.extra, docs=c.docs))
+        for cat in cats
+        for i, c in enumerate(cat.checks)
+    })
+    return category, check
 
-    is_critical = any(checks[cid][4] for cid in ordered_checks)
-    message += (header_critical if is_critical else header) + "\n\n"
 
-    for cid in ordered_checks:
-        _, desc, extra, _, _ = checks[cid]
-        entries = by_check[cid]
-        if pro_user or extra is None:
-            message += desc + "\n"
-        else:
-            message += desc + " " + extra + "\n"
+def _links(entries: Column) -> Column:
+    """One URL line per entry: node < way < relation, span order within a type."""
+    ordered = F.array_sort(
+        F.transform(entries, lambda e: F.struct(e["link_rank"], e["doc_id"], e["span_offset"], e["link"]))
+    )
+    return F.array_join(F.transform(ordered, lambda e: e["link"]), "")
 
-        # title grouping (reference check.py:25-37)
-        groups: dict[str, list[dict]] = {}
-        if cid == "UNKNOWN_STREET_NAME" and len(entries) >= 3:
-            for e in entries:
-                groups.setdefault(f'"{e["street"]}":', []).append(e)
-        else:
-            groups[""] = entries
 
-        for title, title_entries in groups.items():
-            if title:
-                message += f"\n{title}\n"
-            for e in sorted(title_entries, key=lambda e: LINK_SORT[e["element_type"]]):
-                message += f"https://www.openstreetmap.org/{e['element_type']}/{e['element_id']}\n"
-        message += "\n"
+def _check_block(entries: Column, check_id: Column, check: Column, pro_user: Column) -> Column:
+    """desc[ extra] line, the links (under street titles where the
+    reference groups them), then a blank line."""
+    own = F.filter(entries, lambda e: e["check_id"] == check_id)
+    meta = F.element_at(check, check_id)
+    desc, extra = meta["desc"], meta["extra"]
+    line = F.when(pro_user | extra.isNull(), desc).otherwise(F.concat(desc, F.lit(" "), extra))
+    titled = F.transform(
+        F.array_distinct(F.transform(own, lambda e: e["street"])),
+        lambda street: F.concat(
+            F.lit('\n"'), street, F.lit('":\n'), _links(F.filter(own, lambda e: e["street"] == street))
+        ),
+    )
+    links = F.when((check_id == "UNKNOWN_STREET_NAME") & (F.size(own) >= 3), F.array_join(titled, "")).otherwise(
+        _links(own)
+    )
+    return F.concat(line, F.lit("\n"), links, F.lit("\n"))
 
-    docs = [d for d in [cat_docs] + [checks[cid][3] for cid in ordered_checks] if d]
-    if not pro_user and docs:
-        message += "\n\n".join(docs)
-        message += "\n\n"
 
-    if pro_user:
-        message += "Pozdrawiam! 🦀"
-    else:
-        message += "W razie problemów lub pytań, proszę pisać. Chętnie pomogę.\nPozdrawiam! 🦀"
-    return message
+def _footer(category_docs: Column, check_ids: Column, check: Column, pro_user: Column) -> Column:
+    """Category docs, then each block's check docs; none for pro users."""
+    docs = F.filter(
+        F.concat(F.array(category_docs), F.transform(check_ids, lambda c: F.element_at(check, c)["docs"])),
+        lambda d: d.isNotNull(),
+    )
+    footer = F.concat(F.array_join(docs, "\n\n"), F.lit("\n\n"))
+    return F.when(~pro_user & (F.size(docs) > 0), footer).otherwise(F.lit(""))
 
 
 def compose_reports(issues: DataFrame, users: DataFrame, fidelity: bool = False) -> DataFrame:
@@ -120,51 +109,40 @@ def compose_reports(issues: DataFrame, users: DataFrame, fidelity: bool = False)
     split's changesets join) and ``street`` (addr:street, extracted
     before the pipeline dropped the tags map), so neither the
     data-sized changesets dim nor the tags map is needed here."""
-    enriched = (
-        issues.join(
-            F.broadcast(users.selectExpr("user_uid as cs_uid", "changesets_count")),
-            "cs_uid",
+    category, check = _metadata(fidelity)
+    kind = F.col("element_type")
+    link = F.concat(F.lit("https://www.openstreetmap.org/"), kind, F.lit("/"), F.col("element_id").cast("string"))
+    entry = F.struct(
+        F.element_at(check, F.col("check_id"))["order"].alias("order"),
+        "doc_id",
+        "span_offset",
+        F.element_at(_literal_map({k: F.lit(r) for k, r in LINK_RANK.items()}), kind).alias("link_rank"),
+        "check_id",
+        "street",
+        F.concat(link, F.lit("\n")).alias("link"),
+    )
+    grouped = (
+        issues.join(F.broadcast(users.selectExpr("user_uid as cs_uid", "changesets_count")), "cs_uid")
+        .groupBy("category", "changeset_id")
+        .agg(
+            F.array_sort(F.collect_list(entry)).alias("entries"),
+            F.first("changesets_count").alias("changesets_count"),
+            F.count("*").alias("n_issues"),
+            F.max("critical").alias("is_critical"),
         )
-        .select(
-            "category",
-            "changeset_id",
-            "check_id",
-            "critical",
-            "element_type",
-            "element_id",
-            "street",
-            "doc_id",
-            "span_offset",
-            "changesets_count",
-        )
     )
 
-    # One native collect_list per changeset, then a SCALAR pandas UDF over
-    # the collected entry arrays: each Arrow batch composes thousands of
-    # changesets in one Python call (vs applyInPandas building a pandas
-    # DataFrame per group — ~50x less per-group overhead at scale).
-    grouped = enriched.groupBy("category", "changeset_id").agg(
-        F.collect_list(
-            F.struct("check_id", "element_type", "element_id", "street", "doc_id", "span_offset")
-        ).alias("entries"),
-        F.first("changesets_count").alias("changesets_count"),
-        F.count("*").alias("n_issues"),
-        F.max("critical").alias("is_critical"),
+    entries = F.col("entries")
+    check_ids = F.array_distinct(F.transform(entries, lambda e: e["check_id"]))
+    count = F.col("changesets_count")
+    pro_user = count >= PRO_USER_THRESHOLD
+    cat = F.element_at(category, F.col("category"))
+    message = F.concat(
+        F.when(count <= NEW_USER_THRESHOLD, F.lit(GREETING)).otherwise(F.lit("")),
+        F.when(F.col("is_critical"), cat["header_critical"]).otherwise(cat["header"]),
+        F.lit("\n\n"),
+        F.array_join(F.transform(check_ids, lambda c: _check_block(entries, c, check, pro_user)), ""),
+        _footer(cat["docs"], check_ids, check, pro_user),
+        F.when(pro_user, F.lit(SIGN_OFF)).otherwise(F.lit(HELP + SIGN_OFF)),
     )
-
-    import pyspark.sql.types as T
-
-    @F.pandas_udf(T.StringType())
-    def _compose_udf(category: pd.Series, entries: pd.Series, counts: pd.Series) -> pd.Series:
-        out = []
-        for cat, ents, cnt in zip(category, entries, counts):
-            out.append(compose_message(cat, list(ents), int(cnt), fidelity))
-        return pd.Series(out)
-
-    return grouped.select(
-        "category",
-        "changeset_id",
-        _compose_udf(F.col("category"), F.col("entries"), F.col("changesets_count")).alias("message"),
-        "n_issues",
-        "is_critical",
-    )
+    return grouped.select("category", "changeset_id", message.alias("message"), "n_issues", "is_critical")

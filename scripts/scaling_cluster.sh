@@ -3,7 +3,7 @@
 # multi-executor standalone cluster at N=1 and 4N=4 EXECUTORS
 # (2 cores / 4g each), identical input, identical knobs.
 #
-# Design notes (vs the rejected round-1 attempt in scaling_bench.sh,
+# Design notes (vs the rejected round-1 standalone-cluster attempt,
 # which measured 0.22 with 4x4-core executors):
 #   * spark.locality.wait=0 — the pipeline persists intermediates, so
 #     with >1 executor the scheduler otherwise waits up to 3s per task

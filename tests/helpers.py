@@ -74,3 +74,23 @@ def elements_df(spark, rows):
         "tags", "lat", "lon", "minlat", "minlon", "maxlat", "maxlon",
         "bb_width_m", "bb_height_m", "uid", "hex9", "s2_15",
     )
+
+
+PYTHON_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas")
+
+
+def executed_plan(df):
+    """df's executed plan as text, untruncated. Spark elides the fields
+    past ``spark.sql.debug.maxToStringFields`` (25), so a name can be
+    missing from the default dump only because it was cut; the limit is
+    raised for this one dump and restored after."""
+    key = "spark.sql.debug.maxToStringFields"
+    conf = df.sparkSession.conf
+    prev = conf.get(key)
+    conf.set(key, str(2**31 - 1))
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        conf.set(key, prev)
+    assert "more fields" not in plan
+    return plan

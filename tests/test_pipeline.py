@@ -14,9 +14,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
 from osm_addr_bot_spark.datagen import T0, WINDOW_S, ensure_dataset
-from osm_addr_bot_spark.operators.report import compose_message
+from osm_addr_bot_spark.checks.registry import all_categories
+from osm_addr_bot_spark.operators.report import compose_reports
 from osm_addr_bot_spark.pipeline import _estimated_scan_partitions, load_tables, run_pipeline
+from osm_addr_bot_spark.schemas import TABLE_DDL
 from osm_addr_bot_spark.state.checkpoint import Checkpoint
+from tests.helpers import PYTHON_EVAL_NODES, executed_plan
 
 OTHER_SYNTH_DIR = "/tmp/osm_addr_bot_synth/test-seed7"
 
@@ -129,17 +132,40 @@ def test_priority_dedup_idempotent_in_pipeline(spark, synth_dir):
     assert once.count() == twice.count()
 
 
-def test_compose_message_goldens():
+_REPORT_ISSUES = (
+    "category string, changeset_id long, cs_uid long, check_id string, critical boolean,"
+    " element_type string, element_id long, street string, doc_id string, span_offset int"
+)
+_CRITICAL = {c.identifier: c.critical for cat in all_categories() for c in cat.checks}
+
+
+def _issue(check_id, element_type, element_id, doc_id, span_offset, street=None):
+    """One ADDRESS issue of changeset 1 by user 7, as a _REPORT_ISSUES row."""
+    return ("ADDRESS", 1, 7, check_id, _CRITICAL[check_id], element_type, element_id, street, doc_id, span_offset)
+
+
+def _message(spark, issues, changesets_count, fidelity):
+    """compose_reports over one changeset's issues -> its message."""
+    users = spark.createDataFrame([(7, "u", changesets_count)], TABLE_DDL["users"])
+    [report] = compose_reports(spark.createDataFrame(issues, _REPORT_ISSUES), users, fidelity).collect()
+    assert report["n_issues"] == len(issues)
+    return report["message"]
+
+
+FIDELITY = pytest.mark.parametrize("fidelity", [False, True], ids=["default", "fidelity"])
+
+
+@FIDELITY
+def test_compose_reports_goldens(spark, fidelity):
     """Byte-exact U5 goldens (FIXTURES.md §5) — derived from the cited
-    template (reference main.py:108-162), not copied output."""
+    template (reference main.py:108-162), not copied output. Messages do
+    not depend on ``fidelity``."""
     issues = [
-        {"check_id": "BAD_POSTCODE_FORMAT", "element_type": "way", "element_id": 9,
-         "street": None, "doc_id": "d1", "span_offset": 1},
-        {"check_id": "BAD_POSTCODE_FORMAT", "element_type": "node", "element_id": 3,
-         "street": None, "doc_id": "d1", "span_offset": 0},
+        _issue("BAD_POSTCODE_FORMAT", "way", 9, "d1", 1),
+        _issue("BAD_POSTCODE_FORMAT", "node", 3, "d1", 0),
     ]
     # new user (count <= 15): greeting + extra + docs + help sign-off
-    msg = compose_message("ADDRESS", issues, changesets_count=5)
+    msg = _message(spark, issues, 5, fidelity)
     assert msg == (
         "🗺️ Witaj na OpenStreetMap!\n\n"
         "Zauważyłem, że Twoja zmiana zawiera niepoprawne adresy. "
@@ -155,7 +181,7 @@ def test_compose_message_goldens():
         "Pozdrawiam! 🦀"
     )
     # pro user (count >= 800): no greeting, no extra, no docs, short sign-off
-    msg_pro = compose_message("ADDRESS", issues, changesets_count=1000)
+    msg_pro = _message(spark, issues, 1000, fidelity)
     assert msg_pro == (
         "Zauważyłem, że Twoja zmiana zawiera niepoprawne adresy. "
         "Przygotowałem listę obiektów do poprawy oraz dodatkowe informacje:\n\n"
@@ -167,22 +193,76 @@ def test_compose_message_goldens():
     )
 
 
-def test_compose_message_street_title_grouping():
+@FIDELITY
+def test_compose_reports_block_link_and_footer_order(spark, fidelity):
+    """Two checks whose span order is the reverse of their registry
+    order: blocks follow the registry (main.py:132-133), links within a
+    block go node < way < relation and keep span order within a type
+    (main.py:19-23, 140), and the footer lists the category docs, then
+    each block's check docs (main.py:150-154)."""
+    issues = [
+        _issue("STREET_NAME_WITH_PREFIX", "relation", 5, "d1", 0),
+        _issue("STREET_NAME_WITH_PREFIX", "node", 8, "d1", 1),
+        _issue("STREET_NAME_WITH_PREFIX", "way", 2, "d2", 0),
+        _issue("STREET_NAME_WITH_PREFIX", "node", 1, "d2", 1),
+        _issue("BAD_POSTCODE_FORMAT", "way", 4, "d2", 2),
+        _issue("BAD_POSTCODE_FORMAT", "relation", 3, "d2", 3),
+        _issue("BAD_POSTCODE_FORMAT", "node", 6, "d3", 0),
+    ]
+    # a regular user (15 < count < 800): no greeting, extras, docs footer
+    assert _message(spark, issues, 100, fidelity) == (
+        "Zauważyłem, że Twoja zmiana zawiera niepoprawne adresy. "
+        "Przygotowałem listę obiektów do poprawy oraz dodatkowe informacje:\n\n"
+        "Nieprawidłowa wartość addr:postcode. "
+        "Kod pocztowy powinien być formatu XX-XXX, gdzie X oznacza cyfrę.\n"
+        "https://www.openstreetmap.org/node/6\n"
+        "https://www.openstreetmap.org/way/4\n"
+        "https://www.openstreetmap.org/relation/3\n"
+        "\n"
+        "Nazwa ulicy nie powinna zawierać przedrostka. "
+        "Nazwa ulicy nie powinna zaczynać się od 'ul.', 'ulica' itp. "
+        "Należy usunąć przedrostek i pozostawić samą nazwę ulicy.\n"
+        "https://www.openstreetmap.org/node/8\n"
+        "https://www.openstreetmap.org/node/1\n"
+        "https://www.openstreetmap.org/way/2\n"
+        "https://www.openstreetmap.org/relation/5\n"
+        "\n"
+        "Dokumentacja adresów (po polsku):\n"
+        "https://wiki.openstreetmap.org/wiki/Pl:Key:addr:*\n\n"
+        "Zasady nazewnictwa ulic w polsce:\n"
+        "https://wiki.osm.org/Pl:Znakowanie_dróg_w_Polsce#Nazewnictwo_ulic\n\n"
+        "W razie problemów lub pytań, proszę pisać. Chętnie pomogę.\n"
+        "Pozdrawiam! 🦀"
+    )
+
+
+@FIDELITY
+def test_compose_reports_street_title_grouping(spark, fidelity):
     # >= 3 UNKNOWN_STREET_NAME entries group by street (reference check.py:25-37)
     issues = [
-        {"check_id": "UNKNOWN_STREET_NAME", "element_type": "node", "element_id": i,
-         "street": s, "doc_id": "d1", "span_offset": i}
+        _issue("UNKNOWN_STREET_NAME", "node", i, "d1", i, street=s)
         for i, s in enumerate(["Polna", "Polna", "Leśna"])
     ]
-    msg = compose_message("ADDRESS", issues, changesets_count=100)
+    msg = _message(spark, issues, 100, fidelity)
     assert '\n"Polna":\n' in msg and '\n"Leśna":\n' in msg
     assert msg.index('"Polna"') < msg.index('"Leśna"')  # first-occurrence order
     # non-critical check only -> non-critical header
     assert msg.startswith("Zauważyłem, że Twoja zmiana zawiera adresy wymagające")
 
     # 2 entries: no titles
-    msg2 = compose_message("ADDRESS", issues[:2], changesets_count=100)
+    msg2 = _message(spark, issues[:2], 100, fidelity)
     assert '"Polna"' not in msg2
+
+
+def test_pipeline_plans_have_no_python(spark, synth_dir):
+    """The pipeline starts no Python worker: none of the six outputs'
+    executed plans, read untruncated, has a Python eval node."""
+    out = run_pipeline(spark, synth_dir, start_ts=T0, end_ts=T0 + WINDOW_S)
+    outputs = ("elements", "issues", "rescheduled", "reports", "tiles", "overlap")
+    assert set(outputs) <= set(out)
+    for name in outputs:
+        plan = executed_plan(out[name])
+        assert not [n for n in PYTHON_EVAL_NODES if n in plan], (name, plan)
 
 
 def _issue_keys(df):

@@ -18,7 +18,9 @@ from osm_addr_bot_spark.operators.duplicates import duplicates_stage
 from osm_addr_bot_spark.operators.guilt import filter_guilty
 from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in_area_stage
 from osm_addr_bot_spark.operators.streets import street_names_stage
-from tests.helpers import ISSUE_SCHEMA, elements_df, issues_df, mk_issue, offset
+from tests.helpers import (
+    ISSUE_SCHEMA, PYTHON_EVAL_NODES, elements_df, executed_plan, issues_df, mk_issue, offset,
+)
 
 LAT, LON = 52.1, 21.1
 ADDR = {"addr:city": "Warszawa", "addr:housenumber": "7", "addr:street": "Polna"}
@@ -433,10 +435,6 @@ def test_duplicates_dense_cell_matches_brute_force(spark):
     assert got == expect
 
 
-def _executed_plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_spatial_plans_have_no_python(spark):
     """Scale guard: the spatial joins must stay JVM-native — no
     row-at-a-time or Arrow Python eval in the plan (BENCH.md 'hot paths
@@ -450,7 +448,7 @@ def test_spatial_plans_have_no_python(spark):
                      tags=dict(ADDR), lat=LAT, lon=LON)
     cand = mk_issue(changeset_id=2, element_id=2, element_type="way",
                     tags=dict(ADDR), lat=LAT, lon=LON)
-    dup_plan = _executed_plan(
+    dup_plan = executed_plan(
         duplicates_stage(issues_df(spark, [issue]), elements_df(spark, [issue, cand]))
     )
 
@@ -461,21 +459,21 @@ def test_spatial_plans_have_no_python(spark):
     bcwp = mk_issue(check_id="BAD_CITY_WITH_PLACE", post_stage="place_not_in_area",
                     changeset_id=1, element_id=1, tags={"addr:place": "Wola"},
                     lat=LAT, lon=LON)
-    place_plan = _executed_plan(
+    place_plan = executed_plan(
         place_not_in_area_stage(issues_df(spark, [bcwp]), polys, place_nodes)
     )
     mistype = mk_issue(check_id="PLACE_MISTYPE", post_stage="place_mistype",
                        changeset_id=1, element_id=1, tags={"addr:place": "wola"},
                        lat=LAT, lon=LON)
-    mistype_plan = _executed_plan(place_mistype_stage(issues_df(spark, [mistype]), polys))
-    street_plan = _executed_plan(
+    mistype_plan = executed_plan(place_mistype_stage(issues_df(spark, [mistype]), polys))
+    street_plan = executed_plan(
         street_names_stage(
             issues_df(spark, [_usn(1, "Polna")]), _streets(spark, [_street_at(400, "Polna")])
         )
     )
 
     for plan in (dup_plan, place_plan, mistype_plan, street_plan):
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        assert not [n for n in PYTHON_EVAL_NODES if n in plan], plan
     # J1 needs no salting: Catalyst keys its join on the null-safe
     # address quintuple as well as the cell, so a dense cell spreads
     # over partitions by address
