@@ -26,8 +26,8 @@ def radius_prefilter(
     lat2: Column,
     lon2: Column,
     radius_m: float,
-    cos_lat1: Column | None = None,
-    cos_lat2: Column | None = None,
+    cos_lat1: Column,
+    cos_lat2: Column,
 ) -> Column:
     """Cheap NECESSARY condition for ``haversine_m(p1, p2) <= radius_m``
     — a bounding-box prefilter that short-circuits the trig-heavy exact
@@ -46,22 +46,19 @@ def radius_prefilter(
                                                  <= 90 * r / R
 
     A 1e-4 relative margin absorbs fp noise; false positives only cost
-    one haversine evaluation, false negatives cannot occur. Pass
-    ``cos_lat1/2`` when the join sides carry a precomputed
-    ``cos(radians(lat))`` column (one cos per ROW instead of two per
-    candidate PAIR); with them the prefilter is subtract/abs/compare
-    arithmetic only.
+    one haversine evaluation, false negatives cannot occur.
+    ``cos_lat1/2`` are each side's precomputed ``cos(radians(lat))``
+    column (one cos per ROW instead of two per candidate PAIR), so the
+    prefilter is subtract/abs/compare arithmetic only.
     """
     m = 1.0 + 1e-4
     dlat_ok = F.abs(lat2 - lat1) <= F.lit(m * radius_m / DEG_LAT_M)
-    c1 = F.cos(F.radians(lat1)) if cos_lat1 is None else cos_lat1
-    c2 = F.cos(F.radians(lat2)) if cos_lat2 is None else cos_lat2
     # wrap the raw difference so antimeridian-crossing pairs (|dlon|
     # > 180 with lons in [-180, 180]) keep the short-way separation the
     # haversine itself uses — the sin x >= 2x/pi step needs dlon <= 180
     dlon = F.abs(lon2 - lon1)
     dlon = F.least(dlon, F.lit(360.0) - dlon)
-    dlon_ok = dlon * F.least(c1, c2) <= F.lit(m * 90.0 * radius_m / EARTH_RADIUS_M)
+    dlon_ok = dlon * F.least(cos_lat1, cos_lat2) <= F.lit(m * 90.0 * radius_m / EARTH_RADIUS_M)
     return dlat_ok & dlon_ok
 
 

@@ -37,8 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm_addr_bot_spark.config import HEX_LAT0_DEG
-
-EARTH_RADIUS_M = 6_371_008.8
+from osm_addr_bot_spark.geo.haversine import EARTH_RADIUS_M
 
 # H3-ish average hex edge length in meters per resolution
 EDGE_M = {

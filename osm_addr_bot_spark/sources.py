@@ -1,34 +1,29 @@
-"""Table sources — parquet now, Iceberg/Delta behind capability gates.
+"""Table sources: a world is a directory of plain parquet tables.
 
 The engine targets Iceberg-style tables (BASELINE.json input_hint): at
 production scale the documents table is an Iceberg table partitioned by
 a time bucket (partition pruning for the incremental window, S1). No
 table here is sorted or clustered by a spatial key: the documents hold
 raw span text, and the S2 id exists only after parse. The sandbox image
-ships no Iceberg/Delta jars, so those formats are import-try gated;
-parquet carries the same schema and all tests/benches.
+ships no Iceberg/Delta jars; parquet carries the same schema and all
+tests/benches.
 
-Time travel (S2 snapshot scan, reference overpass.py:92-98) maps to
-`VERSION AS OF` on Iceberg; the engine's `elements_history` table with
-[valid_from, valid_to) intervals is the format-agnostic equivalent used
-everywhere here.
+Time travel (S2 snapshot scan, reference overpass.py:92-98) is the
+engine's `elements_history` table with [valid_from, valid_to)
+intervals, read by the as-of join (operators/guilt.py).
 """
 
 from __future__ import annotations
 
-import fcntl
 import json
 import os
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def table_stats(location: str) -> dict | None:
     """Commit metadata of a plain-parquet table directory
     (``_table_stats.json``, written by datagen at generation time) —
     the stand-in for Iceberg snapshot summary properties. Returns None
-    when the table carries no sidecar (caller falls back to scanning).
+    when the table carries no sidecar.
 
     The point (VERDICT r2 item 4): the source high-watermark (S4, the
     reference's timestamp_osm_base clock, overpass.py:161-169) is ONE
@@ -43,197 +38,10 @@ def table_stats(location: str) -> dict | None:
 
 
 def source_clock(data_dir: str) -> int | None:
-    """High watermark of the documents table from metadata only:
-    the snapshot manifest's latest commit when the table is a snapshot
-    table, else the stats sidecar. None -> caller must scan.
-
-    Manifest entries carry ``max_data_ts`` (event-time max, recorded at
-    write_snapshot time) when the committer provided one; that is
-    preferred over the commit clock, because late or future-dated rows
-    can carry event timestamps LATER than the commit instant and a
-    commit-clock watermark would place them outside every incremental
-    window (ADVICE r3). The watermark is computed PER LIVE entry —
-    ``max_data_ts`` when the entry recorded one, else its commit clock
-    (assumption: commit time bounds event time for that batch) — and
-    maxed across entries whose data files are still referenced by the
-    latest snapshot. Mixing the two per entry matters (ADVICE r4): a
-    later append without the optional field must still advance the
-    watermark, and an overwritten snapshot's dead entries must not feed
-    it (a stale ``max_data_ts`` larger than the live data's would
-    over-state it; the old code did both wrong once ANY entry carried
-    the field)."""
-    doc_dir = os.path.join(data_dir, "documents.parquet")
-    try:
-        log = _read_manifest(doc_dir)
-        if log:
-            # entry liveness: each entry's file list is the FULL table at
-            # that snapshot (append includes prior files), so the data an
-            # entry introduced is its delta vs the previous entry; the
-            # entry is live iff that delta survives in the latest
-            # snapshot's file list (overwrites kill all prior deltas)
-            live_files = set(log[-1]["files"])
-            prev_files: set[str] = set()
-            watermark: int | None = None
-            for entry in log:
-                cur_files = set(entry["files"])
-                delta = cur_files - prev_files
-                prev_files = cur_files
-                if not delta or not delta <= live_files:
-                    continue  # empty commit or superseded by an overwrite
-                ts = entry.get("max_data_ts")
-                entry_wm = int(ts) if ts is not None else int(entry["timestamp_ms"]) // 1000
-                watermark = entry_wm if watermark is None else max(watermark, entry_wm)
-            if watermark is not None:
-                return watermark
-    except FileNotFoundError:
-        pass
-    stats = table_stats(data_dir) or table_stats(doc_dir)
+    """High watermark of the world at ``data_dir`` from metadata only:
+    the stats sidecar's ``max_timestamp``. None for a bare table, whose
+    caller takes the clock from the parsed elements instead."""
+    stats = table_stats(data_dir)
     if stats and "max_timestamp" in stats:
         return int(stats["max_timestamp"])
     return None
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    # NB: attribute access on spark._jvm returns a lazy JavaPackage even
-    # for missing classes — an actual Class.forName is required
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def snapshot_as_of(spark: SparkSession, location: str, timestamp_ms: int) -> DataFrame:
-    """Historical snapshot scan (S2, reference overpass.py:92-98 — the
-    `[date:...]` Overpass setting selecting a past database state).
-
-    Iceberg time travel when the runtime is present; otherwise a
-    manifest-pinned snapshot table (`write_snapshot` layout below),
-    which carries the same semantics — each snapshot is an immutable
-    list of data files, as-of selects the latest snapshot at or before
-    the timestamp and reads exactly its files.
-    """
-    if iceberg_available(spark):
-        return (
-            spark.read.format("iceberg")
-            .option("as-of-timestamp", str(timestamp_ms))
-            .load(location)
-        )
-    return _manifest_snapshot_as_of(spark, location, timestamp_ms)
-
-
-# --- manifest-pinned snapshot tables (filesystem stand-in for Iceberg) ---
-#
-# Layout:
-#   <location>/_snapshots.json   ordered [{snapshot_id, timestamp_ms, files}]
-#   <location>/data/s<WWID>-part-*.parquet
-#
-# Semantics mirror Iceberg's copy-on-write table: every snapshot pins the
-# FULL list of live data files; commit is an atomic tmp-file + rename (the
-# same commit point the checkpoint state machine uses, state/checkpoint.py);
-# readers never list the directory, they read the manifest. At 100 TB the
-# manifest becomes Iceberg's avro manifest tree — the driver-side cost here
-# is one small JSON read, the data-file list goes straight into the parquet
-# scan (partition pruning and split planning unchanged).
-
-_MANIFEST = "_snapshots.json"
-
-
-def _read_manifest(location: str) -> list[dict]:
-    path = os.path.join(location, _MANIFEST)
-    if not os.path.exists(path):
-        raise FileNotFoundError(f"not a snapshot table (no {_MANIFEST}): {location}")
-    with open(path) as f:
-        return json.load(f)
-
-
-def snapshots(location: str) -> list[dict]:
-    """Snapshot log, oldest first (Iceberg `table.snapshots()`)."""
-    return _read_manifest(location)
-
-
-def write_snapshot(
-    df: DataFrame,
-    location: str,
-    timestamp_ms: int,
-    *,
-    mode: str = "overwrite",
-    max_data_ts: int | None = None,
-) -> dict:
-    """Commit `df` as a new snapshot of the table at `location`.
-
-    mode='overwrite': the new snapshot's file list is just this write
-    (full-table rewrite); mode='append': previous snapshot's files plus
-    this write. Data files are immutable once committed — a new snapshot
-    never touches old files, so concurrent readers of an older snapshot
-    are unaffected (Iceberg's reader isolation).
-
-    ``max_data_ts``: event-time max of the rows in `df` (seconds), the
-    Iceberg snapshot-summary analog; ``source_clock`` prefers it over
-    the commit clock so late/future-dated rows stay inside the
-    incremental window (ADVICE r3). Ingestion writers usually have this
-    number for free (they bounded the batch); pass it whenever known.
-    """
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    os.makedirs(os.path.join(location, "data"), exist_ok=True)
-    # the data write happens OUTSIDE the commit lock (it's the long part
-    # and produces only unreferenced files until the manifest lists
-    # them); the read-manifest -> validate -> write-manifest section is
-    # serialized with an exclusive flock (ADVICE r2: two unlocked
-    # committers would both read the same log and the second os.replace
-    # silently discarded the first one's snapshot — the checkpoint state
-    # machine this layout cites has always flocked, state/checkpoint.py)
-    staging = tempfile.mkdtemp(dir=os.path.join(location, "data"), prefix="stage-")
-    os.rmdir(staging)  # parquet writer wants to create it
-    df.write.mode("errorifexists").parquet(staging)
-    files = sorted(
-        os.path.join(staging, f)
-        for f in os.listdir(staging)
-        if f.endswith(".parquet")
-    )
-    lock_path = os.path.join(location, "._snapshots.lock")
-    with open(lock_path, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            log = _read_manifest(location)
-        except FileNotFoundError:
-            log = []
-        if log and log[-1]["timestamp_ms"] >= timestamp_ms:
-            raise ValueError(
-                f"snapshot timestamps must increase: have {log[-1]['timestamp_ms']}, "
-                f"got {timestamp_ms}"
-            )
-        snap_id = (log[-1]["snapshot_id"] + 1) if log else 1
-        prev_files = log[-1]["files"] if (mode == "append" and log) else []
-        entry = {
-            "snapshot_id": snap_id,
-            "timestamp_ms": int(timestamp_ms),
-            "max_data_ts": int(max_data_ts) if max_data_ts is not None else None,
-            "files": prev_files + files,
-        }
-        log.append(entry)
-        # atomic commit: manifest rename is the commit point
-        fd, tmp = tempfile.mkstemp(dir=location, prefix="._snapshots-")
-        with os.fdopen(fd, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, os.path.join(location, _MANIFEST))
-    return entry
-
-
-def _manifest_snapshot_as_of(
-    spark: SparkSession, location: str, timestamp_ms: int
-) -> DataFrame:
-    log = _read_manifest(location)
-    live = [s for s in log if s["timestamp_ms"] <= timestamp_ms]
-    if not live:
-        raise ValueError(
-            f"no snapshot at or before {timestamp_ms} "
-            f"(earliest is {log[0]['timestamp_ms'] if log else 'none'})"
-        )
-    snap = live[-1]
-    if not snap["files"]:  # a committed empty table
-        raise ValueError(f"snapshot {snap['snapshot_id']} has no data files")
-    return spark.read.parquet(*snap["files"])

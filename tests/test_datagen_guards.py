@@ -1,11 +1,11 @@
 """Generator guards added in r3 (ADVICE items): versioned reuse marker,
-uid-headroom assert, table-stats sidecar + metadata-only watermark probe.
+uid-headroom assert, table-stats sidecar + metadata-only watermark probe,
+and the bare-table clock fallback.
 """
 
 from __future__ import annotations
 
-import json
-import threading
+import shutil
 
 import pytest
 
@@ -58,6 +58,7 @@ def test_watermark_probe_is_metadata_only(spark, tmp_path, monkeypatch):
     from pyspark.sql import DataFrame
 
     from osm_addr_bot_spark.pipeline import run_pipeline
+    from osm_addr_bot_spark.state.checkpoint import Checkpoint
 
     world = tmp_path / "w"
     datagen.generate(world, n_docs=20, seed=1)
@@ -72,44 +73,9 @@ def test_watermark_probe_is_metadata_only(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # and the computed window is the sidecar clock, capped by the
     # checkpoint's max-window rule
-    assert out["elements"].count() >= 0
-
-
-def test_concurrent_snapshot_commits_never_lose_entries(spark, tmp_path):
-    """ADVICE r2: write_snapshot's read-modify-write of _snapshots.json
-    is now flocked — concurrent committers either land in the log or
-    raise the monotonicity conflict; a reported success must never be
-    silently discarded by a racing os.replace."""
-    loc = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "a")], "id int, tag string")
-    sources.write_snapshot(df, loc, timestamp_ms=100)
-
-    results: dict[int, Exception | dict] = {}
-    barrier = threading.Barrier(4)
-
-    def commit(ts: int):
-        barrier.wait()
-        try:
-            results[ts] = sources.write_snapshot(df, loc, timestamp_ms=ts, mode="append")
-        except Exception as e:  # noqa: BLE001 — monotonicity conflict is legal
-            results[ts] = e
-
-    threads = [threading.Thread(target=commit, args=(200 + i,)) for i in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    log = sources.snapshots(loc)
-    committed_ts = {s["timestamp_ms"] for s in log}
-    successes = {ts for ts, r in results.items() if isinstance(r, dict)}
-    conflicts = {ts for ts, r in results.items() if isinstance(r, ValueError)}
-    assert successes | conflicts == set(results)  # no other failure mode
-    assert successes  # at least one concurrent commit lands
-    assert successes <= committed_ts  # NO lost updates
-    assert len(log) == 1 + len(successes)
-    with open(f"{loc}/_snapshots.json") as f:
-        assert json.load(f) == log
+    clock = sources.table_stats(str(world))["max_timestamp"]
+    want = Checkpoint(str(tmp_path / "fresh")).compute_window(now=clock, source_max_ts=clock + 1)
+    assert out["commit"]()["end_ts"] == want[1]
 
 
 def test_blessed_legacy_marker_gets_sidecar(tmp_path):
@@ -126,25 +92,9 @@ def test_blessed_legacy_marker_gets_sidecar(tmp_path):
     assert sources.source_clock(str(legacy_world)) == stats["max_timestamp"]
 
 
-def test_snapshot_max_data_ts_preferred_over_commit_clock(spark, tmp_path):
-    """ADVICE r3: event timestamps can run AHEAD of the commit clock
-    (future-dated rows); a commit recording max_data_ts wins the
-    source-clock probe so those rows stay inside the window."""
-    world = tmp_path / "w"
-    loc = str(world / "documents.parquet")
-    df = spark.range(3).selectExpr("cast(id as string) AS doc_id")
-    sources.write_snapshot(df, loc, timestamp_ms=1_700_000_000_000)
-    # no data-time recorded -> commit clock (documented assumption)
-    assert sources.source_clock(str(world)) == 1_700_000_000
-    sources.write_snapshot(
-        df, loc, timestamp_ms=1_700_000_100_000, max_data_ts=1_700_009_999
-    )
-    assert sources.source_clock(str(world)) == 1_700_009_999
-
-
 def test_bare_table_watermark_fallback_warns(spark, tmp_path):
     """VERDICT r3 #4: the full-scan watermark fallback (bare table, no
-    sidecar/manifest) must be loud; a datagen world must stay silent."""
+    sidecar) must be loud; a datagen world must stay silent."""
     import warnings as _warnings
 
     from osm_addr_bot_spark.pipeline import run_pipeline
@@ -163,6 +113,29 @@ def test_bare_table_watermark_fallback_warns(spark, tmp_path):
     with pytest.warns(RuntimeWarning, match="FULL SCAN"):
         out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c2"))
     assert "commit" in out  # fallback still computes a window
+
+
+def test_bare_table_clock_is_newest_parsed_element(spark, synth_dir, tmp_path):
+    """A bare table's clock is the newest timestamp over ALL parsed
+    elements. A document carries several elements; reading only each
+    document's first text span under-states the clock, and the last
+    window of a drain then leaves the newest elements out."""
+    from pyspark.sql import functions as F
+
+    from osm_addr_bot_spark.operators.parse import parse_elements
+    from osm_addr_bot_spark.pipeline import run_pipeline
+    from osm_addr_bot_spark.state.checkpoint import Checkpoint
+
+    world = tmp_path / "w"
+    shutil.copytree(synth_dir, world)
+    (world / "_table_stats.json").unlink()
+    docs = spark.read.parquet(str(world / "documents.parquet"))
+    newest = parse_elements(docs).agg(F.max("timestamp")).first()[0]
+
+    with pytest.warns(RuntimeWarning, match="FULL SCAN"):
+        out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "ckpt"))
+    want = Checkpoint(str(tmp_path / "fresh")).compute_window(now=newest, source_max_ts=newest + 1)
+    assert out["commit"]()["end_ts"] == want[1]
 
 
 def test_table_ddl_matches_generated_schemas(spark, synth_dir):

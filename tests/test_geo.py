@@ -226,9 +226,12 @@ def test_radius_prefilter_never_drops_a_true_match(spark):
         ((lon1 + 180.0 + rng.uniform(-0.05, 0.05, n)) + 180.0) % 360.0 - 180.0,
         lon1 + rng.uniform(-0.03, 0.03, n),
     )
+    # per-side cos columns, built the way radius_join builds them
     df = spark.createDataFrame(
         [(float(a), float(b), float(c), float(d)) for a, b, c, d in zip(lat1, lon1, lat2, lon2)],
         "lat1 double, lon1 double, lat2 double, lon2 double",
+    ).withColumn("c1", F.cos(F.radians(F.col("lat1")))).withColumn(
+        "c2", F.cos(F.radians(F.col("lat2")))
     )
     for r in (100.0, 1000.0, 3000.0):
         bad = df.filter(
@@ -237,7 +240,8 @@ def test_radius_prefilter_never_drops_a_true_match(spark):
                 <= F.lit(r)
             )
             & ~radius_prefilter(
-                F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"), r
+                F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"), r,
+                F.col("c1"), F.col("c2"),
             )
         ).count()
         assert bad == 0, f"prefilter dropped {bad} true matches at r={r}"
@@ -245,7 +249,7 @@ def test_radius_prefilter_never_drops_a_true_match(spark):
 
 def test_radius_prefilter_prunes_far_pairs(spark):
     """Sanity that it actually prunes: a pair 2+ km apart fails the
-    100 m prefilter both with inline and precomputed cos columns."""
+    100 m prefilter."""
     from osm_addr_bot_spark.geo.haversine import radius_prefilter
 
     df = spark.createDataFrame(
@@ -254,16 +258,13 @@ def test_radius_prefilter_prunes_far_pairs(spark):
     ).withColumn("c1", F.cos(F.radians(F.col("lat1")))).withColumn(
         "c2", F.cos(F.radians(F.col("lat2")))
     )
-    inline = df.filter(
-        radius_prefilter(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"), 100.0)
-    ).count()
-    precomp = df.filter(
+    kept = df.filter(
         radius_prefilter(
             F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"), 100.0,
             F.col("c1"), F.col("c2"),
         )
     ).count()
-    assert inline == 0 and precomp == 0
+    assert kept == 0
 
 
 def test_native_s2_cell_matches_numpy(spark):
