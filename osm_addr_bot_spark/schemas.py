@@ -1,30 +1,14 @@
-"""Schemas of the engine's inputs: the interleaved-documents table, the
-JSON payloads of its spans, and the DDL of every world table.
+"""Schemas of the engine's inputs: the JSON payloads of the document
+spans, and the DDL of every world table.
 
 The primary input is the interleaved-documents table (BASELINE.json
-``input_hint``); the other world tables are small dimensions.
+``input_hint``, FIXTURES.md §1): one document per changeset, whose spans
+carry interleaved text (JSON-encoded OSM elements) and media (XYZ tile
+refs); its schema is ``TABLE_DDL["documents"]``. The other world tables
+are small dimensions.
 """
 
 from pyspark.sql import types as T
-
-# --------------------------------------------------------------------------
-# Primary input (FIXTURES.md §1): one document per changeset, spans carry
-# interleaved text (JSON-encoded OSM elements) and media (XYZ tile refs).
-SPAN = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),       # 'text' | 'media'
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),   # 'z/x/y' or ''
-        T.StructField("offset", T.IntegerType(), False),    # 0-based in doc
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN), False),
-    ]
-)
 
 # JSON payload of a kind='text' span — mirrors OverpassEntry
 # (reference overpass_entry.py:19-50); bbox degenerate for nodes
@@ -60,6 +44,7 @@ MEDIA_JSON = T.StructType(
 # measured r6) and contributes driver-serial time at any scale. Pinned
 # against datagen output by tests/test_datagen_guards.py.
 TABLE_DDL = {
+    # kind 'text' | 'media'; media_ref 'z/x/y' or ''; offset 0-based in doc
     "documents": (
         "doc_id STRING, spans ARRAY<STRUCT<kind: STRING, text: STRING, "
         "media_ref: STRING, offset: INT>>"

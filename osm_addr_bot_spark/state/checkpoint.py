@@ -1,6 +1,6 @@
 """ST1-ST5 — watermark, rescheduled backlog, stage checkpoints, lineage.
 
-The reference hand-rolls the streaming control plane over a locked JSON
+The reference hand-rolls the incremental control plane over a locked JSON
 file (reference state.py:20-96): a watermark (``start_ts`` capped to a
 3-day backlog, window capped to 8 h — state.py:39-52, config.py:39-40),
 a rescheduled-issue backlog for open changesets (state.py:54-77), an
@@ -152,8 +152,8 @@ class Checkpoint:
     def commit(
         self,
         end_ts: int,
-        rescheduled: DataFrame | None,
-        reports: DataFrame | None,
+        rescheduled: DataFrame,
+        reports: DataFrame,
         metrics: dict | None = None,
     ) -> dict:
         """Write the reports and a fresh backlog version, then rename the
@@ -165,33 +165,23 @@ class Checkpoint:
         and the window's stage checkpoints are deleted — frames read
         from them are gone with them."""
         run_id = f"run-{end_ts}"
-        out: dict = {"run_id": run_id, "end_ts": end_ts}
-        state = {"state": end_ts, "committed_at": int(time.time()), "run_id": run_id}
-        backlog = self.backlog_version()
-
-        if reports is not None:
-            rp = self.root / "reports" / run_id
-            reports.write.mode("overwrite").parquet(str(rp))
-            out["reports_path"] = str(rp)
-
-        if rescheduled is not None:
-            # relative to the root, so a copied root still resolves
-            backlog = f"{run_id}-{uuid.uuid4().hex}"
-            rescheduled.write.parquet(str(self._resched_dir / backlog))
-        if backlog is not None:
-            state["backlog"] = backlog
+        # relative to the root, so a copied root still resolves
+        backlog = f"{run_id}-{uuid.uuid4().hex}"
+        state = {"state": end_ts, "committed_at": int(time.time()), "run_id": run_id, "backlog": backlog}
+        rp = self.root / "reports" / run_id
+        reports.write.mode("overwrite").parquet(str(rp))
+        rescheduled.write.parquet(str(self._resched_dir / backlog))
 
         if metrics:
             _atomic_write_json(self.root / f"metrics-{run_id}.json", metrics)
 
         _atomic_write_json(self._watermark_file, state)
 
-        if self._resched_dir.exists():
-            for version in self._resched_dir.iterdir():
-                if version.name != backlog:
-                    shutil.rmtree(version, ignore_errors=True)
+        for version in self._resched_dir.iterdir():
+            if version.name != backlog:
+                shutil.rmtree(version, ignore_errors=True)
         shutil.rmtree(self.stage_dir(run_id), ignore_errors=True)
-        return out
+        return {"run_id": run_id, "end_ts": end_ts, "reports_path": str(rp)}
 
 
 class StageRunner:

@@ -339,6 +339,23 @@ def test_stage_checkpoints_never_replay_other_inputs(spark, synth_dir, tmp_path)
     assert _digest(run_pipeline(spark, other, **staged)["issues"]) == fresh[other]
     assert _manifests(tmp_path / "ckpt") == manifests
 
+    # same path, documents rewritten in place with half their rows (the
+    # sidecar and its clock unchanged), then a restart: the stages are
+    # not replayed. clearCache stands for the new process; in this one
+    # the persisted parse of the old files would still serve the path.
+    world = tmp_path / "world"
+    shutil.copytree(synth_dir, world)
+    assert _digest(run_pipeline(spark, str(world), **staged)["issues"]) == fresh[synth_dir]
+    docs = next((world / "documents.parquet").glob("*.parquet"))
+    rows = pq.read_table(docs)
+    pq.write_table(rows.slice(0, rows.num_rows // 2), docs)
+    spark.catalog.clearCache()
+    rerun = _digest(run_pipeline(spark, str(world), **staged)["issues"])
+    spark.catalog.clearCache()
+    halved = _digest(run_pipeline(spark, str(world), **window)["issues"])
+    assert halved[0] < fresh[synth_dir][0]
+    assert rerun == halved
+
 
 class _Fault(Exception):
     pass
