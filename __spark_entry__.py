@@ -551,7 +551,7 @@ def _shingle3_sql() -> str:
     # dd.shingle_sql carries the <3-words fallback ([normalized text]) that
     # word_shingles has on the Spark side — keep both sides identical for
     # short documents
-    return dd.shingle_sql("text", 3)
+    return dd.shingle_sql("text")
 
 
 @_q(

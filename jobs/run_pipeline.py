@@ -85,8 +85,9 @@ def main() -> int:
             futs = {n: ex.submit(materialize, n) for n in ("reports", "overlap")}
             for n, f in futs.items():
                 stats[n] = f.result()
-    if "commit" in out:
-        # watermark advances only after every sink above materialized
+    if "commit" in out and not args.dry_run:
+        # watermark advances only after every sink above materialized;
+        # a dry run writes no state (reference main.py:256-257)
         out["commit"]()
     stats["seconds"] = round(time.time() - t0, 2)
     print(json.dumps(stats))

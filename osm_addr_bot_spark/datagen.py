@@ -51,15 +51,15 @@ def _m2deg_lon(m, lat):
     return m / (M_PER_DEG_LAT * np.cos(np.radians(lat)))
 
 
-def _xyz_ref(lat: float, lon: float, zoom: int = DEFAULT_TILE_ZOOM) -> str:
-    n = 2**zoom
+def _xyz_ref(lat: float, lon: float) -> str:
+    n = 2**DEFAULT_TILE_ZOOM
     x = min(max(int(n * (lon + 180.0) / 360.0), 0), n - 1)
     lat_rad = math.radians(lat)
     y = min(
         max(int(n * (1.0 - math.log(math.tan(lat_rad) + 1 / math.cos(lat_rad)) / math.pi) / 2.0), 0),
         n - 1,
     )
-    return f"{zoom}/{x}/{y}"
+    return f"{DEFAULT_TILE_ZOOM}/{x}/{y}"
 
 
 # --------------------------------------------------------------------- world
@@ -459,15 +459,15 @@ def _gen_and_write_chunk(args) -> int:
     return hi - lo
 
 
-def generate(
-    out_dir: str | os.PathLike, n_docs: int = 500, seed: int = 42, workers: int | None = None
-) -> dict[str, str]:
+def generate(out_dir: str | os.PathLike, n_docs: int = 500, seed: int = 42) -> dict[str, str]:
     """Write the full synthetic dataset under ``out_dir``; returns paths.
 
     Doc-scoped tables (documents, changesets, elements_history) are
     written as parquet DIRECTORIES of one part file per 50k-doc chunk —
     Spark reads files and directories the same way. Chunks generate in
-    parallel processes; output is identical for any ``workers``.
+    parallel processes, at most one per core; a chunk's rows depend only
+    on the seed and its index, so the output does not depend on the
+    process count.
     """
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
@@ -524,13 +524,12 @@ def generate(
         d.mkdir(parents=True, exist_ok=True)
         paths[name] = str(d)
 
-    if len(chunks) == 1 or workers == 1:
-        for ch in chunks:
-            _gen_and_write_chunk(ch)
+    if len(chunks) == 1:
+        _gen_and_write_chunk(chunks[0])
     else:
         from concurrent.futures import ProcessPoolExecutor
 
-        n_workers = min(workers or os.cpu_count() or 8, len(chunks))
+        n_workers = min(os.cpu_count() or 8, len(chunks))
         with ProcessPoolExecutor(max_workers=n_workers) as ex:
             list(ex.map(_gen_and_write_chunk, chunks, chunksize=1))
 

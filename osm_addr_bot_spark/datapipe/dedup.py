@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash.
+"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash,
+over a documents table (doc_id, text).
 
 All shingle/hash math is native Spark SQL (md5 + conv + higher-order
 array functions) — no UDFs, whole-stage codegen end to end, and every
@@ -34,12 +35,18 @@ def normalize_text(c: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
+def tokens(text: Column) -> Column:
+    """The words of the normalized text: the one tokenizer of the
+    shingle, SimHash and text-analysis operators."""
+    return F.split(normalize_text(text), " ")
+
+
 # ------------------------------------------------------------------- exact
-def exact_duplicates(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """(doc_id, content_hash, canonical_doc_id, is_duplicate): every doc
     mapped to the smallest doc id sharing its normalized content hash."""
     h = docs.select(
-        F.col(key).alias("doc_id"), md5_int(normalize_text(F.col(text_col))).alias("content_hash")
+        "doc_id", md5_int(normalize_text(F.col("text"))).alias("content_hash")
     )
     canon = h.groupBy("content_hash").agg(F.min("doc_id").alias("canonical_doc_id"))
     return h.join(canon, "content_hash").select(
@@ -51,8 +58,13 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", key: str = "doc_id
 
 
 # ----------------------------------------------------------------- shingles
-def shingles_from_words(words: Column, n: int = 3) -> Column:
-    """Sliding word n-grams over an ALREADY-MATERIALIZED words column.
+# every shingle operator uses word 3-grams (shingle_sql mirrors them)
+SHINGLE_N = 3
+
+
+def shingles_from_words(words: Column) -> Column:
+    """Sliding word ``SHINGLE_N``-grams over an ALREADY-MATERIALIZED
+    words column.
 
     ``words`` must be a real column (attribute), not a composite
     expression: lambda bodies in higher-order functions are interpreted
@@ -60,45 +72,41 @@ def shingles_from_words(words: Column, n: int = 3) -> Column:
     split(regexp_replace(...)) would re-run per element_at — O(words²)
     regex work per doc (measured 16 s for a 260k-shingle explode; <1 s
     materialized)."""
-    m = F.size(words) - (n - 1)
+    m = F.size(words) - (SHINGLE_N - 1)
     return F.when(m <= 0, F.array(F.array_join(words, " "))).otherwise(
         F.transform(
             F.sequence(F.lit(0), m - 1),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
+            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(SHINGLE_N)]),
         )
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Array of word n-gram shingles of the normalized text.
+def word_shingles(text: Column) -> Column:
+    """Array of word shingles of the normalized text.
 
     Convenience form over a raw text column; fine for single-pass use on
     small inputs. Hot paths should project the words array first and use
     shingles_from_words (see its docstring for why)."""
-    return shingles_from_words(F.split(normalize_text(text), " "), n)
+    return shingles_from_words(tokens(text))
 
 
-def exploded_shingles(
-    docs: DataFrame, n: int = 3, text_col: str = "text", key: str = "doc_id", distinct: bool = False
-) -> DataFrame:
+def exploded_shingles(docs: DataFrame, distinct: bool = False) -> DataFrame:
     """(doc_id, sh): one row per (doc, shingle), words materialized once."""
-    words = docs.select(
-        F.col(key).alias("doc_id"), F.split(normalize_text(F.col(text_col)), " ").alias("_w")
-    )
-    arr = shingles_from_words(F.col("_w"), n)
+    words = docs.select("doc_id", tokens(F.col("text")).alias("_w"))
+    arr = shingles_from_words(F.col("_w"))
     if distinct:
         arr = F.array_distinct(arr)
     return words.select("doc_id", F.explode(arr).alias("sh"))
 
 
-def shingle_sql(text: str, n: int = 3) -> str:
+def shingle_sql(text: str) -> str:
     """DuckDB equivalent of word_shingles (list_transform over ranges)."""
     norm = f"regexp_replace(lower(trim({text})), '\\s+', ' ', 'g')"
     words = f"string_split({norm}, ' ')"
-    joined = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+    joined = " || ' ' || ".join(f"w[i + {j}]" for j in range(SHINGLE_N))
     return (
-        f"(CASE WHEN len({words}) < {n} THEN [{norm}] ELSE "
-        f"(SELECT list_transform(range(1, len(w) - {n - 2}), i -> {joined}) FROM (SELECT {words} AS w)) END)"
+        f"(CASE WHEN len({words}) < {SHINGLE_N} THEN [{norm}] ELSE "
+        f"(SELECT list_transform(range(1, len(w) - {SHINGLE_N - 2}), i -> {joined}) FROM (SELECT {words} AS w)) END)"
     )
 
 
@@ -143,12 +151,10 @@ def minhash_slot_sql(h32_sql: str, i: int) -> str:
     return f"(({a} * {h32_sql} + {b}) % {_MERSENNE31})"
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 16, n: int = 3, text_col: str = "text", key: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 16) -> DataFrame:
     """(doc_id, sig: array<long>[num_hashes]): sig[i] = min over shingles
     of the i-th universal hash of one md5 per shingle (see above)."""
-    sh = exploded_shingles(docs, n, text_col, key)
+    sh = exploded_shingles(docs)
     # h32 as a real column first: fanning md5 into the k slot exprs
     # directly can re-evaluate it per slot (the inlining trap
     # hexgrid.with_cover avoids, BENCH.md optimization log)
@@ -162,6 +168,39 @@ def minhash_signatures(
     return agg.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
+def _banded_self_join(df: DataFrame, carry: list[str], bands: list[Column]) -> DataFrame:
+    """Document pairs sharing a band: one (doc_id, *carry, band, v) row
+    per entry of ``bands``, self-joined on (band, v, a.doc_id <
+    b.doc_id); the sides are aliased ``a`` and ``b``.
+
+    The banded frame is localCheckpointed (lazily): a self-join's two
+    sides are otherwise two full computations of the upstream
+    aggregation (signatures or fingerprints), since broadcast hash joins
+    have no exchange for ReuseExchange to dedupe. Its blocks stay on the
+    executors until the frame and every frame built on it are
+    unreachable on the driver and a driver GC lets the ContextCleaner
+    drop them (spark.cleaner.periodicGC.interval, 30 min by default), or
+    until the session stops; spark.catalog.clearCache() does not release
+    them. The lineage is cut, so a block lost with its executor cannot
+    be recomputed: the job reading it fails."""
+    banded = df.select(
+        "doc_id",
+        *carry,
+        F.explode(
+            F.array(*[F.struct(F.lit(b).alias("band"), v.alias("v")) for b, v in enumerate(bands)])
+        ).alias("bb"),
+    ).select("doc_id", *carry, "bb.band", "bb.v")
+    banded = banded.localCheckpoint(eager=False)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.v") == F.col("b.v"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, bands: int = 4, rows_per_band: int = 4
 ) -> DataFrame:
@@ -172,46 +211,41 @@ def lsh_candidate_pairs(
     clustered corpus (tests/test_recall.py): 8 bands x 2 rows -> 0.985;
     4 x 4 -> 0.574. More, narrower bands raise recall (and candidate
     volume); the pipeline default is the 8x2 shape."""
-    n = bands * rows_per_band
-    banded = signatures.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("sig")[i].cast("string")
-                                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    # materialize the banded frame once: a self-join's two sides are
-    # otherwise two full computations of the signature aggregation
-    # (explode + per-shingle hashing + k-min agg) — broadcast hash
-    # joins have no exchange for ReuseExchange to dedupe (r6; the same
-    # lineage-truncation trade connected_components already documents)
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
+    slots = [F.col("sig")[i].cast("string") for i in range(bands * rows_per_band)]
+    buckets = [
+        F.md5(F.concat_ws(",", *slots[b * rows_per_band : (b + 1) * rows_per_band])) for b in range(bands)
+    ]
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _banded_self_join(signatures, [], buckets)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
+    )
+
+
+# ---------------------------------------------------------- postings join
+def postings_pairs(postings: DataFrame, token: str, max_df: int | None) -> DataFrame:
+    """(doc_a, doc_b, inter): for each pair of documents, the number of
+    ``token`` values both post — the inverted-index self-join through
+    the postings list (doc_id, <token>), never all-pairs.
+
+    ``max_df`` drops tokens whose document frequency exceeds it from
+    the join (a groupBy plus a left-semi join): a stop-token in k docs
+    is a k²/2 pair burst with ~no signal, and a pair whose shared tokens
+    were all dropped is missed (conservative). ``max_df=None`` joins
+    every token. The postings feed both the df count and both join
+    sides, so callers pass them localCheckpointed; those blocks live as
+    long as ``_banded_self_join`` says, and a lost executor's blocks
+    cannot be recomputed."""
+    joinable = postings
+    if max_df is not None:
+        rare = postings.groupBy(token).agg(F.count("*").alias("df")).filter(F.col("df") <= max_df)
+        joinable = postings.join(rare.select(token), token, "left_semi")
+    a = joinable.alias("a")
+    b = joinable.alias("b")
+    return (
+        a.join(b, (F.col(f"a.{token}") == F.col(f"b.{token}")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
     )
 
 
@@ -225,12 +259,7 @@ DEFAULT_MAX_DF = 10_000
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    key: str = "doc_id",
-    max_df: int | None = DEFAULT_MAX_DF,
+    docs: DataFrame, threshold: float = 0.5, max_df: int | None = DEFAULT_MAX_DF
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs with shingle-set Jaccard >=
     threshold — inverted-index join, no n² blowup.
@@ -250,21 +279,9 @@ def ngram_jaccard_pairs(
     # sizes agg, the df cap agg, and BOTH sides of the inverted-index
     # join (four consumers, each otherwise a full normalize+shingle
     # +explode recomputation)
-    sh = exploded_shingles(docs, n, text_col, key, distinct=True).localCheckpoint(
-        eager=False
-    )
+    sh = exploded_shingles(docs, distinct=True).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    joinable = sh
-    if max_df is not None:
-        rare = sh.groupBy("sh").agg(F.count("*").alias("df")).filter(F.col("df") <= max_df)
-        joinable = sh.join(rare.select("sh"), "sh", "left_semi")
-    a = joinable.alias("a")
-    b = joinable.alias("b")
-    shared = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+    shared = postings_pairs(sh, "sh", max_df)
     sa = sizes.selectExpr("doc_id as doc_a", "sz as sz_a")
     sb = sizes.selectExpr("doc_id as doc_b", "sz as sz_b")
     return (
@@ -296,7 +313,7 @@ def _token_bit(b: int) -> Column:
     return F.shiftright(F.col(src), off).bitwiseAND(F.lit(1))
 
 
-def simhash(docs: DataFrame, bits: int = 64, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     """(doc_id, simhash): per-token md5-derived bit votes, sign-summed.
 
     bit b of the fingerprint = 1 iff sum over tokens of
@@ -310,8 +327,7 @@ def simhash(docs: DataFrame, bits: int = 64, text_col: str = "text", key: str = 
     if not 1 <= bits <= 120:
         raise ValueError(f"bits must be in [1, 120] (two 60-bit md5 words); got {bits}")
     tok = docs.select(
-        F.col(key).alias("doc_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t"),
+        "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     ).withColumn("h1", md5_int(F.col("t")))
     if bits > 60:
         tok = tok.withColumn(
@@ -393,30 +409,8 @@ def simhash_near_pairs(
         mask = (1 << width) - 1
         return F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask))
 
-    banded = fps.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_value(b).alias("v"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.v")
-    # one computation of the upstream fingerprint aggregation for both
-    # self-join sides (see lsh_candidate_pairs)
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _banded_self_join(fps, ["simhash"], [band_value(b) for b in range(bands)])
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -438,14 +432,10 @@ def simhash_near_pairs(
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
+    pairs: DataFrame, max_iter: int = 25, stats: dict | None = None
 ) -> DataFrame:
-    """Duplicate groups from near-dup pairs: connected components by
-    iterative min-label propagation, all DataFrame ops.
+    """Duplicate groups from near-dup pairs (doc_a, doc_b): connected
+    components by iterative min-label propagation, all DataFrame ops.
 
     Returns one row per document that appears in >= 1 pair:
     ``(doc_id, component, is_rep)`` where ``component`` is the smallest
@@ -466,7 +456,9 @@ def connected_components(
     raw 2^60-sized labels is not — VERDICT r4), one cheap scalar agg
     per sweep, no extra join or pass. Lineage is truncated every sweep
     with localCheckpoint (iterative plans grow exponentially otherwise;
-    same pattern GraphFrames uses).
+    same pattern GraphFrames uses). Each sweep's blocks live as long as
+    ``_banded_self_join`` says, and a lost executor's blocks cannot be
+    recomputed.
 
     ``stats``: optional dict the call fills with ``{"sweeps": n}`` so
     tests can pin sweep counts without a side channel.
@@ -478,8 +470,8 @@ def connected_components(
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                    F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+                    F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
                 )
             ).alias("e")
         )

@@ -42,19 +42,13 @@ def corpus_dedup_keep(
     num_hashes: int = 8,
     bands: int = 2,
     rows_per_band: int = 4,
-    shingle_n: int = 3,
     fraction: float | None = None,
-    sample_salt: str = "sample",
-    text_col: str = "text",
-    key: str = "doc_id",
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """Near-dedup a corpus and return the KEPT rows (all input columns):
-    one representative (smallest ``key``) per duplicate group plus every
+    one representative (smallest doc_id) per duplicate group plus every
     document that collided with nothing, then an optional deterministic
-    Bernoulli sample (``fraction``; same salt -> same rows on any
-    cluster size).
+    Bernoulli sample (``fraction``; the same rows on any cluster size).
 
     ``stats`` (optional dict) is filled with the sweep count of the
     component search plus the group/drop tallies — the numbers an
@@ -65,18 +59,16 @@ def corpus_dedup_keep(
             f"bands*rows_per_band must equal num_hashes "
             f"({bands}x{rows_per_band} != {num_hashes})"
         )
-    sigs = minhash_signatures(
-        docs, num_hashes=num_hashes, n=shingle_n, text_col=text_col, key=key
-    )
+    sigs = minhash_signatures(docs, num_hashes=num_hashes)
     pairs = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=rows_per_band)
     cc_stats: dict = {}
-    comps = connected_components(pairs, max_iter=max_iter, stats=cc_stats)
-    drop = comps.filter(~F.col("is_rep")).select(F.col("doc_id").alias(key))
-    kept = docs.join(drop, key, "left_anti")
+    comps = connected_components(pairs, stats=cc_stats)
+    drop = comps.filter(~F.col("is_rep")).select("doc_id")
+    kept = docs.join(drop, "doc_id", "left_anti")
     if stats is not None:
         stats["sweeps"] = cc_stats.get("sweeps", 0)
         stats["dropped"] = drop.count()
         stats["groups"] = comps.filter(F.col("is_rep")).count()
     if fraction is not None:
-        kept = sample_fraction(kept, fraction, key=key, salt=sample_salt)
+        kept = sample_fraction(kept, fraction)
     return kept

@@ -36,10 +36,9 @@ from .dedup import md5_int, md5_int_sql
 _DENOM = float(1 << 60)
 
 
-def _unit_hash(key_col, salt: str):
-    return (
-        md5_int(F.concat_ws(":", F.lit(salt), key_col.cast("string"))) / F.lit(_DENOM)
-    )
+def _unit_hash(salt: str):
+    """The salted doc_id hash as a uniform u in [0, 1)."""
+    return md5_int(F.concat_ws(":", F.lit(salt), F.col("doc_id").cast("string"))) / F.lit(_DENOM)
 
 
 def unit_hash_sql(key_sql: str, salt: str) -> str:
@@ -48,34 +47,27 @@ def unit_hash_sql(key_sql: str, salt: str) -> str:
     return f"({h} / {_DENOM!r})"
 
 
-def sample_fraction(
-    df: DataFrame, fraction: float, key: str = "doc_id", salt: str = "sample"
-) -> DataFrame:
+def sample_fraction(df: DataFrame, fraction: float, salt: str = "sample") -> DataFrame:
     """Deterministic Bernoulli sample: keep rows whose salted key hash
     < ``fraction``. Shuffle-free; same salt → same rows, any engine,
     any cluster size."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(_unit_hash(F.col(key), salt) < F.lit(float(fraction)))
+    return df.filter(_unit_hash(salt) < F.lit(float(fraction)))
 
 
-def split_assign(
-    df: DataFrame,
-    splits: dict[str, float],
-    key: str = "doc_id",
-    salt: str = "split",
-    col: str = "split",
-) -> DataFrame:
-    """Assign every row to exactly one named split (train/val/test …)
-    by cutting the [0,1) key hash into consecutive bands — the
-    standard leakage-safe split: membership depends only on the key,
-    so re-runs, backfills, and different cluster sizes never move a
-    document across the boundary. Weights must sum to 1 (±1e-9).
+def split_assign(df: DataFrame, splits: dict[str, float]) -> DataFrame:
+    """Assign every row to exactly one named split (train/val/test …),
+    in a ``split`` column, by cutting the [0,1) doc_id hash into
+    consecutive bands — the standard leakage-safe split: membership
+    depends only on the doc_id, so re-runs, backfills, and different
+    cluster sizes never move a document across the boundary. Weights
+    must sum to 1 (±1e-9).
     Split names are assigned in sorted-name order for determinism."""
     total = sum(splits.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1, got {total}")
-    u = _unit_hash(F.col(key), salt)
+    u = _unit_hash("split")
     expr = None
     hi = 0.0
     names = sorted(splits)
@@ -85,25 +77,17 @@ def split_assign(
         expr = branch if expr is None else expr.when(u < F.lit(hi), F.lit(name))
     last = F.lit(names[-1])
     expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn(col, expr)
+    return df.withColumn("split", expr)
 
 
-def stratified_topn(
-    df: DataFrame,
-    group_col: str,
-    n: int,
-    key: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
+def stratified_topn(df: DataFrame, group_col: str, n: int) -> DataFrame:
     """Exact per-group quota: the ``n`` rows of each group ranking
     first by salted key hash (a uniform random subset per group,
-    reproducible). One shuffle on ``group_col``; key breaks hash ties
+    reproducible). One shuffle on ``group_col``; doc_id breaks hash ties
     so the quota boundary is total-ordered in both engines."""
     if n < 0:
         raise ValueError(f"n must be >= 0, got {n}")
-    w = Window.partitionBy(group_col).orderBy(
-        _unit_hash(F.col(key), salt).asc(), F.col(key).asc()
-    )
+    w = Window.partitionBy(group_col).orderBy(_unit_hash("sample").asc(), F.col("doc_id").asc())
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n)

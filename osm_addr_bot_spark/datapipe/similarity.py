@@ -1,6 +1,8 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over an embeddings table (vec_id, embedding:
+array<float>).
 
-Brute-force cosine top-k is the exactness baseline; two scale paths:
+Brute-force cosine top-k is the exactness baseline and the one scorer
+every approximate top-k runs over its filtered input; two scale paths:
 random-hyperplane LSH bucketing (probe only matching buckets — at 10^12
 rows the bucket predicate replaces the full scan) and IVF
 (nearest-of-n-centroids cells, probe the query's n_probe nearest
@@ -36,14 +38,26 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def deterministic_planes(num_planes: int, dim: int, seed: str = "lsh") -> list[list[float]]:
+def _embedding() -> Column:
+    return F.col("embedding").cast("array<double>")
+
+
+def _lit_vec(v: list[float]) -> Column:
+    return F.array(*[F.lit(float(x)) for x in v])
+
+
+def _dot_py(a: list[float], b: list[float]) -> float:
+    return sum(x * y for x, y in zip(a, b))
+
+
+def deterministic_planes(num_planes: int, dim: int) -> list[list[float]]:
     """Pseudo-random hyperplanes in [-1, 1), reproducible from md5 —
     identical in any engine that has md5."""
     planes = []
     for p in range(num_planes):
         vals = []
         for d in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()
+            h = hashlib.md5(f"lsh:{p}:{d}".encode()).hexdigest()
             vals.append((int(h[:15], 16) / float(1 << 60)) * 2.0 - 1.0)
         planes.append(vals)
     return planes
@@ -53,57 +67,41 @@ def lsh_bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
     """Bucket id = sign-bit string over the hyperplanes (native)."""
     bucket = F.lit(0)
     for i, plane in enumerate(planes):
-        lit = F.array(*[F.lit(float(v)) for v in plane])
-        bucket = bucket + F.when(_dot(vec, lit) >= 0, F.lit(1 << i)).otherwise(0)
+        bucket = bucket + F.when(_dot(vec, _lit_vec(plane)) >= 0, F.lit(1 << i)).otherwise(0)
     return bucket
 
 
-def brute_force_topk(
-    embeddings: DataFrame, query: list[float], k: int = 10, vec_col: str = "embedding", key: str = "vec_id"
-) -> DataFrame:
-    """Exact cosine top-k against a literal query vector."""
-    q = F.array(*[F.lit(float(v)) for v in query])
+def _query_bucket(margins: list[float]) -> int:
+    """The bucket ``lsh_bucket_expr`` gives a vector whose dot products
+    with the planes are ``margins``."""
+    return sum(1 << i for i, m in enumerate(margins) if m >= 0)
+
+
+def brute_force_topk(embeddings: DataFrame, query: list[float], k: int = 10) -> DataFrame:
+    """Exact cosine top-k against a literal query vector: (vec_id,
+    cosine) ordered by cosine desc, vec_id. Every approximate top-k
+    below is this scorer over a filtered frame."""
     return (
-        embeddings.select(
-            F.col(key).alias("vec_id"),
-            cosine_sim(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
-        )
+        embeddings.select("vec_id", cosine_sim(_embedding(), _lit_vec(query)).alias("cosine"))
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
 
 
 def lsh_topk(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 10,
-    num_planes: int = 6,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
+    embeddings: DataFrame, query: list[float], k: int = 10, num_planes: int = 6
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's LSH bucket.
     At scale the bucket predicate prunes the scan (bucket is a stored,
     partition-prunable column); here it is computed inline."""
     planes = deterministic_planes(num_planes, len(query))
-    q_bucket = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(query, plane)) >= 0:
-            q_bucket += 1 << i
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        embeddings.withColumn("_bucket", lsh_bucket_expr(vec, planes))
-        .filter(F.col("_bucket") == F.lit(q_bucket))
-        .select(F.col(key).alias("vec_id"), cosine_sim(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    q_bucket = _query_bucket([_dot_py(query, pl) for pl in planes])
+    bucketed = embeddings.withColumn("_bucket", lsh_bucket_expr(_embedding(), planes))
+    return brute_force_topk(bucketed.filter(F.col("_bucket") == F.lit(q_bucket)), query, k)
 
 
 # ---------------------------------------------------------------------- IVF
-def ivf_centroids(
-    embeddings: DataFrame, n_centroids: int = 32, vec_col: str = "embedding", key: str = "vec_id"
-) -> list[tuple[int, list[float]]]:
+def ivf_centroids(embeddings: DataFrame, n_centroids: int = 32) -> list[tuple[int, list[float]]]:
     """Deterministic coarse-quantizer centroids: the ``n_centroids``
     vectors ranking first by md5 of their key — a reproducible
     pseudo-random sample (k-means++ seeding without the iterations; see
@@ -111,17 +109,12 @@ def ivf_centroids(
     The collect is n_centroids rows — the coarse quantizer IS a
     broadcast-sized dim, never O(data)."""
     rows = (
-        embeddings.select(F.col(key).alias("k"), F.col(vec_col).cast("array<double>").alias("v"))
+        embeddings.select(F.col("vec_id").alias("k"), _embedding().alias("v"))
         .orderBy(F.md5(F.col("k").cast("string")), "k")
         .limit(n_centroids)
         .collect()
     )
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
-
-
-def _cos_to_lit(vec: Column, lit_vec: list[float]) -> Column:
-    lit = F.array(*[F.lit(float(v)) for v in lit_vec])
-    return cosine_sim(vec, lit)
 
 
 def ivf_assign_expr(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
@@ -132,12 +125,26 @@ def ivf_assign_expr(vec: Column, centroids: list[tuple[int, list[float]]]) -> Co
     scored = F.array(
         *[
             F.struct(
-                F.round(_cos_to_lit(vec, cvec), 4).alias("s"), F.lit(cid).alias("i")
+                F.round(cosine_sim(vec, _lit_vec(cvec)), 4).alias("s"), F.lit(cid).alias("i")
             )
             for cid, cvec in centroids
         ]
     )
     return F.array_max(scored)["i"]
+
+
+def _ivf_probe_cells(
+    query: list[float], centroids: list[tuple[int, list[float]]], n_probe: int
+) -> list[int]:
+    """The query's ``n_probe`` (at least one) nearest cells, ranked the
+    way ``ivf_assign_expr`` assigns: cosine rounded to 4 decimals, ties
+    to the larger cell id."""
+
+    def cos(a: list[float], b: list[float]) -> float:
+        return _dot_py(a, b) / (_dot_py(a, a) ** 0.5 * _dot_py(b, b) ** 0.5)
+
+    ranked = sorted(centroids, key=lambda c: (-round(cos(query, c[1]), 4), -c[0]))
+    return [cid for cid, _ in ranked[: max(1, n_probe)]]
 
 
 def ivf_topk(
@@ -146,8 +153,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 32,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Approximate top-k, IVF shape: score only vectors whose cell is
@@ -160,37 +165,14 @@ def ivf_topk(
     global recall@10 0.5 — the IVF shape favors finding the close
     cluster over recovering the full global top-k tail."""
     if centroids is None:
-        centroids = ivf_centroids(embeddings, n_centroids, vec_col, key)
-
-    def _cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb)
-
-    probe = sorted(
-        ((round(_cos_py(query, cvec), 4), cid) for cid, cvec in centroids),
-        key=lambda t: (-t[0], -t[1]),
-    )[:n_probe]
-    probe_cells = [cid for _, cid in probe]
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        embeddings.withColumn("_cell", ivf_assign_expr(vec, centroids))
-        .filter(F.col("_cell").isin(probe_cells))
-        .select(F.col(key).alias("vec_id"), cosine_sim(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+        centroids = ivf_centroids(embeddings, n_centroids)
+    celled = embeddings.withColumn("_cell", ivf_assign_expr(_embedding(), centroids))
+    cells = _ivf_probe_cells(query, centroids, n_probe)
+    return brute_force_topk(celled.filter(F.col("_cell").isin(cells)), query, k)
 
 
 def embedding_near_dups(
-    embeddings: DataFrame,
-    k: int = 3,
-    num_planes: int = 3,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-    dim: int | None = None,
+    embeddings: DataFrame, k: int = 3, num_planes: int = 3, dim: int | None = None
 ) -> DataFrame:
     """Embedding near-dup detection, scale path: top-k cosine neighbors
     within each (label, LSH-bucket) block.
@@ -211,20 +193,18 @@ def embedding_near_dups(
     if dim is None:
         # plan-construction-time job: acceptable interactively, but pass
         # dim explicitly in pipelines — and empty input has no dim at all
-        row = embeddings.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+        row = embeddings.select("embedding").filter(F.col("embedding").isNotNull()).first()
         if row is None:
-            kt = embeddings.schema[key].dataType.simpleString()
+            kt = embeddings.schema["vec_id"].dataType.simpleString()
             lt = embeddings.schema["label"].dataType.simpleString()
             return embeddings.sparkSession.createDataFrame(
                 [], f"vec_a {kt}, vec_b {kt}, label {lt}, cosine double"
             )
         dim = len(row[0])
     planes = deterministic_planes(num_planes, dim)
-    e = embeddings.select(
-        F.col(key).alias("vec_id"),
-        F.col("label"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("bucket", lsh_bucket_expr(F.col("v"), planes))
+    e = embeddings.select("vec_id", "label", _embedding().alias("v")).withColumn(
+        "bucket", lsh_bucket_expr(F.col("v"), planes)
+    )
     a, b = e.alias("a"), e.alias("b")
     pairs = a.join(
         b,
@@ -255,21 +235,14 @@ def embedding_near_dups(
 # count stays bounded regardless of row count.
 
 
-def write_bucketed(
-    embeddings: DataFrame,
-    location: str,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-) -> None:
+def write_bucketed(embeddings: DataFrame, location: str, planes: list[list[float]]) -> None:
     """Persist the embeddings table partitioned by its LSH bucket.
 
     One pass over the data, no shuffle (partitionBy on write splits
     files per task); every future ``lsh_topk_pruned`` call reads only
     the probed bucket directories."""
-    vec = F.col(vec_col).cast("array<double>")
     (
-        embeddings.withColumn("_bucket", lsh_bucket_expr(vec, planes))
+        embeddings.withColumn("_bucket", lsh_bucket_expr(_embedding(), planes))
         .write.mode("overwrite")
         .partitionBy("_bucket")
         .parquet(location)
@@ -277,17 +250,12 @@ def write_bucketed(
 
 
 def write_celled(
-    embeddings: DataFrame,
-    location: str,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    key: str = "vec_id",
+    embeddings: DataFrame, location: str, centroids: list[tuple[int, list[float]]]
 ) -> None:
     """Persist the embeddings table partitioned by its IVF cell (same
     contract as ``write_bucketed``; recall tunes via n_probe)."""
-    vec = F.col(vec_col).cast("array<double>")
     (
-        embeddings.withColumn("_cell", ivf_assign_expr(vec, centroids))
+        embeddings.withColumn("_cell", ivf_assign_expr(_embedding(), centroids))
         .write.mode("overwrite")
         .partitionBy("_cell")
         .parquet(location)
@@ -306,23 +274,13 @@ def lsh_probe_buckets(
     p = len(planes)
     if p > 16:
         raise ValueError(f"multi-probe enumeration supports <= 16 planes, got {p}")
-    margins = [sum(a * b for a, b in zip(query, pl)) for pl in planes]
-    base = sum((1 << i) for i, m in enumerate(margins) if m >= 0)
+    margins = [_dot_py(query, pl) for pl in planes]
+    base = _query_bucket(margins)
     costed = sorted(
         (sum(abs(margins[i]) for i in range(p) if (mask >> i) & 1), base ^ mask)
         for mask in range(1 << p)
     )
     return [b for _, b in costed[: max(1, n_probe)]]
-
-
-def _topk_in(df: DataFrame, query: list[float], k: int, vec_col: str, key: str) -> DataFrame:
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        df.select(F.col(key).alias("vec_id"), cosine_sim(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
 
 
 def lsh_topk_pruned(
@@ -332,8 +290,6 @@ def lsh_topk_pruned(
     planes: list[list[float]],
     k: int = 10,
     n_probe: int = 1,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k over a ``write_bucketed`` table: scan ONLY the
     ``n_probe`` multi-probe bucket partitions (partition pruning — the
@@ -345,7 +301,7 @@ def lsh_topk_pruned(
     """
     buckets = lsh_probe_buckets(query, planes, n_probe)
     df = spark.read.parquet(location).filter(F.col("_bucket").isin(buckets))
-    return _topk_in(df, query, k, vec_col, key)
+    return brute_force_topk(df, query, k)
 
 
 def ivf_topk_pruned(
@@ -355,24 +311,11 @@ def ivf_topk_pruned(
     centroids: list[tuple[int, list[float]]],
     k: int = 10,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k over a ``write_celled`` table: scan ONLY the
     query's ``n_probe`` nearest-centroid cell partitions. Output-
     equivalent to the inline ``ivf_topk`` at the same knobs (same
-    deterministic centroids, same round-4 probe ranking)."""
-
-    def _cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb)
-
-    probe = sorted(
-        ((round(_cos_py(query, cvec), 4), cid) for cid, cvec in centroids),
-        key=lambda t: (-t[0], -t[1]),
-    )[: max(1, n_probe)]
-    cells = [cid for _, cid in probe]
+    deterministic centroids, same probe ranking)."""
+    cells = _ivf_probe_cells(query, centroids, n_probe)
     df = spark.read.parquet(location).filter(F.col("_cell").isin(cells))
-    return _topk_in(df, query, k, vec_col, key)
+    return brute_force_topk(df, query, k)

@@ -1,6 +1,6 @@
-"""Text analysis: language-ID, quality scoring, token counting,
-fingerprinting. All native expressions (regex + arithmetic), oracle-
-reproducible in ANSI SQL.
+"""Text analysis over a documents table (doc_id, text): language-ID,
+quality scoring, token counting, fingerprinting. All native
+expressions (regex + arithmetic), oracle-reproducible in ANSI SQL.
 """
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osm_addr_bot_spark.datapipe.dedup import md5_int, normalize_text
+from osm_addr_bot_spark.datapipe.dedup import md5_int, normalize_text, postings_pairs, tokens
 
 # tiny stopword profiles; scored by per-language hit counts over tokens
 LANG_PROFILES = {
@@ -19,12 +19,8 @@ LANG_PROFILES = {
 }
 
 
-def _tokens(text: Column) -> Column:
-    return F.split(normalize_text(text), " ")
-
-
 def lang_scores(text: Column) -> dict[str, Column]:
-    toks = _tokens(text)
+    toks = tokens(text)
     out = {}
     for lang, words in LANG_PROFILES.items():
         wl = F.array(*[F.lit(w) for w in words])
@@ -32,10 +28,10 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return out
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, lang_pred, lang_hits): argmax stopword-profile hits,
     deterministic tie-break by profile order, 'und' when all zero."""
-    scores = lang_scores(F.col(text_col))
+    scores = lang_scores(F.col("text"))
     best_lang = F.lit("und")
     best_score = F.lit(0)
     for lang in reversed(list(LANG_PROFILES)):  # earlier profiles win ties
@@ -46,27 +42,25 @@ def lang_id(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> Dat
     for lang in LANG_PROFILES:
         hits = scores[lang] if hits is None else hits + scores[lang]
     return docs.select(
-        F.col(key).alias("doc_id"),
+        "doc_id",
         F.when(hits > 0, best_lang).otherwise(F.lit("und")).alias("lang_pred"),
         hits.alias("lang_hits"),
     )
 
 
-def quality_features(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """(doc_id, n_chars, n_tokens, mean_token_len, punct_ratio,
     stopword_ratio, quality): simple composable quality heuristics."""
-    text = F.col(text_col)
-    toks = _tokens(text)
+    text = F.col("text")
+    toks = tokens(text)
     n_chars = F.length(text)
     n_tokens = F.size(toks)
     mean_tok = (F.length(normalize_text(text)) - (n_tokens - 1)) / n_tokens
     n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
     en = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
-    stop_ratio = F.size(F.filter(toks, lambda t: F.array_contains(en, t))) / F.greatest(
-        n_tokens, F.lit(1)
-    )
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en, t)))
+    stop_ratio = n_stop / F.greatest(n_tokens, F.lit(1))
     # integer 0-100 score — integer arithmetic end-to-end so any engine
     # reproduces it bit-for-bit (no float rounding at tier boundaries)
     quality = (
@@ -76,7 +70,7 @@ def quality_features(docs: DataFrame, text_col: str = "text", key: str = "doc_id
         + F.least(F.floor(n_stop * 200 / F.greatest(n_tokens, F.lit(1))), F.lit(10).cast("long"))
     )
     return docs.select(
-        F.col(key).alias("doc_id"),
+        "doc_id",
         n_chars.cast("long").alias("n_chars"),
         n_tokens.cast("long").alias("n_tokens"),
         F.round(mean_tok, 4).alias("mean_token_len"),
@@ -86,11 +80,11 @@ def quality_features(docs: DataFrame, text_col: str = "text", key: str = "doc_id
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, ws_tokens, bpe_ish_tokens): whitespace count + a BPE-ish
     proxy (word pieces of <=4 chars: ceil(len/4) per word, punct as
     single tokens)."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.filter(F.split(text, r"\s+"), lambda w: w != "")
     ws = F.size(words)
     pieces = F.aggregate(
@@ -99,27 +93,21 @@ def token_counts(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -
         lambda acc, w: acc + F.ceil(F.length(F.regexp_replace(w, r"[^\w]", "")) / 4.0).cast("long")
         + F.length(F.regexp_replace(w, r"[\w]", "")).cast("long"),
     )
-    return docs.select(F.col(key).alias("doc_id"), ws.alias("ws_tokens"), pieces.alias("bpe_ish_tokens"))
+    return docs.select("doc_id", ws.alias("ws_tokens"), pieces.alias("bpe_ish_tokens"))
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text", key: str = "doc_id", window: int = 64) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint, head_fingerprint): whole-doc content hash +
-    head-window hash (cheap near-head-dup probe)."""
-    norm = normalize_text(F.col(text_col))
+    hash of the first 64 normalized chars (cheap near-head-dup probe)."""
+    norm = normalize_text(F.col("text"))
     return docs.select(
-        F.col(key).alias("doc_id"),
+        "doc_id",
         md5_int(norm).alias("fingerprint"),
-        md5_int(F.substring(norm, 1, window)).alias("head_fingerprint"),
+        md5_int(F.substring(norm, 1, 64)).alias("head_fingerprint"),
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    key: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every character ``k``-gram of
     the normalized text, slide a ``window`` over the hash sequence, and
@@ -157,9 +145,7 @@ def winnow_fingerprints(
     #   (2) array_distinct runs per doc BEFORE the explode — the
     #       output's (doc_id, fp) distinctness is per-document, so no
     #       global distinct (and its exchange) is needed at all.
-    normed = docs.select(
-        F.col(key).alias("doc_id"), normalize_text(F.col(text_col)).alias("_norm")
-    )
+    normed = docs.select("doc_id", normalize_text(F.col("text")).alias("_norm"))
     norm = F.col("_norm")
     n_k = F.length(norm) - (k - 1)  # number of k-grams
     hashed = normed.filter(n_k >= window).select(
@@ -184,42 +170,24 @@ def winnow_overlap_pairs(
     k: int = 5,
     window: int = 4,
     max_df: int | None = 10_000,
-    text_col: str = "text",
-    key: str = "doc_id",
 ) -> DataFrame:
     """(doc_a, doc_b, shared_fps): document pairs sharing at least
     ``min_shared`` winnowing fingerprints — the MOSS overlap report.
 
-    Same inverted-index shape as ``dedup.ngram_jaccard_pairs``: join
-    through the fingerprint postings list, never all-pairs. ``max_df``
-    drops stop-fingerprints (df above the cap) from the join — each
-    contributes a df² pair burst and ~no overlap signal; pairs whose
-    overlap was only stop-fingerprints are missed (conservative).
-    ``max_df=None`` is the exact path for known non-Zipfian corpora.
+    The fingerprint postings go through ``dedup.postings_pairs``, the
+    join ``dedup.ngram_jaccard_pairs`` uses, so never all-pairs;
+    ``max_df`` caps stop-fingerprints there (``None`` is the exact path
+    for known non-Zipfian corpora).
     """
     # materialize the fingerprints once — they feed the df cap and both
     # join sides (three consumers, each otherwise a full re-hash of the
-    # corpus; same trade as dedup.ngram_jaccard_pairs)
-    fps = winnow_fingerprints(
-        docs, text_col=text_col, key=key, k=k, window=window
-    ).localCheckpoint(eager=False)
-    joinable = fps
-    if max_df is not None:
-        rare = fps.groupBy("fp").agg(F.count("*").alias("df")).filter(F.col("df") <= max_df)
-        joinable = fps.join(rare.select("fp"), "fp", "left_semi")
-    a = joinable.alias("a")
-    b = joinable.alias("b")
-    return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    # corpus)
+    fps = winnow_fingerprints(docs, k=k, window=window).localCheckpoint(eager=False)
+    shared = postings_pairs(fps, "fp", max_df).withColumnRenamed("inter", "shared_fps")
+    return shared.filter(F.col("shared_fps") >= min_shared)
 
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", key: str = "doc_id", gram_n: int = 2
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, gram_n: int = 2) -> DataFrame:
     """Gopher-style intra-document repetition signals over word n-grams
     (default bigrams): (doc_id, n_grams, distinct_grams, top_gram_cnt,
     top_gram_frac, dup_gram_frac, gram_ttr).
@@ -247,9 +215,7 @@ def repetition_stats(
     """
     if gram_n < 1:
         raise ValueError("gram_n must be >= 1")
-    toked = docs.select(
-        F.col(key).alias("doc_id"), _tokens(F.col(text_col)).alias("_toks")
-    )
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
     toks = F.col("_toks")
     idx = F.when(
         F.size(toks) >= gram_n, F.sequence(F.lit(1), F.size(toks) - (gram_n - 1))
@@ -289,7 +255,7 @@ URL_RE = r"https?://\S+"
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """(doc_id, n_urls, n_emails, scrubbed): count then mask URLs and
     e-mail addresses — the minimal web-corpus PII/link scrub pass.
 
@@ -298,26 +264,20 @@ def scrub_pii(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
     expressions — one narrow projection, no shuffle, no UDF; at 100 TB
     this is a map-only stage fused into whatever scan precedes it.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(text, URL_RE, "<URL>"), EMAIL_RE, "<EMAIL>"
     )
     return docs.select(
-        F.col(key).alias("doc_id"),
+        "doc_id",
         F.size(F.regexp_extract_all(text, F.lit(URL_RE), 0)).cast("long").alias("n_urls"),
         F.size(F.regexp_extract_all(text, F.lit(EMAIL_RE), 0)).cast("long").alias("n_emails"),
         scrubbed.alias("scrubbed"),
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    key: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
-    """Top-``k`` characteristic terms per ``group_col`` by tf-idf:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
+    """Top-``k`` characteristic terms per ``source`` by tf-idf:
     (source, term, tf, df, weight, rank). tf = term occurrences within
     the group; df = number of documents containing the term; weight =
     round(tf * ln((N+1)/(df+1)), 4) with N = corpus document count.
@@ -339,9 +299,9 @@ def tfidf_top_terms(
 
     n_docs = docs.count()  # scalar aggregate, mirrors the oracle's COUNT(*) subquery
     toks = docs.select(
-        F.col(key).alias("doc_id"),
-        F.col(group_col).alias("source"),
-        F.explode(_tokens(F.col(text_col))).alias("term"),
+        "doc_id",
+        "source",
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     tf = toks.groupBy("source", "term").agg(F.count("*").alias("tf"))
     df_ = toks.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))

@@ -197,18 +197,17 @@ def kring_expr(cell, k: int):
     return F.array(*[cell + F.lit(int(dq) * (1 << 29) + int(dr)) for dq, dr in offs])
 
 
-def with_cover(df, radius_m: float, res: int, out: str = "_cell",
-               lat: str = "lat", lon: str = "lon"):
-    """Explode df by the disk-cover cells, computing the base cell ONCE
-    into a real column: ``kring_expr(cell_expr(...))`` would inline the
-    trig into every ring member (a 6x stage-cost difference was
-    measured at k=3)."""
+def with_cover(df, radius_m: float, res: int):
+    """Explode df by the disk-cover cells of its (lat, lon) into a
+    ``_cell`` column, computing the base cell ONCE into a real column:
+    ``kring_expr(cell_expr(...))`` would inline the trig into every ring
+    member (a 6x stage-cost difference was measured at k=3)."""
     from pyspark.sql import functions as F
 
     k = cover_k(radius_m, res)
     return (
-        df.withColumn("_cover_base", cell_expr(F.col(lat), F.col(lon), res))
-        .withColumn(out, F.explode(kring_expr(F.col("_cover_base"), k)))
+        df.withColumn("_cover_base", cell_expr(F.col("lat"), F.col("lon"), res))
+        .withColumn("_cell", F.explode(kring_expr(F.col("_cover_base"), k)))
         .drop("_cover_base")
     )
 

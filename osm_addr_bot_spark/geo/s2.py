@@ -131,12 +131,12 @@ def parent_id(cell: np.ndarray, level: int) -> np.ndarray:
     return ((u & ~(lsb - np.uint64(1))) | lsb).view(np.int64)
 
 
-def with_s2_cell(df, lat: str = "lat", lon: str = "lon", level: int = 15, out: str = "s2_15"):
-    """Append the S2 cell id as a NATIVE column — the same table-driven
-    Hilbert encode as ``cell_id``, expressed as Spark SQL (guide §4:
-    the S2 math is trivial next to the JVM->Python boundary it used to
-    pay; removing the ArrowEvalPython node removes the per-executor
-    Python worker fleet from the parse stage).
+def with_s2_cell(df, level: int = 15, out: str = "s2_15"):
+    """Append the S2 cell id of (lat, lon) as a NATIVE column — the same
+    table-driven Hilbert encode as ``cell_id``, expressed as Spark SQL
+    (guide §4: the S2 math is trivial next to the JVM->Python boundary
+    it used to pay; removing the ArrowEvalPython node removes the
+    per-executor Python worker fleet from the parse stage).
 
     Exactness: mirrors the numpy path operation for operation — IEEE
     doubles through the same projection formulas, then pure integer
@@ -171,7 +171,7 @@ def with_s2_cell(df, lat: str = "lat", lon: str = "lon", level: int = 15, out: s
         scratch.extend(cols.keys())
         return frame.withColumns({k: v for k, v in cols.items()})
 
-    la, lo = c(lat), c(lon)
+    la, lo = c("lat"), c("lon")
     # cos(phi) is inlined into x and y in ONE batch (codegen CSE
     # de-duplicates it inside the projection; a separate withColumns
     # step would cost another full driver-side analysis pass)

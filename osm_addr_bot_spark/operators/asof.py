@@ -36,12 +36,11 @@ def asof_join(
     history: DataFrame,
     keys: Sequence[str],
     probe_ts: str = "ts",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
     payload: Sequence[str] | None = None,
 ) -> DataFrame:
     """probe LEFT-asof-join history: probe columns + the ``payload``
-    columns of the history version live at ``probe_ts`` (null if none).
+    columns of the history version live at ``probe_ts`` (null if none),
+    the version whose [valid_from, valid_to) contains it.
 
     ``payload`` defaults to every history column that is neither a key
     nor an interval bound.
@@ -49,17 +48,17 @@ def asof_join(
     keys = list(keys)
     if payload is None:
         payload = [
-            c for c in history.columns if c not in (*keys, valid_from, valid_to)
+            c for c in history.columns if c not in (*keys, "valid_from", "valid_to")
         ]
-    h = history.select(*keys, valid_from, valid_to, *payload).alias("h")
+    h = history.select(*keys, "valid_from", "valid_to", *payload).alias("h")
     p = probe.alias("p")
     cond = F.lit(True)
     for k in keys:
         cond = cond & (F.col(f"p.{k}") == F.col(f"h.{k}"))
     cond = (
         cond
-        & (F.col(f"h.{valid_from}") <= F.col(f"p.{probe_ts}"))
-        & (F.col(f"p.{probe_ts}") < F.col(f"h.{valid_to}"))
+        & (F.col("h.valid_from") <= F.col(f"p.{probe_ts}"))
+        & (F.col(f"p.{probe_ts}") < F.col("h.valid_to"))
     )
     return p.join(h, cond, "left").select(
         "p.*", *[F.col(f"h.{c}").alias(c) for c in payload]

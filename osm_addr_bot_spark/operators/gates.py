@@ -45,12 +45,10 @@ def should_discuss_flags(changesets: DataFrame, ignore_already_discussed: bool =
     )
 
 
-def filter_should_not_discuss(
-    issues: DataFrame, changesets: DataFrame, ignore_already_discussed: bool = False
-) -> DataFrame:
+def filter_should_not_discuss(issues: DataFrame, changesets: DataFrame) -> DataFrame:
     """Drop issues whose changeset fails should_discuss
     (reference main.py:51-66) — a broadcast semi join."""
-    ok = should_discuss_flags(changesets, ignore_already_discussed).filter("should_discuss")
+    ok = should_discuss_flags(changesets).filter("should_discuss")
     # NO broadcast hint: the changesets dim is one row per changeset —
     # it scales with the data (broadcasting it serializes O(data) through
     # the driver). AQE picks broadcast automatically when it IS small.

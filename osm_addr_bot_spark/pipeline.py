@@ -131,7 +131,6 @@ def run_pipeline(
     end_ts: int | None = None,
     fidelity: bool = False,
     stage_checkpoints: bool = False,
-    ignore_already_discussed: bool = False,
 ) -> dict[str, DataFrame]:
     """Run everything; returns the output DataFrames. Sinks stay lazy,
     but the call itself runs jobs: each reuse point materializes here
@@ -139,6 +138,10 @@ def run_pipeline(
     writes parquet under ``checkpoint_dir``, which it requires)."""
     if stage_checkpoints and not checkpoint_dir:
         raise ValueError("stage_checkpoints=True needs a checkpoint_dir to write its stages under")
+    # an earlier run in this session left its persisted parse in the
+    # CacheManager, which would serve this run's identical plan from the
+    # old files: re-list the world's files and rebuild that cache lazily
+    spark.catalog.refreshByPath(data_dir)
     t = load_tables(spark, data_dir)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
 
@@ -199,7 +202,6 @@ def run_pipeline(
         "start_ts": start_ts,
         "end_ts": end_ts,
         "fidelity": fidelity,
-        "ignore_already_discussed": ignore_already_discussed,
         "backlog": ckpt.backlog_version() if ckpt else None,
     }
     stages = StageRunner(spark, ckpt.stage_dir(run_id) if stage_checkpoints else None, stage_key)
@@ -216,9 +218,7 @@ def run_pipeline(
     issues2 = stages.run(  # feeds four spatial stages
         "fanout",
         lambda: filter_priority(
-            filter_should_not_discuss(
-                fan_out_checks(elements, fidelity=fidelity), t["changesets"], ignore_already_discussed
-            ),
+            filter_should_not_discuss(fan_out_checks(elements, fidelity=fidelity), t["changesets"]),
             consider_post_fn=True,
         ),
     )

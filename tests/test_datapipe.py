@@ -33,10 +33,10 @@ def test_exact_duplicates(spark, docs):
 
 def test_word_shingles(spark):
     df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    row = df.select(dd.word_shingles(F.col("text"), 3).alias("s")).first()
+    row = df.select(dd.word_shingles(F.col("text")).alias("s")).first()
     assert row["s"] == ["a b c", "b c d"]
     short = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    assert short.select(dd.word_shingles(F.col("text"), 3).alias("s")).first()["s"] == ["a b"]
+    assert short.select(dd.word_shingles(F.col("text")).alias("s")).first()["s"] == ["a b"]
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -309,7 +309,7 @@ def test_stratified_topn_exact_quota(spark):
 
     rows = [(i, "big" if i < 90 else "small") for i in range(100)]
     docs = spark.createDataFrame(rows, "doc_id long, grp string")
-    out = smp.stratified_topn(docs, "grp", 5, key="doc_id").collect()
+    out = smp.stratified_topn(docs, "grp", 5).collect()
     got = {}
     for r in out:
         got.setdefault(r["grp"], set()).add(r["doc_id"])

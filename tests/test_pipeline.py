@@ -340,19 +340,19 @@ def test_stage_checkpoints_never_replay_other_inputs(spark, synth_dir, tmp_path)
     assert _manifests(tmp_path / "ckpt") == manifests
 
     # same path, documents rewritten in place with half their rows (the
-    # sidecar and its clock unchanged), then a restart: the stages are
-    # not replayed. clearCache stands for the new process; in this one
-    # the persisted parse of the old files would still serve the path.
+    # sidecar and its clock unchanged), rerun in this session: the stages
+    # are not replayed, and the first run's persisted parse does not
+    # serve the rewritten files. A copy of them at another path is the
+    # expected answer.
     world = tmp_path / "world"
     shutil.copytree(synth_dir, world)
     assert _digest(run_pipeline(spark, str(world), **staged)["issues"]) == fresh[synth_dir]
     docs = next((world / "documents.parquet").glob("*.parquet"))
     rows = pq.read_table(docs)
     pq.write_table(rows.slice(0, rows.num_rows // 2), docs)
-    spark.catalog.clearCache()
     rerun = _digest(run_pipeline(spark, str(world), **staged)["issues"])
-    spark.catalog.clearCache()
-    halved = _digest(run_pipeline(spark, str(world), **window)["issues"])
+    shutil.copytree(world, tmp_path / "copy")
+    halved = _digest(run_pipeline(spark, str(tmp_path / "copy"), **window)["issues"])
     assert halved[0] < fresh[synth_dir][0]
     assert rerun == halved
 

@@ -1,8 +1,10 @@
 """spark-submit smoke test: scripts/submit.sh packages the engine as a
 --py-files zip and runs jobs/run_pipeline.py; its sink counts must equal
 an in-process run_pipeline over the same window, and its commit must
-advance the checkpoint watermark to the window end."""
+advance the checkpoint watermark to the window end. A --dry-run of the
+job commits nothing."""
 
+import importlib.util
 import json
 import os
 import subprocess
@@ -48,6 +50,28 @@ def test_submit_counts_match_in_process(spark, synth_dir, tmp_path):
     assert want["issues"] > 0
     assert {n: stats[n] for n in want} == want
     assert Checkpoint(tmp_path / "ckpt").read_watermark() == end_ts
+
+
+def test_dry_run_writes_no_state(spark, synth_dir, tmp_path, monkeypatch, capsys):
+    """jobs/run_pipeline.py --dry-run prints the messages and writes no
+    state (reference main.py:256-257): a fresh checkpoint root gets no
+    watermark, no reports and no backlog. The job's main() runs in this
+    process on the test session, which spares a second JVM."""
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", REPO / "jobs" / "run_pipeline.py")
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setenv("SPARK_SUBMIT_MODE", "1")
+    monkeypatch.setattr("osm_addr_bot_spark.session.get_spark", lambda **_: spark)
+    ck = tmp_path / "ckpt"
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--data-dir", synth_dir, "--start-ts", str(T0),
+        "--end-ts", str(T0 + WINDOW_S), "--checkpoint-dir", str(ck), "--dry-run",
+    ])
+    assert job.main() == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["reports"] > 0
+    assert not (ck / "watermark.json").exists()
+    assert not (ck / "reports").exists()
+    assert not (ck / "rescheduled").exists()
 
 
 def test_job_rejects_stage_checkpoints_without_checkpoint_dir():
