@@ -36,6 +36,7 @@ from osm_addr_bot_spark.geo.tiles import xyz_tile_cols, xyz_tile_sql
 from osm_addr_bot_spark.operators.dedup import filter_priority
 from osm_addr_bot_spark.operators.parse import parse_elements
 from osm_addr_bot_spark.operators.tiles import assign_tiles
+from osm_addr_bot_spark.sources import table_files
 
 # --------------------------------------------------------------------------
 # deterministic synthetic coordinates from integer keys (dense grid for
@@ -884,13 +885,14 @@ def q_ann_ivf_topk(spark, sf_dir):
 # ONCE as a partition column and queries read only the probed
 # partitions (partition pruning demonstrated in tests/test_ann_pruned).
 # The store is cached under /tmp keyed on the DATASET IDENTITY — the
-# source table's file names/sizes/mtimes — not just the sf_dir path
-# (ADVICE r4): regenerating a world in place changes the files and so
-# the key, invalidating the store (stale buckets / centroid-vs-cell
-# mismatch impossible), and two distinct dirs can never collide the way
-# the old '/'->'_' path flattening could. The write is itself part of
-# the contract (one pass, no shuffle), the reads are the hot path.
+# source table's absolute path and its sources.table_files listing
+# (names, sizes, mtimes): regenerating a world in place changes the
+# files and so the key, invalidating the store (stale buckets /
+# centroid-vs-cell mismatch impossible), and two distinct dirs never
+# collide. The write is itself part of the contract (one pass, no
+# shuffle), the reads are the hot path.
 import hashlib as _hashlib  # noqa: E402
+import json as _json  # noqa: E402
 import os as _os  # noqa: E402
 
 _LSH_PROBE_N = 2
@@ -898,15 +900,8 @@ _PROBE_BUCKETS = sim.lsh_probe_buckets(_QUERY_VEC, _PLANES, _LSH_PROBE_N)
 
 
 def _ann_store_loc(sf_dir: str, kind: str) -> str:
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    sig = _hashlib.md5(_os.path.abspath(src).encode())
-    try:
-        names = sorted(_os.listdir(src)) if _os.path.isdir(src) else [""]
-        for name in names:
-            st = _os.stat(_os.path.join(src, name) if name else src)
-            sig.update(f"|{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except FileNotFoundError:
-        pass
+    src = f"{sf_dir.rstrip('/')}/embeddings.parquet"
+    sig = _hashlib.md5(_json.dumps([_os.path.abspath(src), table_files(src)]).encode())
     return "/tmp/osm_ann_store/" + sig.hexdigest() + "/" + kind
 
 

@@ -37,6 +37,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from osm_addr_bot_spark.config import DEFAULT_TILE_ZOOM, SEARCH_BBOX
+from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
 
 M_PER_DEG_LAT = 111_194.9
 T0 = 1_700_000_000  # scan-window start (epoch s)
@@ -191,8 +192,7 @@ DELETED_UID = 9999
 # Bump whenever the generated BYTES change for the same (n_docs, seed)
 # — ensure_dataset keys its reuse marker on this, so a generator change
 # forces regeneration instead of silently reusing a world produced by
-# different code (v2 = the round-2 chunk-parallel generator; the worlds
-# on disk under the legacy unversioned markers were written by it).
+# different code (v2 = the round-2 chunk-parallel generator).
 GENERATOR_VERSION = 2
 
 
@@ -394,52 +394,6 @@ def _gen_chunk_rows(seed, chunk_idx, lo, hi, town_names, tlat, tlon, town_street
     return documents, changesets, history
 
 
-# ------------------------------------------------------------------ schemas
-_SPAN_T = pa.struct(
-    [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32())]
-)
-_RING_T = pa.list_(pa.struct([("lat", pa.float64()), ("lon", pa.float64())]))
-_SCHEMAS = {
-    "documents": pa.schema([("doc_id", pa.string()), ("spans", pa.list_(_SPAN_T))]),
-    "changesets": pa.schema(
-        [
-            ("changeset_id", pa.int64()),
-            ("cs_uid", pa.int64()),
-            ("open", pa.bool_()),
-            ("created_by", pa.string()),
-            ("discussion", pa.list_(pa.struct([("uid", pa.int64()), ("text", pa.string())]))),
-        ]
-    ),
-    "users": pa.schema(
-        [("user_uid", pa.int64()), ("display_name", pa.string()), ("changesets_count", pa.int64())]
-    ),
-    "polygons": pa.schema(
-        [
-            ("polygon_id", pa.int64()),
-            ("name", pa.string()),
-            ("alt_name", pa.string()),
-            ("admin_level", pa.string()),
-            ("ring", _RING_T),
-        ]
-    ),
-    "streets": pa.schema(
-        [("way_id", pa.int64()), ("name", pa.string()), ("alt_name", pa.string()), ("points", _RING_T)]
-    ),
-    "place_nodes": pa.schema(
-        [("node_id", pa.int64()), ("name", pa.string()), ("lat", pa.float64()), ("lon", pa.float64())]
-    ),
-    "elements_history": pa.schema(
-        [
-            ("element_type", pa.string()),
-            ("element_id", pa.int64()),
-            ("valid_from", pa.int64()),
-            ("valid_to", pa.int64()),
-            ("tags", pa.map_(pa.string(), pa.string())),
-        ]
-    ),
-}
-
-
 def _gen_and_write_chunk(args) -> int:
     """Worker: generate one chunk and write its three parquet part files."""
     (out_dir, seed, chunk_idx, lo, hi, town_names, tlat, tlon, town_streets,
@@ -455,7 +409,7 @@ def _gen_and_write_chunk(args) -> int:
         ("changesets", changesets),
         ("elements_history", [dict(h, tags=list(h["tags"].items())) for h in history]),
     ):
-        pq.write_table(pa.Table.from_pylist(rows, schema=_SCHEMAS[name]), out / f"{name}.parquet" / part)
+        pq.write_table(pa.Table.from_pylist(rows, schema=TABLE_SCHEMAS[name]), out / f"{name}.parquet" / part)
     return hi - lo
 
 
@@ -505,7 +459,7 @@ def generate(out_dir: str | os.PathLike, n_docs: int = 500, seed: int = 42) -> d
         ("place_nodes", place_nodes),
     ):
         p = out / f"{name}.parquet"
-        pq.write_table(pa.Table.from_pylist(rows, schema=_SCHEMAS[name]), p)
+        pq.write_table(pa.Table.from_pylist(rows, schema=TABLE_SCHEMAS[name]), p)
         paths[name] = str(p)
 
     chunks = []
@@ -554,25 +508,9 @@ def generate(out_dir: str | os.PathLike, n_docs: int = 500, seed: int = 42) -> d
 def ensure_dataset(out_dir: str | os.PathLike, n_docs: int = 500, seed: int = 42) -> Path:
     """Generate once, reuse across test/bench runs (marker file keyed on
     generator version + params). A params OR generator change regenerates
-    and drops stale markers (ADVICE r2: an unversioned marker silently
-    reused worlds written by older generator code)."""
+    and drops every other marker, an unversioned one included."""
     out = Path(out_dir)
     marker = out / f".done-v{GENERATOR_VERSION}-{n_docs}-{seed}"
-    legacy = out / f".done-{n_docs}-{seed}"  # written by the v2 generator pre-versioning
-    if not marker.exists() and legacy.exists() and GENERATOR_VERSION == 2:
-        legacy.rename(marker)
-        # a blessed legacy world skipped generate(), so it has no stats
-        # sidecar and the source-clock probe would fall back to a full
-        # scan (ADVICE r3) — every sidecar field is derivable here
-        if not (out / "_table_stats.json").exists():
-            import json as _json
-
-            (out / "_table_stats.json").write_text(_json.dumps({
-                "generator_version": GENERATOR_VERSION,
-                "n_docs": n_docs,
-                "seed": seed,
-                "max_timestamp": T0 + WINDOW_S - 1,
-            }))
     if not marker.exists():
         generate(out, n_docs=n_docs, seed=seed)
         for old in out.glob(".done-*"):

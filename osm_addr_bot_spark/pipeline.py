@@ -31,9 +31,12 @@ import json
 import operator
 import os
 from functools import reduce
+from urllib.parse import urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from osm_addr_bot_spark.checks import fan_out_checks
 from osm_addr_bot_spark.operators.dedup import filter_priority
@@ -49,52 +52,44 @@ from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in
 from osm_addr_bot_spark.operators.report import compose_reports
 from osm_addr_bot_spark.operators.streets import street_names_stage
 from osm_addr_bot_spark.operators.tiles import assign_tiles, raster_vector_overlap
+from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
 from osm_addr_bot_spark.sources import source_clock, table_fingerprint
 from osm_addr_bot_spark.state.checkpoint import Checkpoint, StageRunner, _persist_cut
 
 
-def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
-    """Read the seven world tables with their pinned DDL schemas
-    (schemas.TABLE_DDL) — skipping parquet schema inference saves a
-    footer read + JVM round trip per table of driver-serial time
-    (~0.9 s/run measured r6); the DDLs are guarded against datagen
-    drift by tests/test_datagen_guards.py. Parquet is read by column
-    NAME, so a world with reordered or extra columns still reads
-    correctly. A column missing from the files reads as NULL; only a
-    column of an incompatible type fails, at scan time."""
-    from osm_addr_bot_spark.schemas import TABLE_DDL
+def load_tables(spark: SparkSession, data_dir: str, files: list) -> dict[str, DataFrame]:
+    """Read the seven world tables with the Spark form of their one
+    schema (schemas.TABLE_SCHEMAS); skipping parquet schema inference
+    saves a footer read and a JVM round trip per table of driver-serial
+    time. ``files`` is the world's ``table_fingerprint``.
 
+    Parquet is read by column NAME, so a world with reordered or extra
+    columns still reads correctly. A column missing from the files would
+    read as all-NULL, so for a plain path the footer of each table's
+    first listed file is checked first (pyarrow, no Spark job): a
+    missing column raises ValueError. A column of an incompatible type
+    fails at scan time."""
+    if not urlparse(data_dir).scheme:
+        first = {}
+        for table, name, *_ in files:
+            first.setdefault(table, name)
+        for table, name in first.items():
+            have = set(pq.read_schema(os.path.join(data_dir, name)).names)
+            missing = [c for c in TABLE_SCHEMAS[table].names if c not in have]
+            if missing:
+                raise ValueError(f"world table {table!r} has no column {', '.join(missing)} (read from {name})")
     return {
-        n: spark.read.schema(ddl).parquet(f"{data_dir}/{n}.parquet")
-        for n, ddl in TABLE_DDL.items()
+        n: spark.read.schema(from_arrow_schema(schema)).parquet(f"{data_dir}/{n}.parquet")
+        for n, schema in TABLE_SCHEMAS.items()
     }
 
 
-def _estimated_scan_partitions(spark: SparkSession, table_path: str) -> int | None:
-    """Scan-task estimate for a LOCAL parquet dir from file sizes and
-    spark.sql.files.maxPartitionBytes (Spark's split rule, ignoring the
-    4 MB open-cost packing — fine for a bigger/smaller-than-parallelism
-    decision). None when the path isn't a local directory or the
-    setting doesn't parse; the caller then asks the scan itself."""
-    import math
-    import re
-
-    if not os.path.isdir(table_path):
-        return None
-    # Spark's byte strings: 128, 128b, 128m, 128mb, 1GB, ...
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", raw.strip(), re.IGNORECASE)
-    if m is None:
-        return None
-    mpb = int(m[1]) << (10 * " kmgtp".index(m[2].lower() or " "))
-    sizes = [
-        e.stat().st_size
-        for e in os.scandir(table_path)
-        if e.is_file() and e.name.endswith(".parquet")
-    ]
-    if not sizes:
-        return None
-    return sum(max(1, math.ceil(s / mpb)) for s in sizes)
+def _estimated_scan_partitions(sizes, max_partition_bytes: int) -> int:
+    """Scan-task estimate of a table from its files' sizes and
+    spark.sql.files.maxPartitionBytes: Spark's split rule, ignoring the
+    4 MB open-cost packing, which is fine for a bigger/smaller than
+    parallelism decision."""
+    return sum(max(1, -(-s // max_partition_bytes)) for s in sizes)
 
 
 def apply_post_stages(
@@ -138,27 +133,28 @@ def run_pipeline(
     writes parquet under ``checkpoint_dir``, which it requires)."""
     if stage_checkpoints and not checkpoint_dir:
         raise ValueError("stage_checkpoints=True needs a checkpoint_dir to write its stages under")
+    # the world's files, listed once: they key stage replay, size the
+    # documents scan and locate the footers load_tables checks
+    files = table_fingerprint(data_dir)
     # an earlier run in this session left its persisted parse in the
     # CacheManager, which would serve this run's identical plan from the
     # old files: re-list the world's files and rebuild that cache lazily
     spark.catalog.refreshByPath(data_dir)
-    t = load_tables(spark, data_dir)
+    t = load_tables(spark, data_dir, files)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
 
-    # If the documents table arrives as few large files, fan the rows out
-    # across the cluster BEFORE the expensive JSON-parse + cell-index
-    # stage or it runs on <= #splits tasks. A multi-file table (what a
-    # real 100 TB table looks like, and what datagen now writes) already
-    # scans wide — skip the shuffle entirely rather than paying a full
-    # round-robin of the raw span data. The split-count estimate comes
-    # from a filesystem stat for local dirs (df.rdd.getNumPartitions()
-    # costs a full plan-to-RDD conversion on the driver, ~0.2 s/run);
-    # non-local paths keep the exact probe.
-    par = spark.sparkContext.defaultParallelism
+    # A documents table of few large files scans on few tasks: fan its
+    # rows out across the cluster BEFORE the expensive JSON parse and
+    # cell index. A table of many files (what a real 100 TB table looks
+    # like, and what datagen writes) already scans wide, so it skips the
+    # round-robin shuffle of the raw span data. The scan's task count is
+    # estimated from the listing above and Spark's parsed
+    # maxPartitionBytes, for plain paths and URIs alike, with no
+    # plan-to-RDD conversion on the driver.
     documents = t["documents"]
-    est = _estimated_scan_partitions(spark, f"{data_dir}/documents.parquet")
-    if est is None:
-        est = documents.rdd.getNumPartitions()
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()  # noqa: SLF001 — no Python API
+    est = _estimated_scan_partitions((size for n, _, size, _ in files if n == "documents"), mpb)
+    par = spark.sparkContext.defaultParallelism
     if est < par:
         documents = documents.repartition(par)
 
@@ -195,7 +191,7 @@ def run_pipeline(
     # a stage replays only for the inputs it was written from: the
     # tables' files (a digest of their names, sizes and mtimes), the
     # window, the flags, and the backlog version the final issues merge
-    tables = json.dumps(table_fingerprint(data_dir)).encode()
+    tables = json.dumps(files).encode()
     stage_key = {
         "data_dir": os.path.realpath(data_dir),
         "tables": hashlib.sha256(tables).hexdigest(),

@@ -1,13 +1,16 @@
 """Schemas of the engine's inputs: the JSON payloads of the document
-spans, and the DDL of every world table.
+spans, and ``TABLE_SCHEMAS``, the pyarrow schema of every world table,
+which is the only definition of the world's layout (datagen writes it,
+``pipeline.load_tables`` reads it).
 
 The primary input is the interleaved-documents table (BASELINE.json
 ``input_hint``, FIXTURES.md §1): one document per changeset, whose spans
 carry interleaved text (JSON-encoded OSM elements) and media (XYZ tile
-refs); its schema is ``TABLE_DDL["documents"]``. The other world tables
-are small dimensions.
+refs); its schema is ``TABLE_SCHEMAS["documents"]``. The other world
+tables are small dimensions.
 """
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # JSON payload of a kind='text' span — mirrors OverpassEntry
@@ -38,33 +41,51 @@ MEDIA_JSON = T.StructType(
 )
 
 # --------------------------------------------------------------------------
-# World-table DDLs (datagen.py layout) so the pipeline can read with
-# explicit schemas: parquet schema inference costs a footer read + JVM
-# round trip PER TABLE per run (~0.9 s across the seven tables,
-# measured r6) and contributes driver-serial time at any scale. Pinned
-# against datagen output by tests/test_datagen_guards.py.
-TABLE_DDL = {
+# The world tables' layout, the one definition of it: datagen writes with
+# these schemas, and load_tables reads with their Spark form
+# (from_arrow_schema) instead of inferring it, which costs a footer read
+# and a JVM round trip per table per run.
+_SPAN = pa.struct(
+    [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32())]
+)
+_RING = pa.list_(pa.struct([("lat", pa.float64()), ("lon", pa.float64())]))
+TABLE_SCHEMAS = {
     # kind 'text' | 'media'; media_ref 'z/x/y' or ''; offset 0-based in doc
-    "documents": (
-        "doc_id STRING, spans ARRAY<STRUCT<kind: STRING, text: STRING, "
-        "media_ref: STRING, offset: INT>>"
+    "documents": pa.schema([("doc_id", pa.string()), ("spans", pa.list_(_SPAN))]),
+    "changesets": pa.schema(
+        [
+            ("changeset_id", pa.int64()),
+            ("cs_uid", pa.int64()),
+            ("open", pa.bool_()),
+            ("created_by", pa.string()),
+            ("discussion", pa.list_(pa.struct([("uid", pa.int64()), ("text", pa.string())]))),
+        ]
     ),
-    "changesets": (
-        "changeset_id BIGINT, cs_uid BIGINT, open BOOLEAN, created_by STRING, "
-        "discussion ARRAY<STRUCT<uid: BIGINT, text: STRING>>"
+    "users": pa.schema(
+        [("user_uid", pa.int64()), ("display_name", pa.string()), ("changesets_count", pa.int64())]
     ),
-    "users": "user_uid BIGINT, display_name STRING, changesets_count BIGINT",
-    "polygons": (
-        "polygon_id BIGINT, name STRING, alt_name STRING, admin_level STRING, "
-        "ring ARRAY<STRUCT<lat: DOUBLE, lon: DOUBLE>>"
+    "polygons": pa.schema(
+        [
+            ("polygon_id", pa.int64()),
+            ("name", pa.string()),
+            ("alt_name", pa.string()),
+            ("admin_level", pa.string()),
+            ("ring", _RING),
+        ]
     ),
-    "streets": (
-        "way_id BIGINT, name STRING, alt_name STRING, "
-        "points ARRAY<STRUCT<lat: DOUBLE, lon: DOUBLE>>"
+    "streets": pa.schema(
+        [("way_id", pa.int64()), ("name", pa.string()), ("alt_name", pa.string()), ("points", _RING)]
     ),
-    "place_nodes": "node_id BIGINT, name STRING, lat DOUBLE, lon DOUBLE",
-    "elements_history": (
-        "element_type STRING, element_id BIGINT, valid_from BIGINT, "
-        "valid_to BIGINT, tags MAP<STRING, STRING>"
+    "place_nodes": pa.schema(
+        [("node_id", pa.int64()), ("name", pa.string()), ("lat", pa.float64()), ("lon", pa.float64())]
+    ),
+    "elements_history": pa.schema(
+        [
+            ("element_type", pa.string()),
+            ("element_id", pa.int64()),
+            ("valid_from", pa.int64()),
+            ("valid_to", pa.int64()),
+            ("tags", pa.map_(pa.string(), pa.string())),
+        ]
     ),
 }

@@ -19,7 +19,7 @@ import json
 import os
 from urllib.parse import urlparse
 
-from osm_addr_bot_spark.schemas import TABLE_DDL
+from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
 
 
 def _is_data_file(name: str) -> bool:
@@ -28,8 +28,7 @@ def _is_data_file(name: str) -> bool:
 
 
 def _local_files(path: str, rel: str):
-    """(rel name, size, mtime_ns) of the data files at ``path``: the
-    file itself, or every data file below the directory."""
+    """``table_files`` of a plain path."""
     if not os.path.isdir(path):
         st = os.stat(path)
         yield rel, st.st_size, st.st_mtime_ns
@@ -40,7 +39,7 @@ def _local_files(path: str, rel: str):
 
 
 def _hadoop_files(fs, status, rel: str):
-    """``_local_files`` over a Hadoop FileStatus (mtime in ms)."""
+    """``table_files`` of a Hadoop FileStatus (mtime in ms)."""
     if not status.isDirectory():
         yield rel, status.getLen(), status.getModificationTime() * 1_000_000
         return
@@ -50,31 +49,34 @@ def _hadoop_files(fs, status, rel: str):
             yield from _hadoop_files(fs, child, f"{rel}/{name}")
 
 
-def table_fingerprint(data_dir: str) -> list[tuple[str, str, int, int]]:
-    """Sorted (table, file name relative to the world, size, mtime_ns)
-    of the data files of every ``TABLE_DDL`` table under ``data_dir``;
-    a table is one parquet file or a directory of part files. It changes
-    when any table's files are rewritten, and it is the same for an
-    untouched copy of the world (``shutil.copytree`` keeps mtimes).
+def table_files(path: str) -> list[tuple[str, int, int]]:
+    """Sorted (file name, size, mtime_ns) of the data files of the table
+    at ``path``: one parquet file, or every data file below a directory.
+    Names are relative to the table's parent, so they start with the
+    table's own name (``documents.parquet/part-00000.parquet``).
 
     Filesystem metadata only, no Spark job: a plain path is listed with
     ``os.scandir``; a URI (``file:`` included) through the active
     session's Hadoop ``FileSystem.listStatus``, whose mtimes are whole
     milliseconds."""
-    if not urlparse(data_dir).scheme:
-        listing = {n: _local_files(os.path.join(data_dir, f"{n}.parquet"), f"{n}.parquet") for n in TABLE_DDL}
-    else:
-        from pyspark.sql import SparkSession
+    path = path.rstrip("/")
+    rel = path.rsplit("/", 1)[-1]
+    if not urlparse(path).scheme:
+        return sorted(_local_files(path, rel))
+    from pyspark.sql import SparkSession
 
-        spark = SparkSession.active()
-        hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001 — Hadoop has no Python API
-        conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-        listing = {}
-        for n in TABLE_DDL:
-            path = hadoop_path(f"{data_dir.rstrip('/')}/{n}.parquet")
-            fs = path.getFileSystem(conf)
-            listing[n] = _hadoop_files(fs, fs.getFileStatus(path), f"{n}.parquet")
-    return sorted((n, *f) for n, files in listing.items() for f in files)
+    spark = SparkSession.active()
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001 — Hadoop has no Python API
+    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
+    return sorted(_hadoop_files(fs, fs.getFileStatus(hadoop_path), rel))
+
+
+def table_fingerprint(data_dir: str) -> list[tuple[str, str, int, int]]:
+    """Sorted (table, ``table_files`` entry) of every world table under
+    ``data_dir``. It changes when any table's files are rewritten, and
+    it is the same for an untouched copy of the world
+    (``shutil.copytree`` keeps mtimes)."""
+    return sorted((n, *f) for n in TABLE_SCHEMAS for f in table_files(f"{data_dir.rstrip('/')}/{n}.parquet"))
 
 
 def table_stats(location: str) -> dict | None:

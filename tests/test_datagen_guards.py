@@ -24,17 +24,16 @@ def test_ensure_dataset_versioned_marker(tmp_path):
     out = datagen.ensure_dataset(tmp_path / "w", n_docs=20, seed=1)
     marker = out / f".done-v{datagen.GENERATOR_VERSION}-20-1"
     assert marker.exists()
-    # legacy (pre-versioning) markers written by the v2 generator are
-    # blessed into the versioned name, not regenerated
-    legacy_world = tmp_path / "w2"
-    legacy_world.mkdir()
-    (legacy_world / ".done-20-1").touch()
-    datagen.ensure_dataset(legacy_world, n_docs=20, seed=1)
-    assert (legacy_world / f".done-v{datagen.GENERATOR_VERSION}-20-1").exists()
-    assert not (legacy_world / ".done-20-1").exists()
-    # a would-be version bump regenerates: a marker of another version
-    # does not satisfy the current one
-    assert not (legacy_world / "documents.parquet").exists()  # blessed, not generated
+    # a marker of another version (or none) does not satisfy the current
+    # one: the world is regenerated and the old marker dropped
+    old_world = tmp_path / "w2"
+    old_world.mkdir()
+    (old_world / ".done-20-1").touch()
+    datagen.ensure_dataset(old_world, n_docs=20, seed=1)
+    assert (old_world / f".done-v{datagen.GENERATOR_VERSION}-20-1").exists()
+    assert not (old_world / ".done-20-1").exists()
+    assert (old_world / "documents.parquet").exists()
+    assert sources.source_clock(str(old_world)) == datagen.T0 + datagen.WINDOW_S - 1
 
 
 def test_table_stats_sidecar_and_source_clock(tmp_path):
@@ -76,20 +75,6 @@ def test_watermark_probe_is_metadata_only(spark, tmp_path, monkeypatch):
     clock = sources.table_stats(str(world))["max_timestamp"]
     want = Checkpoint(str(tmp_path / "fresh")).compute_window(now=clock, source_max_ts=clock + 1)
     assert out["commit"]()["end_ts"] == want[1]
-
-
-def test_blessed_legacy_marker_gets_sidecar(tmp_path):
-    """ADVICE r3: blessing a legacy marker skips generate(), so the
-    stats sidecar must be written at bless time or the watermark probe
-    silently falls back to a full scan."""
-    legacy_world = tmp_path / "legacy"
-    legacy_world.mkdir()
-    (legacy_world / ".done-20-1").touch()
-    datagen.ensure_dataset(legacy_world, n_docs=20, seed=1)
-    stats = sources.table_stats(str(legacy_world))
-    assert stats is not None
-    assert stats["max_timestamp"] == datagen.T0 + datagen.WINDOW_S - 1
-    assert sources.source_clock(str(legacy_world)) == stats["max_timestamp"]
 
 
 def test_bare_table_watermark_fallback_warns(spark, tmp_path):
@@ -138,16 +123,16 @@ def test_bare_table_clock_is_newest_parsed_element(spark, synth_dir, tmp_path):
     assert out["commit"]()["end_ts"] == want[1]
 
 
-def test_table_ddl_matches_generated_schemas(spark, synth_dir):
-    """load_tables reads with the pinned TABLE_DDL schemas instead of
-    inferring; this guard fails if datagen's written schemas drift."""
-    from pyspark.sql.types import StructType
+def test_table_schemas_match_generated_files(spark, synth_dir):
+    """load_tables reads with the Spark form of schemas.TABLE_SCHEMAS,
+    the schemas datagen writes, instead of inferring it; this guard fails
+    if that conversion drifts from what Spark infers from the files."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    from osm_addr_bot_spark.schemas import TABLE_DDL
+    from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
 
-    for name, ddl in TABLE_DDL.items():
+    for name, schema in TABLE_SCHEMAS.items():
         inferred = spark.read.parquet(f"{synth_dir}/{name}.parquet").schema
-        pinned = StructType.fromDDL(ddl)
         # nullability is writer-dependent; names/types/order must match
         strip = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
-        assert strip(pinned) == strip(inferred), name
+        assert strip(from_arrow_schema(schema)) == strip(inferred), name

@@ -5,19 +5,20 @@ import json
 import os
 import re
 import shutil
-from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import MapType
 
 from osm_addr_bot_spark.datagen import T0, WINDOW_S, ensure_dataset
 from osm_addr_bot_spark.checks.registry import all_categories
 from osm_addr_bot_spark.operators.report import compose_reports
 from osm_addr_bot_spark.pipeline import _estimated_scan_partitions, load_tables, run_pipeline
-from osm_addr_bot_spark.schemas import TABLE_DDL
+from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
+from osm_addr_bot_spark.sources import table_files, table_fingerprint
 from osm_addr_bot_spark.state.checkpoint import Checkpoint
 from tests.helpers import PYTHON_EVAL_NODES, executed_plan
 
@@ -49,7 +50,7 @@ def test_pipeline_end_to_end(spark, synth_dir):
     assert n > 0
 
     # no open changesets in final issues
-    cs = load_tables(spark, synth_dir)["changesets"]
+    cs = load_tables(spark, synth_dir, table_fingerprint(synth_dir))["changesets"]
     open_ids = {r["changeset_id"] for r in cs.filter("open").collect()}
     final_cs = {r["changeset_id"] for r in issues.select("changeset_id").distinct().collect()}
     assert not (final_cs & open_ids)
@@ -109,15 +110,66 @@ def test_reuse_points_cut_plan_and_keep_lineage(spark, synth_dir, documents):
         ("1t", 1 << 40), ("1.5g", None), ("lots", None),
     ],
 )
-def test_estimated_scan_partitions_parses_byte_strings(tmp_path, max_partition_bytes, mpb):
-    """Every byte string Spark accepts for maxPartitionBytes parses; one
-    that doesn't gives None, so run_pipeline asks the scan instead."""
-    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: max_partition_bytes))
-    size = (1 << 20) + 1
-    with open(tmp_path / "part-0.parquet", "wb") as f:
-        f.truncate(size)  # sparse: apparent size only
-    want = None if mpb is None else -(-size // mpb)
-    assert _estimated_scan_partitions(spark, str(tmp_path)) == want
+def test_estimated_scan_partitions_parses_byte_strings(spark, max_partition_bytes, mpb):
+    """run_pipeline sizes the documents scan with Spark's own parse of
+    maxPartitionBytes: every byte string Spark accepts gives its byte
+    count, and one it does not accept fails when it is set, so the
+    estimate never sees an unparsed value."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    conf = spark._jsparkSession.sessionState().conf()
+    try:
+        if mpb is None:
+            with pytest.raises(Exception, match="INVALID_CONF_VALUE"):
+                spark.conf.set(key, max_partition_bytes)
+        else:
+            spark.conf.set(key, max_partition_bytes)
+            assert conf.filesMaxPartitionBytes() == mpb
+            size = (1 << 20) + 1
+            assert _estimated_scan_partitions([size], conf.filesMaxPartitionBytes()) == -(-size // mpb)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_estimated_scan_partitions_from_listing_sizes(tmp_path):
+    """The estimate is Spark's split rule over the table listing's data
+    files: each file splits into ceil(size / maxPartitionBytes) tasks,
+    an empty file into one, and hidden and metadata files not at all."""
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    for name, size in (("part-0.parquet", 0), ("part-1.parquet", (1 << 20) + 1),
+                       ("part-2.parquet", 3 << 20), ("_SUCCESS", 9 << 20), (".part-1.parquet.crc", 9 << 20)):
+        with open(table / name, "wb") as f:
+            f.truncate(size)  # sparse: apparent size only
+    sizes = [size for _, size, _ in table_files(str(table))]
+    assert sorted(sizes) == [0, (1 << 20) + 1, 3 << 20]
+    assert _estimated_scan_partitions(sizes, 1 << 20) == 1 + 2 + 3
+    assert _estimated_scan_partitions(sizes, 128 << 20) == 3
+
+
+def test_file_uri_world_matches_plain_path(spark, synth_dir):
+    """A ``file:`` URI world is listed through Hadoop and sized from that
+    listing: its outputs equal the plain path's."""
+    window = {"start_ts": T0, "end_ts": T0 + WINDOW_S}
+    sinks = ("issues", "rescheduled", "reports", "tiles", "overlap")
+    plain = run_pipeline(spark, synth_dir, **window)
+    want = {n: _digest(plain[n]) for n in sinks}
+    assert want["issues"][0] > 0
+    uri = run_pipeline(spark, f"file://{synth_dir}", **window)
+    assert {n: _digest(uri[n]) for n in sinks} == want
+
+
+def test_missing_column_fails_loudly(spark, synth_dir, tmp_path):
+    """A world table without one of its schema's columns would read that
+    column as all-NULL (a changesets table without ``open`` reports every
+    open changeset instead of rescheduling it). It fails at load, naming
+    the table and the column."""
+    world = tmp_path / "world"
+    shutil.copytree(synth_dir, world)
+    for part in (world / "changesets.parquet").glob("*.parquet"):
+        pq.write_table(pq.read_table(part).drop_columns(["open"]), part)
+    with pytest.raises(ValueError, match="'changesets' has no column open"):
+        run_pipeline(spark, str(world), start_ts=T0, end_ts=T0 + WINDOW_S)
 
 
 def test_priority_dedup_idempotent_in_pipeline(spark, synth_dir):
@@ -146,7 +198,7 @@ def _issue(check_id, element_type, element_id, doc_id, span_offset, street=None)
 
 def _message(spark, issues, changesets_count, fidelity):
     """compose_reports over one changeset's issues -> its message."""
-    users = spark.createDataFrame([(7, "u", changesets_count)], TABLE_DDL["users"])
+    users = spark.createDataFrame([(7, "u", changesets_count)], from_arrow_schema(TABLE_SCHEMAS["users"]))
     [report] = compose_reports(spark.createDataFrame(issues, _REPORT_ISSUES), users, fidelity).collect()
     assert report["n_issues"] == len(issues)
     return report["message"]
@@ -460,6 +512,37 @@ def test_commit_converges_after_a_fault_at_every_write_and_rename(spark, synth_d
             run(ck, world2, w2, stage_checkpoints=False)["commit"]()
             assert state(ck) == want, (name, k)
             _assert_bounded_state(ck, run_id)
+
+
+def test_stage_resumes_after_a_fault_before_its_manifest_rename(spark, synth_dir, tmp_path, monkeypatch):
+    """Make the manifest rename after each stage's parquet write raise in
+    turn, so the stage's data is written but not committed. A rerun over
+    the same checkpoint dir replays the committed stages, rewrites the
+    uncommitted one, and gives the uninterrupted run's outputs."""
+    window = {"start_ts": T0, "end_ts": T0 + WINDOW_S, "stage_checkpoints": True}
+    stage_dir = f"stages/run-{T0 + WINDOW_S}"
+    sinks = ("issues", "reports")
+    clean = run_pipeline(spark, synth_dir, checkpoint_dir=str(tmp_path / "clean"), **window)
+    want = {n: _digest(clean[n]) for n in sinks}
+
+    for k, stage in enumerate(("fanout", "post_stages", "final_issues"), 1):
+        ck = tmp_path / f"fault-{k}"
+
+        def fail(n, k=k):
+            if n == k:
+                raise _Fault(f"manifest rename {k}")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", _on_call(os, "rename", fail)[0])
+            with pytest.raises(_Fault):
+                run_pipeline(spark, synth_dir, checkpoint_dir=str(ck), **window)
+        assert (ck / stage_dir / stage / "data").is_dir()
+        assert not (ck / stage_dir / stage / "manifest.json").exists()
+        assert len(_manifests(ck)) == k - 1
+
+        out = run_pipeline(spark, synth_dir, checkpoint_dir=str(ck), **window)
+        assert {n: _digest(out[n]) for n in sinks} == want, stage
+        assert len(_manifests(ck)) == 3
 
 
 def test_stage_checkpoints_require_a_checkpoint_dir(spark, synth_dir):

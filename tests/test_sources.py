@@ -8,7 +8,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from osm_addr_bot_spark import datagen, sources
-from osm_addr_bot_spark.schemas import TABLE_DDL
+from osm_addr_bot_spark.schemas import TABLE_SCHEMAS
 
 
 @pytest.fixture(scope="module")
@@ -16,12 +16,12 @@ def world(tmp_path_factory):
     return datagen.ensure_dataset(tmp_path_factory.mktemp("fp") / "w", n_docs=20, seed=1)
 
 
-@pytest.mark.parametrize("table", sorted(TABLE_DDL))
+@pytest.mark.parametrize("table", sorted(TABLE_SCHEMAS))
 def test_fingerprint_changes_with_each_table_and_only_then(world, tmp_path, table):
     """An untouched copy keeps the fingerprint; rewriting one table's
     data file in place (half its rows) changes it."""
     fp = sources.table_fingerprint(str(world))
-    assert {entry[0] for entry in fp} == set(TABLE_DDL)
+    assert {entry[0] for entry in fp} == set(TABLE_SCHEMAS)
 
     copy = tmp_path / "copy"
     shutil.copytree(world, copy)
